@@ -312,7 +312,7 @@ def main() -> None:
                 }
                 continue
             if mode == "segmented_distributed_batch":
-                toks = [seg.engines[0].analyze_query(q) for q in queries]
+                toks = [seg.analyze_query(q) for q in queries]
                 seg.search_tokens_distributed_batch(toks[:5], args.k)
                 best = float("inf")
                 for _ in range(max(1, args.repeats)):

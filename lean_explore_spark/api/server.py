@@ -253,6 +253,7 @@ class APIServer:
 
     def __init__(self, api: SearchAPI, host: str = "127.0.0.1", port: int = 0):
         handler = type("Handler", (_Handler,), {"api": api})
+        self.api = api
         self.httpd = ThreadingHTTPServer((host, port), handler)
         self._thread: Optional[threading.Thread] = None
 
@@ -262,6 +263,12 @@ class APIServer:
         return f"http://{h}:{p}{ROOT}"
 
     def start(self) -> "APIServer":
+        # fork the routed fan-out's workers while this is the only
+        # thread: forking later, from a request thread, copies whatever
+        # locks the other request threads hold at that moment
+        engine = self.api.service.engine
+        if engine._preloaded:
+            engine._ensure_fork_pool()
         self._thread = threading.Thread(
             target=self.httpd.serve_forever, daemon=True
         )

@@ -12,6 +12,14 @@ Read path per query:
   block-max WAND per shard (ascending doc ranges, shared heap) →
   + delta-floor fill for sub-k result sets.
 
+Segments: an engine opens an ORDERED LIST of index roots — a single
+index is the one-segment case; a base index plus streamed delta
+segments (streaming/incremental.py) is the general one, base first.
+N, avgdl and df are summed over the segments, so scores equal a
+monolithic rebuild over the same docs.  Every unit of work is a
+(segment, shard) pair; the kernels, the fork-pool fan-out, the
+distributed job and the delta-floor fill all iterate those units.
+
 Scale notes (100 TB story):
 
 * dictionary and postings reads are Catalyst-pruned: ``bucket`` is a
@@ -20,8 +28,9 @@ Scale notes (100 TB story):
   stats; rows are sorted by term within each bucket at build time so
   row-group min/max actually cut.
 * shards are independent doc ranges → the distributed variant scores
-  shards as parallel tasks (``search_distributed``), each loading
-  only its span-bounded doc-length slice, and merges k-heaps.
+  (segment, shard) units as parallel tasks (``search_distributed``),
+  each loading only its span-bounded doc-length slice, and merges
+  k-heaps.
 * ``preload=True`` pins the dictionary + postings in driver memory —
   the analog of the reference preloading its assets before benching
   (benchmarking/benchmark_search_rate.py:260-300); cold mode reads
@@ -30,8 +39,12 @@ Scale notes (100 TB story):
 
 from __future__ import annotations
 
+import heapq
 import json
 import math
+import os
+from collections import OrderedDict
+from functools import reduce
 from pathlib import Path
 from typing import Dict, List, Optional, Sequence, Tuple
 
@@ -44,8 +57,19 @@ from lean_explore_spark.index import codec
 from lean_explore_spark.index.builder import POSTINGS_SCHEMA, term_bucket
 from lean_explore_spark.query import wand
 
+Unit = Tuple[int, int]  # (segment index, shard)
 
-def _row_to_packed(row) -> codec.PackedPostings:
+
+def _row_to_packed(row, bm_scale: float = 1.0) -> codec.PackedPostings:
+    """A postings row as kernel input — the ONE place block maxima
+    reach a kernel.  A segment stores ``block_max_score`` as tf-parts
+    at its OWN avgdl; scored at the global avgdl they may be larger,
+    so the caller passes the segment's ``bm_scale`` (see
+    ``SearchEngine.__init__``) and the kernels only ever see true
+    upper bounds.  1.0 leaves the stored array untouched."""
+    block_max = np.asarray(row["block_max_score"], dtype=np.float64)
+    if bm_scale != 1.0:
+        block_max = block_max * bm_scale
     return codec.PackedPostings(
         count=int(row["df_shard"]),
         block_first=np.asarray(row["block_first"], dtype=np.int64),
@@ -53,39 +77,61 @@ def _row_to_packed(row) -> codec.PackedPostings:
         block_count=np.asarray(row["block_count"], dtype=np.int32),
         block_gap_bytes=np.asarray(row["block_gap_bytes"], dtype=np.int32),
         block_tf_bytes=np.asarray(row["block_tf_bytes"], dtype=np.int32),
-        block_max_score=np.asarray(row["block_max_score"], dtype=np.float64),
+        block_max_score=block_max,
         block_max_tf=np.asarray(row["block_max_tf"], dtype=np.int32),
         payload=bytes(row["payload"]),
     )
+
+
+def _run_kernel(
+    cursors, ctx, dl_ids, dl_lens, heap, k, mode="auto", theta0=None
+) -> None:
+    """Kernel selection for one unit — driver loop, fork workers and
+    Spark tasks all go through here.  'auto' picks vectorized bulk for
+    small posting totals, block-max-pruned bulk otherwise;
+    'wand'/'bulk'/'blockmax' force a path — all produce bit-identical
+    scores (tests assert it).  ``theta0`` only feeds the block-max
+    kernel (the others never prune on it)."""
+    if mode == "wand":
+        wand.wand_shard(cursors, ctx, dl_ids, dl_lens, heap, k)
+    elif mode == "bulk" or (
+        mode == "auto"
+        and sum(c.packed.count for c in cursors) <= SearchEngine.BULK_THRESHOLD
+    ):
+        wand.bulk_score_shard(cursors, ctx, dl_ids, dl_lens, heap, k)
+    else:  # 'blockmax' or auto with a large posting total
+        wand.blockmax_bulk_shard(
+            cursors, ctx, dl_ids, dl_lens, heap, k, theta0=theta0
+        )
 
 
 # Engine registry inherited by forked hot-query workers, KEYED per
 # engine and never overwritten (registered in _ensure_fork_pool before
 # the pool forks; children read the preloaded postings/doc-length
 # dicts through it COW).  A single mutable global would be wrong with
-# several live engines: ProcessPoolExecutor spawns workers LAZILY on
-# submit, so a worker forked after another engine's registration would
-# silently score against the wrong index.  Keyed entries are present
-# in every fork taken after their registration, so lookups stay
-# correct no matter when a worker spawns; close_pool() removes the
-# entry (it also keeps a strong ref, pinning the engine while its
-# pool lives — intended).
+# several live engines: a worker forked after another engine's
+# registration would silently score against the wrong index.  Keyed
+# entries are present in every fork taken after their registration, so
+# lookups stay correct no matter when a worker spawns; close_pool()
+# removes the entry (it also keeps a strong ref, pinning the engine
+# while its pool lives — intended).
 _FORK_ENGINES: dict = {}
 
 
-def _fork_score_shard(engine_key, shard, uterms, uindex, ctx, k, theta0):
-    """Runs inside a forked worker: score one shard into a local
-    k-heap using the parent's preloaded caches (no deserialization —
-    the fork shares them copy-on-write)."""
+def _fork_score_unit(engine_key, unit, uindex, ctx, k, theta0):
+    """Runs inside a forked worker: score one unit into a local k-heap
+    using the parent's preloaded caches (no deserialization — the fork
+    shares them copy-on-write)."""
     eng = _FORK_ENGINES[engine_key]
+    seg, shard = unit
     rows = [
         (t, r)
-        for t in uterms
-        for r in eng._postings_cache.get(t, [])
+        for t in uindex
+        for r in eng._postings_cache[seg].get(t, [])
         if int(r["shard"]) == shard
     ]
     heap: list = []
-    eng._score_one_shard(shard, rows, uindex, ctx, k, heap, theta0)
+    eng._score_unit(unit, rows, uindex, ctx, k, heap, theta0=theta0)
     return heap
 
 
@@ -100,33 +146,52 @@ class SearchEngine:
     def __init__(
         self,
         spark: SparkSession,
-        index_dir: str,
+        index_dir: "str | Sequence[str]",
         preload: bool = False,
         dl_cache_shards: int | None = None,
     ) -> None:
-        self.spark = spark
-        self.root = Path(index_dir)
-        self.stats = json.loads((self.root / "stats.json").read_text())
-        self.n_docs: int = self.stats["n_docs"]
-        self.avgdl: float = self.stats["avgdl"]
-        self.span: int = self.stats["span"]
-        self.num_buckets: int = self.stats["num_buckets"]
-        self.stem: bool = self.stats.get("stem", True)
-        from collections import OrderedDict
+        """``index_dir``: one index root, or an ordered list of segment
+        roots (segment 0 first)."""
+        import threading
 
-        self._dl_cache: "OrderedDict[int, Tuple[np.ndarray, np.ndarray]]" = (
+        self.spark = spark
+        roots = (
+            [index_dir] if isinstance(index_dir, (str, os.PathLike))
+            else list(index_dir)
+        )
+        if not roots:
+            raise ValueError("no index roots")
+        self.roots: List[Path] = [Path(r) for r in roots]
+        self.root = self.roots[0]
+        self._seg_stats = [
+            json.loads((r / "stats.json").read_text()) for r in self.roots
+        ]
+        self.n_docs: int = sum(st["n_docs"] for st in self._seg_stats)
+        total_tokens = sum(st["total_tokens"] for st in self._seg_stats)
+        self.avgdl: float = total_tokens / self.n_docs if self.n_docs else 0.0
+        # Block maxima are tf-parts at each SEGMENT's avgdl a.  At the
+        # global avgdl a' a tf-part x becomes at most x·max(1, a'/a):
+        # x = tf(k1+1)/(k1(1-b+b·dl/a)+tf) and a·(k1(1-b)+tf) + k1·b·dl
+        # grows with a, so the ratio of denominators is ≤ a'/a.  One
+        # segment → exactly 1.0.
+        self._bm_scale = [
+            max(1.0, self.avgdl / st["avgdl"]) if st["avgdl"] else 1.0
+            for st in self._seg_stats
+        ]
+        self.stem: bool = self._seg_stats[0].get("stem", True)
+        self._dl_cache: "OrderedDict[Unit, Tuple[np.ndarray, np.ndarray]]" = (
             OrderedDict()
         )
         self._dl_cache_bound = dl_cache_shards or self.DL_CACHE_SHARDS
-        import threading
-
         # serializes fork-pool creation: the engine is served from a
         # ThreadingHTTPServer, where two hot queries could otherwise
         # race the lazy create (ADVICE r8, medium)
         self._fork_pool_lock = threading.Lock()
+        # global df per term (summed over segments)
         self._dict_cache: Optional[Dict[str, int]] = None
-        self._postings_cache: Optional[Dict[str, list]] = None
-        self._shard_list: Optional[List[int]] = None
+        # per segment: term → postings rows in shard order
+        self._postings_cache: Optional[List[Dict[str, list]]] = None
+        self._unit_list: Optional[List[Unit]] = None
         self._preloaded = False
         if preload:
             self._preload()
@@ -135,97 +200,115 @@ class SearchEngine:
 
     def _preload(self) -> None:
         self._preloaded = True  # set first: _doc_lens skips LRU eviction
-        d = self.spark.read.parquet(str(self.root / "dictionary")).collect()
-        self._dict_cache = {r["term"]: int(r["df"]) for r in d}
-        rows = self.spark.read.parquet(str(self.root / "postings")).collect()
-        cache: Dict[str, list] = {}
-        for r in rows:
-            cache.setdefault(r["term"], []).append(r)
-        for lst in cache.values():
-            lst.sort(key=lambda r: int(r["shard"]))
-        self._postings_cache = cache
-        for shard in self._shards():
-            self._doc_lens(shard)
+        dfs: Dict[str, int] = {}
+        caches: List[Dict[str, list]] = []
+        for root in self.roots:
+            for r in self.spark.read.parquet(str(root / "dictionary")).collect():
+                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+            cache: Dict[str, list] = {}
+            for r in self.spark.read.parquet(str(root / "postings")).collect():
+                cache.setdefault(r["term"], []).append(r)
+            for lst in cache.values():
+                lst.sort(key=lambda r: int(r["shard"]))
+            caches.append(cache)
+        self._dict_cache = dfs
+        self._postings_cache = caches
+        for unit in self._shards():
+            self._doc_lens(unit)
+
+    def _pruned(self, seg: int, table: str, terms: Sequence[str], schema=None):
+        """One segment's dictionary/postings read, pruned to the
+        buckets and terms of ``terms``."""
+        nb = self._seg_stats[seg]["num_buckets"]
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return (
+            reader.parquet(str(self.roots[seg] / table))
+            .where(F.col("bucket").isin(sorted({term_bucket(t, nb) for t in terms})))
+            .where(F.col("term").isin(list(terms)))
+        )
 
     def _lookup_dfs(self, terms: Sequence[str]) -> Dict[str, int]:
+        """Global df per term, summed over segments."""
         if self._dict_cache is not None:
             return {t: self._dict_cache[t] for t in terms if t in self._dict_cache}
-        buckets = sorted({term_bucket(t, self.num_buckets) for t in terms})
-        rows = (
-            self.spark.read.parquet(str(self.root / "dictionary"))
-            .where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(list(terms)))
-            .collect()
-        )
-        return {r["term"]: int(r["df"]) for r in rows}
+        dfs: Dict[str, int] = {}
+        for seg in range(len(self.roots)):
+            for r in self._pruned(seg, "dictionary", terms).collect():
+                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+        return dfs
 
-    def _fetch_postings(self, terms: Sequence[str]) -> Dict[int, list]:
-        """term rows grouped by shard: {shard: [(term, PackedPostings)]}"""
-        by_shard: Dict[int, list] = {}
-        if self._postings_cache is not None:
-            for t in terms:
-                for r in self._postings_cache.get(t, []):
-                    by_shard.setdefault(int(r["shard"]), []).append((t, r))
-            return by_shard
-        buckets = sorted({term_bucket(t, self.num_buckets) for t in terms})
-        rows = (
-            self.spark.read.schema(POSTINGS_SCHEMA)
-            .parquet(str(self.root / "postings"))
-            .where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(list(terms)))
-            .collect()
-        )
-        for r in rows:
-            by_shard.setdefault(int(r["shard"]), []).append((r["term"], r))
-        return by_shard
+    def _fetch_postings(self, terms: Sequence[str]) -> Dict[Unit, list]:
+        """term rows grouped by unit: {(segment, shard): [(term, row)]}"""
+        by_unit: Dict[Unit, list] = {}
+        for seg in range(len(self.roots)):
+            if self._postings_cache is not None:
+                cache = self._postings_cache[seg]
+                pairs = [(t, r) for t in terms for r in cache.get(t, [])]
+            else:
+                rows = self._pruned(seg, "postings", terms, POSTINGS_SCHEMA).collect()
+                pairs = [(r["term"], r) for r in rows]
+            for t, r in pairs:
+                by_unit.setdefault((seg, int(r["shard"])), []).append((t, r))
+        return by_unit
 
-    def _doc_lens(self, shard: int) -> Tuple[np.ndarray, np.ndarray]:
-        if shard not in self._dl_cache:
+    def _doc_lens(self, unit: Unit) -> Tuple[np.ndarray, np.ndarray]:
+        if unit not in self._dl_cache:
+            seg, shard = unit
             rows = (
-                self.spark.read.parquet(str(self.root / "doc_stats"))
+                self.spark.read.parquet(str(self.roots[seg] / "doc_stats"))
                 .where(F.col("shard") == shard)
                 .orderBy("doc_id")
                 .collect()
             )
             ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
             lens = np.array([r["doc_len"] for r in rows], dtype=np.int64)
-            self._dl_cache[shard] = (ids, lens)
+            self._dl_cache[unit] = (ids, lens)
             if not self._preloaded:
                 # LRU-bound in cold mode (preload pins by design)
                 while len(self._dl_cache) > self._dl_cache_bound:
                     self._dl_cache.popitem(last=False)
         else:
-            self._dl_cache.move_to_end(shard)
-        return self._dl_cache[shard]
+            self._dl_cache.move_to_end(unit)
+        return self._dl_cache[unit]
 
     def iter_doc_ids(self):
-        """All doc ids ascending, shard-LAZY: shard s covers doc range
-        [s·span, (s+1)·span), so iterating shards in order yields
-        globally ascending ids while loading each shard's doc_stats
-        slice only when the consumer actually reaches it."""
-        for s in self._shards():
-            for d in self._doc_lens(s)[0]:
-                yield int(d)
+        """All doc ids ascending, shard-LAZY: within a segment, shard s
+        covers doc range [s·span, (s+1)·span), so its shards in order
+        yield ascending ids, loading each doc_stats slice only when
+        the consumer actually reaches it; ``heapq.merge`` interleaves
+        the segments' ascending streams just as lazily."""
 
-    def _shards(self) -> List[int]:
-        """Shard ids with ≥1 doc — from the authoritative metadata, not
-        a filesystem listing (r3 VERDICT #7: local-FS ``iterdir`` breaks
-        on an object store).  New builds record the list in stats.json;
-        older indexes fall back to ONE partition-column-only parquet
-        read of doc_stats (Catalyst answers it from partition discovery,
-        which is object-store-safe)."""
-        if self._shard_list is None:
-            shards = self.stats.get("shards")
-            if shards is None:
-                rows = (
-                    self.spark.read.parquet(str(self.root / "doc_stats"))
-                    .select("shard")
-                    .distinct()
-                    .collect()
-                )
-                shards = [int(r["shard"]) for r in rows]
-            self._shard_list = sorted(int(s) for s in shards)
-        return self._shard_list
+        def segment_ids(seg):
+            for unit in self._shards():
+                if unit[0] == seg:
+                    for d in self._doc_lens(unit)[0]:
+                        yield int(d)
+
+        return heapq.merge(*(segment_ids(s) for s in range(len(self.roots))))
+
+    def _shards(self) -> List[Unit]:
+        """(segment, shard) units with ≥1 doc, ascending — from the
+        authoritative metadata, not a filesystem listing (r3 VERDICT
+        #7: local-FS ``iterdir`` breaks on an object store).  New
+        builds record the shard list in stats.json; older indexes fall
+        back to ONE partition-column-only parquet read of doc_stats
+        (Catalyst answers it from partition discovery, which is
+        object-store-safe)."""
+        if self._unit_list is None:
+            units: List[Unit] = []
+            for seg, (root, st) in enumerate(zip(self.roots, self._seg_stats)):
+                shards = st.get("shards")
+                if shards is None:
+                    rows = (
+                        self.spark.read.parquet(str(root / "doc_stats"))
+                        .select("shard")
+                        .distinct()
+                        .collect()
+                    )
+                    shards = [int(r["shard"]) for r in rows]
+                units.extend((seg, s) for s in sorted(int(s) for s in shards))
+            self._unit_list = units
+        return self._unit_list
 
     # -- query -----------------------------------------------------------
 
@@ -236,9 +319,12 @@ class SearchEngine:
         tokens = self.analyze_query(query)
         return self.search_tokens(tokens, k)
 
-    def _build_ctx(self, tokens: Sequence[str]):
-        """Shared query planning: df lookup → idf/C constants → ctx."""
-        dfs = self._lookup_dfs(sorted(set(tokens))) if tokens else {}
+    def _build_ctx(self, tokens: Sequence[str], dfs: Optional[Dict[str, int]] = None):
+        """Shared query planning: df lookup → idf/C constants → ctx.
+        ``dfs`` may carry a lookup already covering ``tokens`` (the
+        batch path does one lookup for all of its queries)."""
+        if dfs is None:
+            dfs = self._lookup_dfs(sorted(set(tokens))) if tokens else {}
         # absent terms contribute nothing at all (oracle: idf.get or 0)
         live_tokens = [t for t in tokens if t in dfs]
         uterms: List[str] = []
@@ -264,21 +350,25 @@ class SearchEngine:
         return ctx, uterms, uindex
 
     def _finalize(self, heap, ctx, k) -> List[Tuple[int, float]]:
-        """Delta-floor fill, shard-LAZY (r2 VERDICT #2): shards are
-        ascending doc ranges (shard = doc_id div span), so consuming
-        shard 0's doc_stats first yields the globally smallest ids —
-        each shard's id slice loads only when the fill actually reaches
-        it.  A sub-k rare-term query therefore reads a shard PREFIX of
-        doc_stats, never the corpus id universe (the old _all_doc_ids
-        concatenated every shard driver-side up front)."""
+        """Delta-floor fill, shard-LAZY (r2 VERDICT #2): ids come from
+        ``iter_doc_ids``, which loads each doc_stats slice only when
+        the fill actually reaches it.  A sub-k rare-term query
+        therefore reads a shard PREFIX of each segment's doc_stats,
+        never the corpus id universe."""
         matched_ids = {e[2] for e in heap}
+        unmatched = (d for d in self.iter_doc_ids() if d not in matched_ids)
+        return wand.finalize_topk(heap, ctx, k, unmatched)
 
-        def unmatched_iter():
-            for d in self.iter_doc_ids():
-                if d not in matched_ids:
-                    yield d
-
-        return wand.finalize_topk(heap, ctx, k, unmatched_iter())
+    def _score_unit(
+        self, unit, rows, uindex, ctx, k, heap, mode="auto", theta0=None
+    ) -> None:
+        dl_ids, dl_lens = self._doc_lens(unit)
+        scale = self._bm_scale[unit[0]]
+        cursors = [
+            wand.TermCursor(_row_to_packed(r, scale), uindex[t], dl_ids)
+            for t, r in rows
+        ]
+        _run_kernel(cursors, ctx, dl_ids, dl_lens, heap, k, mode, theta0)
 
     # tests may set this to a callable to capture the distributed
     # merge plan before execution (kept None in production)
@@ -292,36 +382,17 @@ class SearchEngine:
     def search_tokens(
         self, tokens: Sequence[str], k: int = 50, mode: str = "auto"
     ) -> List[Tuple[int, float]]:
-        """mode: 'auto' picks per shard — vectorized bulk for small
-        posting totals, block-max-pruned bulk otherwise;
-        'wand'/'bulk'/'blockmax' force a path — all produce
-        bit-identical scores (tests assert it)."""
+        """Sequential driver loop over the units, one shared heap.
+        ``mode`` as in ``_run_kernel``."""
         k = min(k, self.n_docs)
         if k <= 0:
             return []
         ctx, uterms, uindex = self._build_ctx(tokens)
-
         heap: List[Tuple[float, int, int]] = []
         if uterms:
-            by_shard = self._fetch_postings(uterms)
-            for shard in sorted(by_shard):
-                dl_ids, dl_lens = self._doc_lens(shard)
-                cursors = [
-                    wand.TermCursor(_row_to_packed(r), uindex[t], dl_ids)
-                    for t, r in by_shard[shard]
-                ]
-                total = sum(c.packed.count for c in cursors)
-                if mode == "wand":
-                    wand.wand_shard(cursors, ctx, dl_ids, dl_lens, heap, k)
-                elif mode == "bulk" or (
-                    mode == "auto" and total <= self.BULK_THRESHOLD
-                ):
-                    wand.bulk_score_shard(cursors, ctx, dl_ids, dl_lens, heap, k)
-                else:  # 'blockmax' or auto with a large posting total
-                    wand.blockmax_bulk_shard(
-                        cursors, ctx, dl_ids, dl_lens, heap, k
-                    )
-
+            by_unit = self._fetch_postings(uterms)
+            for unit in sorted(by_unit):
+                self._score_unit(unit, by_unit[unit], uindex, ctx, k, heap, mode)
         return self._finalize(heap, ctx, k)
 
     # Routed-serving posting-mass threshold (r8, VERDICT r7 #5): below
@@ -333,9 +404,8 @@ class SearchEngine:
 
     # persistent forked worker pool for the hot-query path (lazy)
     _fork_pool = None
-    _fork_pool_size = 0
 
-    def _ensure_fork_pool(self, n: int):
+    def _ensure_fork_pool(self, n: int = 1):
         """Persistent process pool FORKED after preload: children share
         the preloaded postings/doc-length dicts copy-on-write — no GIL,
         no per-query serialization of index data (only the tiny query
@@ -343,16 +413,17 @@ class SearchEngine:
         10× SLOWER than sequential here (the per-shard numpy calls are
         too short to amortize GIL handoff at 400k–6.4M shard sizes);
         fork is the standard CPython answer.  Children never touch the
-        inherited py4j socket.  Pool is per-engine and lazy; preload is
-        required (post-fork loads would not be visible to children)."""
+        inherited py4j socket.  Pool is per-engine; preload is required
+        (post-fork loads would not be visible to children).  A server
+        calls this before its request threads start (APIServer.start)."""
         from concurrent.futures import ProcessPoolExecutor
         import multiprocessing as mp
-        import os
 
-        # fast path without the lock: once built, the pool is never
-        # resized or replaced (see below), so a non-None read is final
-        if self._fork_pool is not None:
-            return self._fork_pool
+        # fast path without the lock: a published pool is never
+        # resized; close_pool may retire it, which submit reports
+        pool = self._fork_pool
+        if pool is not None:
+            return pool
         if not self._preloaded:
             raise RuntimeError(
                 "search_tokens_parallel needs preload=True (the fork "
@@ -363,27 +434,71 @@ class SearchEngine:
                 return self._fork_pool
             # FIXED size, created ONCE (ADVICE r8, medium): the old
             # per-query resize called shutdown(wait=False) on a pool a
-            # concurrent request might be submitting to ("cannot
-            # schedule new futures after shutdown" → 500s).  Extra
-            # workers beyond a query's shard fan-out are idle forks
-            # sharing the preloaded index copy-on-write — cheap —
-            # and map() only ever submits len(shards) tasks.
+            # concurrent request might be submitting to.  Extra
+            # workers beyond a query's fan-out are idle forks sharing
+            # the preloaded index copy-on-write — cheap.
             size = max(int(n), min(32, os.cpu_count() or 4))
             _FORK_ENGINES[id(self)] = self
             pool = ProcessPoolExecutor(
                 max_workers=size, mp_context=mp.get_context("fork")
             )
-            self._fork_pool_size = size
+            # fork every worker now, under the lock, with a no-op map:
+            # a worker forked lazily from a request thread would copy
+            # whatever interpreter locks other threads held mid-fork
+            list(pool.map(int, range(size)))
             self._fork_pool = pool  # publish last
-        return self._fork_pool
+        return pool
 
     def close_pool(self) -> None:
         with self._fork_pool_lock:
             if self._fork_pool is not None:
                 self._fork_pool.shutdown(wait=False)
                 self._fork_pool = None
-                self._fork_pool_size = 0
             _FORK_ENGINES.pop(id(self), None)
+
+    def _seed(self, by_unit, uindex, ctx, k):
+        """θ0 seeding (r8): score the DENSEST unit alone.  Its k-th
+        score lower-bounds the global k-th (a subset's k-th best ≤ the
+        global's), so it may seed every other unit's pruning via the
+        kernel's ``theta0`` — valid only when that unit matched ≥ k
+        docs, else no task may prune (delta-floor semantics).  Returns
+        (unit, its heap, θ0 or None)."""
+        # df_shard straight off the rows — _row_to_packed would copy
+        # each payload blob just to read its count
+        mass = {
+            u: sum(int(r["df_shard"]) for _, r in rows)
+            for u, rows in by_unit.items()
+        }
+        seed = max(mass, key=lambda u: (mass[u], -u[0], -u[1]))
+        heap: list = []
+        self._score_unit(seed, by_unit[seed], uindex, ctx, k, heap)
+        return seed, heap, (heap[0][0] if len(heap) >= k else None)
+
+    def _score_units(self, by_unit, units, uindex, ctx, k, theta0, n):
+        """Score ``units`` into one local heap each: on the fork pool
+        when ``n`` > 1, inline otherwise.  If close_pool() retires the
+        pool between lookup and submit, the units not yet submitted
+        are scored inline — same kernel, same θ0, bit-identical."""
+        futs = []
+        if n > 1:
+            pool = self._ensure_fork_pool(n)
+            try:
+                for u in units:
+                    futs.append(
+                        pool.submit(
+                            _fork_score_unit, id(self), u, uindex, ctx, k,
+                            theta0,
+                        )
+                    )
+            except RuntimeError:  # cannot schedule new futures after shutdown
+                pass
+        heaps = [f.result() for f in futs]
+        for u in units[len(futs):]:
+            heaps.append([])
+            self._score_unit(
+                u, by_unit[u], uindex, ctx, k, heaps[-1], theta0=theta0
+            )
+        return heaps
 
     def search_tokens_parallel(
         self,
@@ -393,118 +508,44 @@ class SearchEngine:
         _inline: bool = False,
     ) -> List[Tuple[int, float]]:
         """Hot-query driver path (r8, VERDICT r7 #5): the same
-        per-shard block-max kernel fanned across a FORKED process pool
-        with θ0 seeding.
+        per-unit kernel fanned across a FORKED process pool with θ0
+        seeding (``_seed``).
 
         Two measured problems with naive per-shard fan-out, both fixed
         here (400k numbers in BENCH.md §13b): (1) independent local
         heaps lose the sequential θ cascade, so no block ever prunes —
-        the DENSEST shard is scored inline first and its k-th score
-        (a lower bound on the global k-th: a subset's k-th best ≤ the
-        global's) seeds every other shard's pruning via the kernel's
-        ``theta0``; (2) Python threads were 10× slower than sequential
-        (shard-sized numpy calls are too short to amortize GIL
-        handoff), so the fan-out uses processes forked AFTER preload —
-        children read the postings dicts copy-on-write, only the query
-        ctx and k-row results cross the boundary.
+        the densest unit is scored inline first and seeds every other
+        unit's pruning; (2) Python threads were 10× slower than
+        sequential (shard-sized numpy calls are too short to amortize
+        GIL handoff), so the fan-out uses processes forked AFTER
+        preload — children read the postings dicts copy-on-write, only
+        the query ctx and k-row results cross the boundary.
 
-        Results are bit-identical to search_tokens: per-shard local
-        top-k is a superset of the shard's global-top-k contribution
+        Results are bit-identical to search_tokens: per-unit local
+        top-k is a superset of the unit's global-top-k contribution
         (θ0 pruning only removes docs provably below the global θ),
         and the merge re-sorts by (score desc, doc_id asc) — asserted
         in tests/test_distributed_search.py.  ``_inline=True`` runs
         the same θ0-seeded plan serially in-process (test/debug)."""
-        import os
-
         k = min(k, self.n_docs)
         if k <= 0:
             return []
         ctx, uterms, uindex = self._build_ctx(tokens)
         heap: List[Tuple[float, int, int]] = []
         if uterms:
-            by_shard = self._fetch_postings(uterms)
-            for s in by_shard:
-                self._doc_lens(s)  # prefetch (preload: dict hit)
-            # df_shard straight off the rows — _row_to_packed would
-            # copy each payload blob just to read its count
-            sizes = {
-                s: sum(int(r["df_shard"]) for _, r in rows)
-                for s, rows in by_shard.items()
-            }
-            seed = max(sizes, key=lambda s: (sizes[s], -s))
-            seed_heap: list = []
-            self._score_one_shard(
-                seed, by_shard[seed], uindex, ctx, k, seed_heap, None
+            by_unit = self._fetch_postings(uterms)
+            for u in by_unit:
+                self._doc_lens(u)  # prefetch (preload: dict hit)
+            seed, seed_heap, theta0 = self._seed(by_unit, uindex, ctx, k)
+            rest = sorted(u for u in by_unit if u != seed)
+            n = 1 if _inline else min(threads or (os.cpu_count() or 8), len(rest))
+            locals_ = [seed_heap] + self._score_units(
+                by_unit, rest, uindex, ctx, k, theta0, n
             )
-            theta0 = seed_heap[0][0] if len(seed_heap) >= k else None
-            rest = sorted(s for s in by_shard if s != seed)
-            locals_: List[list] = [seed_heap]
-            if rest:
-                n = min(
-                    threads or (os.cpu_count() or 8), len(rest)
-                )
-                if _inline or n <= 1:
-                    for s in rest:
-                        loc: list = []
-                        self._score_one_shard(
-                            s, by_shard[s], uindex, ctx, k, loc, theta0
-                        )
-                        locals_.append(loc)
-                else:
-                    pool = self._ensure_fork_pool(n)
-                    futs = [
-                        pool.submit(
-                            _fork_score_shard, id(self), s,
-                            sorted(set(uterms)), uindex, ctx, k, theta0,
-                        )
-                        for s in rest
-                    ]
-                    locals_.extend(f.result() for f in futs)
             cand = [(e[0], e[2]) for loc in locals_ for e in loc]
             cand.sort(key=lambda t: (-t[0], t[1]))
             heap = [(s, -d, d) for s, d in cand[:k]]
         return self._finalize(heap, ctx, k)
-
-    def _theta0_for(self, ctx, uindex, k: int) -> Optional[float]:
-        """Per-query pruning floor for fan-out paths (r8): score the
-        DENSEST shard from the preloaded postings and return its k-th
-        score — a lower bound on the global k-th (a subset's k-th best
-        ≤ the global's) — or None when that shard matched < k docs
-        (then no fan-out task may prune, preserving delta-floor
-        semantics).  Preload-only by construction."""
-        if not uindex or k <= 0 or self._postings_cache is None:
-            return None
-        mass: Dict[int, int] = {}
-        rows_by_shard: Dict[int, list] = {}
-        for t in uindex:
-            for r in self._postings_cache.get(t, []):
-                s = int(r["shard"])
-                mass[s] = mass.get(s, 0) + int(r["df_shard"])
-                rows_by_shard.setdefault(s, []).append((t, r))
-        if not mass:
-            return None
-        seed = max(mass, key=lambda s: (mass[s], -s))
-        heap0: list = []
-        self._score_one_shard(
-            seed, rows_by_shard[seed], uindex, ctx, k, heap0, None
-        )
-        return heap0[0][0] if len(heap0) >= k else None
-
-    def _score_one_shard(
-        self, shard, rows, uindex, ctx, k, heap, theta0
-    ) -> None:
-        dl_ids, dl_lens = self._doc_lens(shard)
-        cursors = [
-            wand.TermCursor(_row_to_packed(r), uindex[t], dl_ids)
-            for t, r in rows
-        ]
-        total = sum(c.packed.count for c in cursors)
-        if total <= self.BULK_THRESHOLD:
-            wand.bulk_score_shard(cursors, ctx, dl_ids, dl_lens, heap, k)
-        else:
-            wand.blockmax_bulk_shard(
-                cursors, ctx, dl_ids, dl_lens, heap, k, theta0=theta0
-            )
 
     def query_posting_mass(self, tokens: Sequence[str]) -> int:
         """Σ df over the query's live terms — the routing signal.  In
@@ -527,8 +568,8 @@ class SearchEngine:
         and serialize on one core (p95 645 ms).  Light queries keep the
         sequential kernel (no fan-out overhead on its 25 ms median);
         queries whose Σ df crosses the threshold fan their shards
-        across threads.  Both paths are bit-identical, so routing can
-        never change a result, only its latency."""
+        across processes.  Both paths are bit-identical, so routing
+        can never change a result, only its latency."""
         thr = (
             self.HOT_MASS_THRESHOLD
             if mass_threshold is None
@@ -564,10 +605,10 @@ class SearchEngine:
         n_u = len(ctx.idfs)
         X = np.zeros((cand.size, n_u), dtype=np.float64)
         if uterms:
-            by_shard = self._fetch_postings(uterms)
-            for shard in sorted(by_shard):
-                dl_ids, dl_lens = self._doc_lens(shard)
-                for t, r in by_shard[shard]:
+            by_unit = self._fetch_postings(uterms)
+            for unit in sorted(by_unit):
+                dl_ids, dl_lens = self._doc_lens(unit)
+                for t, r in by_unit[unit]:
                     d, tf = codec.unpack_for(_row_to_packed(r), cand, dl_ids)
                     if len(d) == 0:
                         continue
@@ -589,95 +630,9 @@ class SearchEngine:
     def search_tokens_distributed(
         self, tokens: Sequence[str], k: int = 50
     ) -> List[Tuple[int, float]]:
-        """Cluster-scale serving: one Spark task per doc-shard runs the
-        same block-max WAND over its pruned postings slice + its
-        span-bounded doc-length file, emits a local top-k, and the
-        driver merges k·S candidate rows.
-
-        Exactness: each shard's local top-k is a superset of that
-        shard's contribution to the global top-k (per-shard θ is only
-        lower than a global θ would be → never over-prunes); the merge
-        re-sorts by (score desc, doc_id asc).  Delta-floor safety: a
-        matched doc always scores STRICTLY above the floor (idf > 0,
-        tf ≥ 1 ⇒ X > 0), so floor-fill docs can only enter when fewer
-        than k matched docs exist globally — and then every shard
-        emitted its complete matched set (local k was never hit), so
-        the fill sees all matched ids.
-
-        Driver stays O(k): the per-shard top-k rows are folded through
-        Spark's ``TakeOrderedAndProject`` (orderBy+limit) — each task
-        keeps a k-heap and the driver merges only the per-partition
-        winners, never k·S rows (r3 VERDICT #4: at 10⁵ shards the old
-        collect-then-truncate held k·S driver rows).
-        """
-        from lean_explore_spark.pyfiles import ensure_py_files
-
-        k = min(k, self.n_docs)
-        if k <= 0:
-            return []
-        ctx, uterms, uindex = self._build_ctx(tokens)
-        heap: List[Tuple[float, int, int]] = []
-        if uterms:
-            ensure_py_files(self.spark)
-            buckets = sorted({term_bucket(t, self.num_buckets) for t in uterms})
-            postings = (
-                self.spark.read.schema(POSTINGS_SCHEMA)
-                .parquet(str(self.root / "postings"))
-                .where(F.col("bucket").isin(buckets))
-                .where(F.col("term").isin(list(uterms)))
-            )
-            doc_stats_root = str(self.root / "doc_stats")
-            uindex_b = dict(uindex)
-            ctx_b = ctx
-            kk = k
-            # preloaded driver → ship a per-query pruning floor (r8;
-            # None on cold engines — tasks then prune via their own
-            # heaps only, the pre-r8 behavior)
-            theta0_b = self._theta0_for(ctx, uindex, k)
-
-            def score_shard(key, pdf):
-                import pandas as pd
-                import pyarrow.parquet as pq
-
-                from lean_explore_spark.query import search as S
-                from lean_explore_spark.query import wand as W
-
-                shard = int(key[0])
-                tbl = pq.read_table(
-                    f"{doc_stats_root}/shard={shard}", columns=["doc_id", "doc_len"]
-                )
-                dl_ids = tbl.column("doc_id").to_numpy()
-                order = dl_ids.argsort()
-                dl_ids = dl_ids[order]
-                dl_lens = tbl.column("doc_len").to_numpy()[order]
-                local_heap: list = []
-                cursors = [
-                    W.TermCursor(S._row_to_packed(r), uindex_b[r["term"]], dl_ids)
-                    for _, r in pdf.iterrows()
-                ]
-                W.blockmax_bulk_shard(
-                    cursors, ctx_b, dl_ids, dl_lens, local_heap, kk,
-                    theta0=theta0_b,
-                )
-                return pd.DataFrame(
-                    {
-                        "doc_id": [e[2] for e in local_heap],
-                        "score": [e[0] for e in local_heap],
-                    }
-                )
-
-            topk_df = (
-                postings.groupBy("shard")
-                .applyInPandas(score_shard, schema="doc_id long, score double")
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
-            if self._plan_probe is not None:  # test hook (plan assert)
-                self._plan_probe(topk_df)
-            rows = topk_df.collect()
-            assert len(rows) <= k  # O(k) driver rows by construction
-            heap = [(r["score"], -r["doc_id"], r["doc_id"]) for r in rows]
-        return self._finalize(heap, ctx, k)
+        """Cluster-scale serving of one query: the batch job below run
+        on a one-query batch."""
+        return self.search_tokens_distributed_batch([tokens], k)[0]
 
     def search_tokens_distributed_batch(
         self,
@@ -685,29 +640,39 @@ class SearchEngine:
         k: "int | Sequence[int]" = 50,
         mode: str = "blockmax",
     ) -> List[List[Tuple[int, float]]]:
-        """Batched cluster-scale serving (r5): Q queries in ONE Spark
-        job.  Per-query distributed serving pays ~0.5 s of job
-        scheduling per query on this box (BENCH.md §3 r5 table) — for
-        offline evaluation sweeps (gather_results, LLM-judge dumps,
-        relevance regression suites) that fixed cost dominates.  Here
-        the union of all queries' terms is fetched in one pruned
-        postings read; each shard task parses each (shard, term) slice
-        once and runs block-max WAND once per query; a per-query
-        row_number window bounds the merge at O(Q·k) driver rows.
+        """Cluster-scale serving (r5): Q queries in ONE Spark job.  The
+        union of all queries' terms is fetched in one pruned postings
+        read per segment; each (segment, shard) task parses each term
+        slice once, loads only its span-bounded doc-length file and
+        runs the kernel once per query; a per-query row_number window
+        (planned as a partial WindowGroupLimit before the exchange)
+        bounds each task's output and the driver at O(Q·k) rows.
+        Postings never transit the driver.  Per-query serving would
+        pay ~0.5 s of job scheduling per query on this box (BENCH.md §3
+        r5 table) — for offline sweeps (gather_results, LLM-judge
+        dumps, relevance suites) that fixed cost dominates.
 
-        Exactness: identical to ``search_tokens_distributed`` per
-        query (same per-shard superset argument, same merge order,
-        same delta-floor fill), asserted bit-exact in
-        tests/test_distributed_search.py.
+        Exactness: each unit's local top-k is a superset of that unit's
+        contribution to the global top-k (per-task θ is only lower
+        than a global θ would be → never over-prunes); the merge
+        re-sorts by (score desc, doc_id asc).  Delta-floor safety: a
+        matched doc always scores STRICTLY above the floor (idf > 0,
+        tf ≥ 1 ⇒ X > 0), so floor-fill docs can only enter when fewer
+        than k matched docs exist globally — and then every unit
+        emitted its complete matched set, so the fill sees all matched
+        ids.  Asserted bit-exact in tests/test_distributed_search.py
+        and tests/test_streaming.py.
 
-        ``k`` may be a single int or one int PER QUERY (r5 VERDICT #7:
-        the whole batch used to be clamped to one k); the shard tasks
-        heap to max(k) and each query's final list is cut to its own
-        k.  ``mode`` picks the per-shard kernel like ``search_tokens``
-        ('blockmax' default — the right choice for big shards —
-        'bulk', 'wand', or 'auto' per shard posting total); all modes
-        are bit-identical by construction and tests.
+        ``k`` may be a single int or one int PER QUERY (r5 VERDICT #7);
+        the tasks heap to max(k) and each query's final list is cut to
+        its own k.  ``mode`` picks the per-unit kernel as in
+        ``search_tokens`` ('blockmax' default — the right choice for
+        big shards).  A preloaded driver seeds each query's θ0
+        (``_seed``) so every task can prune from the start; cold
+        engines skip seeding.
         """
+        from pyspark.sql.window import Window
+
         from lean_explore_spark.pyfiles import ensure_py_files
 
         if isinstance(k, int):
@@ -720,103 +685,61 @@ class SearchEngine:
                 )
         out_k = [min(kv, self.n_docs) for kv in ks]
         # ONE dictionary lookup for the union of query terms (cold
-        # mode: one pruned Spark read instead of Q)
+        # mode: one pruned Spark read per segment instead of Q)
         union = sorted({t for toks in token_lists for t in toks})
         dfs = self._lookup_dfs(union) if union else {}
         qplans = []  # (ctx, {term: uterm_idx}) per query
         for toks in token_lists:
-            live = [t for t in toks if t in dfs]
-            uterms: List[str] = []
-            uindex: Dict[str, int] = {}
-            for t in live:
-                if t not in uindex:
-                    uindex[t] = len(uterms)
-                    uterms.append(t)
-            idfs = np.array(
-                [
-                    math.log(self.n_docs + 1) - math.log(dfs[t])
-                    for t in uterms
-                ],
-                dtype=np.float64,
-            )
-            qplans.append(
-                (
-                    wand.QueryContext(
-                        token_uterm=[uindex[t] for t in live],
-                        idfs=idfs,
-                        k1=codec.K1,
-                        b=codec.B,
-                        delta=1.0,
-                        avgdl=self.avgdl,
-                    ),
-                    uindex,
-                )
-            )
+            ctx, _, uindex = self._build_ctx(toks, dfs)
+            qplans.append((ctx, uindex))
 
         heaps: List[list] = [[] for _ in token_lists]
         all_terms = sorted({t for _, ui in qplans for t in ui})
         kk = max(out_k, default=0)
-        # θ0 seeding (r8, same bound as search_tokens_parallel): with a
-        # preloaded driver, score each query's DENSEST shard locally
-        # first — its k-th score lower-bounds the global k-th, so every
-        # executor task can prune from the start instead of decoding
-        # all postings into an empty heap.  ~1/n_shards of a driver
-        # sweep's work buys block pruning across the whole cluster; at
-        # 100 TB that is the difference between executor CPU scaling
-        # with postings touched vs postings COMPETITIVE.  Sound per the
-        # blockmax_bulk_shard theta0 contract; executors still score
-        # the seed shard (no special-casing), the driver heap is
-        # discarded.  Cold engines skip seeding (theta0 stays None).
         theta0s: List[Optional[float]] = [None] * len(token_lists)
-        if (
-            self._postings_cache is not None
-            and kk > 0
-            and mode in ("blockmax", "auto")
-        ):
-            theta0s = [
-                self._theta0_for(ctx, uindex, out_k[qi])
-                for qi, (ctx, uindex) in enumerate(qplans)
-            ]
+        if self._preloaded and mode in ("blockmax", "auto"):
+            for qi, (ctx, uindex) in enumerate(qplans):
+                if uindex and out_k[qi] > 0:
+                    by_unit = self._fetch_postings(list(uindex))
+                    theta0s[qi] = self._seed(by_unit, uindex, ctx, out_k[qi])[2]
         if all_terms and kk > 0:
             ensure_py_files(self.spark)
-            buckets = sorted(
-                {term_bucket(t, self.num_buckets) for t in all_terms}
+            postings = reduce(
+                lambda a, b: a.unionByName(b),
+                [
+                    self._pruned(seg, "postings", all_terms, POSTINGS_SCHEMA)
+                    .withColumn("seg", F.lit(seg))
+                    for seg in range(len(self.roots))
+                ],
             )
-            postings = (
-                self.spark.read.schema(POSTINGS_SCHEMA)
-                .parquet(str(self.root / "postings"))
-                .where(F.col("bucket").isin(buckets))
-                .where(F.col("term").isin(all_terms))
-            )
-            doc_stats_root = str(self.root / "doc_stats")
-            qplans_b = qplans
-            mode_b = mode
-            bulk_thr = self.BULK_THRESHOLD
-            theta0s_b = theta0s
+            # the task closure ships these, never ``self``
+            roots = [str(r) for r in self.roots]
+            scales = list(self._bm_scale)
 
-            def score_shard(key, pdf):
+            def score_unit(key, pdf):
                 import pandas as pd
                 import pyarrow.parquet as pq
 
                 from lean_explore_spark.query import search as S
                 from lean_explore_spark.query import wand as W
 
-                shard = int(key[0])
+                seg, shard = int(key[0]), int(key[1])
                 tbl = pq.read_table(
-                    f"{doc_stats_root}/shard={shard}",
+                    f"{roots[seg]}/doc_stats/shard={shard}",
                     columns=["doc_id", "doc_len"],
                 )
                 dl_ids = tbl.column("doc_id").to_numpy()
                 order = dl_ids.argsort()
                 dl_ids = dl_ids[order]
                 dl_lens = tbl.column("doc_len").to_numpy()[order]
-                # parse each (shard, term) slice ONCE, share across
-                # queries (TermCursor holds the per-query scan state)
+                # parse each term slice ONCE, share across queries
+                # (TermCursor holds the per-query scan state)
                 packed = {
-                    r["term"]: S._row_to_packed(r) for _, r in pdf.iterrows()
+                    r["term"]: S._row_to_packed(r, scales[seg])
+                    for _, r in pdf.iterrows()
                 }
                 qids, docs, scores = [], [], []
-                for qi, (ctx, uindex) in enumerate(qplans_b):
+                for qi, (ctx, uindex) in enumerate(qplans):
                     cursors = [
                         W.TermCursor(packed[t], u, dl_ids)
                         for t, u in uindex.items()
@@ -825,22 +748,10 @@ class SearchEngine:
                     if not cursors:
                         continue
                     local_heap: list = []
-                    total = sum(c.packed.count for c in cursors)
-                    if mode_b == "wand":
-                        W.wand_shard(
-                            cursors, ctx, dl_ids, dl_lens, local_heap, kk
-                        )
-                    elif mode_b == "bulk" or (
-                        mode_b == "auto" and total <= bulk_thr
-                    ):
-                        W.bulk_score_shard(
-                            cursors, ctx, dl_ids, dl_lens, local_heap, kk
-                        )
-                    else:
-                        W.blockmax_bulk_shard(
-                            cursors, ctx, dl_ids, dl_lens, local_heap, kk,
-                            theta0=theta0s_b[qi],
-                        )
+                    S._run_kernel(
+                        cursors, ctx, dl_ids, dl_lens, local_heap, kk, mode,
+                        theta0s[qi],
+                    )
                     qids.extend([qi] * len(local_heap))
                     docs.extend(e[2] for e in local_heap)
                     scores.extend(e[0] for e in local_heap)
@@ -848,15 +759,13 @@ class SearchEngine:
                     {"qid": qids, "doc_id": docs, "score": scores}
                 )
 
-            from pyspark.sql.window import Window
-
             w = Window.partitionBy("qid").orderBy(
                 F.desc("score"), F.asc("doc_id")
             )
             topk_df = (
-                postings.groupBy("shard")
+                postings.groupBy("seg", "shard")
                 .applyInPandas(
-                    score_shard, schema="qid int, doc_id long, score double"
+                    score_unit, schema="qid int, doc_id long, score double"
                 )
                 .withColumn("rn", F.row_number().over(w))
                 .where(F.col("rn") <= kk)

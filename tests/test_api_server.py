@@ -55,6 +55,7 @@ def server(spark, tmp_path_factory):
     srv = APIServer(api).start()
     yield srv
     srv.stop()
+    svc.engine.close_pool()
 
 
 def _get(url: str):
@@ -146,6 +147,9 @@ def test_batch_search_route_and_client(server):
 
 
 def test_lexical_search_route(server):
+    # the routed fan-out's workers were forked by start(), before any
+    # request thread existed; no request has asked for them yet
+    assert server.api.service.engine._fork_pool is not None
     status, body = _get(
         f"{server.url}/lexical_search?q=fast+table+scan&k=10"
     )

@@ -66,6 +66,51 @@ def test_segmented_search_rank_identical_to_monolithic(spark, streamed, tmp_path
         assert mono.search_tokens(toks, 15) == want, f"mono {q!r}"
         assert seg.search(q, 15) == want, f"segmented {q!r}"
         assert cold.search(q, 15) == want, f"segmented cold {q!r}"
+        assert seg.search_tokens_routed(toks, 15, mass_threshold=0) == want, q
+        assert seg.search_tokens_parallel(toks, 15, threads=2) == want, q
+        assert seg.score_candidates(toks, [d for d, _ in want]) == dict(want), q
+    seg.close_pool()
+
+
+def test_segment_block_maxima_bound_scores_at_global_avgdl(spark, tmp_path):
+    """Block maxima are tf-parts at each segment's OWN avgdl.  Next to
+    a long-doc base, a short-doc segment's docs score higher at the
+    global avgdl than its stored maxima say; unscaled, those maxima
+    let block-max pruning skip the segment's blocks once the base has
+    filled the heap above C0 and drop the true top-k.  Every kernel
+    must match the oracle over the union."""
+    filler = " ".join(f"filler{i}" for i in range(190))
+    base_rows = [
+        (i, ("pivot " * 10 if i < 6 else "filler190 " * 10) + filler)
+        for i in range(12)
+    ]  # 200 tokens each; 6 docs with tf(pivot) = 10
+    seg_rows = [(1000 + i, "pivot zork quux") for i in range(60)]
+    root = tmp_path / "idx"
+    for out, rows in (
+        (root / "base", base_rows),
+        (root / "segments" / "seg=1", seg_rows),
+    ):
+        IndexBuilder(
+            spark, str(out), num_shards=1, num_buckets=2, block_size=16
+        ).build(
+            spark.createDataFrame(rows, "doc_id long, text string"),
+            resume=False,
+        )  # the segment's pivot list spans 4 blocks
+    I.register_segment(root, "seg=1")
+
+    rows = base_rows + seg_rows
+    stats = oracle.build_stats(
+        [d for d, _ in rows], (tokenize_stem(t) for _, t in rows)
+    )
+    toks = tokenize_stem("pivot")
+    want = [(d, s) for d, s in oracle.top_k(stats, toks, 5)]
+    assert all(d >= 1000 for d, _ in want)  # the short docs win
+
+    seg = I.SegmentedSearch(spark, str(root))
+    assert seg.search("pivot", 5) == want
+    for mode in ("blockmax", "wand"):
+        assert seg.search_tokens(toks, 5, mode=mode) == want, mode
+    assert seg.search_tokens_distributed(toks, 5) == want
 
 
 def test_compaction_preserves_results(spark, streamed, tmp_path):
@@ -437,7 +482,4 @@ def test_streaming_curation_filter(spark, tmp_path):
 
     seg = I.SegmentedSearch(spark, str(index_root))
     assert seg.n_docs == len(want_ids)
-    got_ids = set()
-    for e in seg.engines:
-        got_ids.update(e.iter_doc_ids())
-    assert got_ids == want_ids
+    assert set(seg.iter_doc_ids()) == want_ids
