@@ -115,9 +115,10 @@ def bm25_tf_part(
     return (tf * (k1 + 1.0)) / (dl_norm + tf)
 
 
-@dataclass
+@dataclass(slots=True)
 class PackedPostings:
-    """One (term, shard) posting list, packed."""
+    """One (term, shard) posting list, packed.  Slotted: a preloaded
+    engine holds one per (term, shard) row."""
 
     count: int
     block_first: np.ndarray  # int64[n_blocks]
@@ -127,7 +128,7 @@ class PackedPostings:
     block_tf_bytes: np.ndarray  # int32[n_blocks]
     block_max_score: np.ndarray  # float64[n_blocks] (tf-part max)
     block_max_tf: np.ndarray  # int32[n_blocks]
-    payload: bytes
+    payload: "bytes | np.ndarray"  # uint8; readers hold numpy views
 
 
 def pack_postings(

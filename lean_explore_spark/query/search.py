@@ -22,19 +22,23 @@ distributed job and the delta-floor fill all iterate those units.
 
 Scale notes (100 TB story):
 
-* dictionary and postings reads are Catalyst-pruned: ``bucket`` is a
-  partition directory (pruning skips all other buckets' files) and
-  the ``term IN (...)`` predicate pushes into parquet row-group
-  stats; rows are sorted by term within each bucket at build time so
-  row-group min/max actually cut.
+* serving reads never touch Spark: every dictionary, postings and
+  doc_stats read is one columnar pyarrow read of the build's parquet.
+  ``bucket`` is a hive partition directory (a cold lookup opens only
+  its query terms' buckets) and the ``term`` predicate is checked
+  against parquet row-group statistics; rows are sorted by term within
+  each bucket at build time so row-group min/max actually cut.
+  Postings become ``codec.PackedPostings`` in one place,
+  ``_packed_lists``, as numpy views over the read columns.
 * shards are independent doc ranges → the distributed variant scores
-  (segment, shard) units as parallel tasks (``search_distributed``),
-  each loading only its span-bounded doc-length slice, and merges
-  k-heaps.
-* ``preload=True`` pins the dictionary + postings in driver memory —
-  the analog of the reference preloading its assets before benching
-  (benchmarking/benchmark_search_rate.py:260-300); cold mode reads
-  through Spark each query.
+  (segment, shard) units as parallel Spark tasks
+  (``search_distributed``), each loading only its span-bounded
+  doc-length slice, and merges k-heaps.  Spark stays the build engine
+  and the engine of that batch job.
+* ``preload=True`` pins the dictionary + packed postings in driver
+  memory — the analog of the reference preloading its assets before
+  benching (benchmarking/benchmark_search_rate.py:260-300); cold mode
+  reads the pruned slices per query and bounds its doc-length cache.
 """
 
 from __future__ import annotations
@@ -46,9 +50,12 @@ import os
 from collections import OrderedDict
 from functools import reduce
 from pathlib import Path
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, Iterator, List, Optional, Sequence, Tuple
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
@@ -60,27 +67,87 @@ from lean_explore_spark.query import wand
 Unit = Tuple[int, int]  # (segment index, shard)
 
 
-def _row_to_packed(row, bm_scale: float = 1.0) -> codec.PackedPostings:
-    """A postings row as kernel input — the ONE place block maxima
-    reach a kernel.  A segment stores ``block_max_score`` as tf-parts
-    at its OWN avgdl; scored at the global avgdl they may be larger,
-    so the caller passes the segment's ``bm_scale`` (see
-    ``SearchEngine.__init__``) and the kernels only ever see true
-    upper bounds.  1.0 leaves the stored array untouched."""
-    block_max = np.asarray(row["block_max_score"], dtype=np.float64)
-    if bm_scale != 1.0:
-        block_max = block_max * bm_scale
-    return codec.PackedPostings(
-        count=int(row["df_shard"]),
-        block_first=np.asarray(row["block_first"], dtype=np.int64),
-        block_last=np.asarray(row["block_last"], dtype=np.int64),
-        block_count=np.asarray(row["block_count"], dtype=np.int32),
-        block_gap_bytes=np.asarray(row["block_gap_bytes"], dtype=np.int32),
-        block_tf_bytes=np.asarray(row["block_tf_bytes"], dtype=np.int32),
-        block_max_score=block_max,
-        block_max_tf=np.asarray(row["block_max_tf"], dtype=np.int32),
-        payload=bytes(row["payload"]),
+# postings columns a reader needs (the lineage columns ``fp`` and
+# ``payload_bytes`` are never read) and the block-directory list
+# columns in ``codec.PackedPostings`` field order
+_BLOCK_DIR = (
+    ("block_first", np.int64),
+    ("block_last", np.int64),
+    ("block_count", np.int32),
+    ("block_gap_bytes", np.int32),
+    ("block_tf_bytes", np.int32),
+    ("block_max_score", np.float64),
+    ("block_max_tf", np.int32),
+)
+_POSTINGS_COLS = ["term", "shard", "df_shard"] + [c for c, _ in _BLOCK_DIR] + [
+    "payload"
+]
+
+
+def _binary_parts(arr: pa.Array) -> Tuple[np.ndarray, List[int]]:
+    """A binary array's value bytes (numpy view) and its n+1 offsets."""
+    _, offs, data = arr.buffers()
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    o = np.frombuffer(offs, dtype=width)[arr.offset : arr.offset + len(arr) + 1]
+    if data is None:  # every value empty
+        return np.zeros(0, dtype=np.uint8), o.tolist()
+    return np.frombuffer(data, dtype=np.uint8), o.tolist()
+
+
+def _packed_lists(
+    tbl: pa.Table, bm_scale: float = 1.0
+) -> Iterator[Tuple[str, int, codec.PackedPostings]]:
+    """Postings rows as kernel input, ``(term, shard, packed)`` per row —
+    the ONE place block maxima reach a kernel.  Preload, cold reads and
+    the distributed job's tasks all build their lists here.  A segment
+    stores ``block_max_score`` as tf-parts at its OWN avgdl; scored at
+    the global avgdl they may be larger, so the caller passes the
+    segment's ``bm_scale`` (see ``SearchEngine.__init__``) and the
+    kernels only ever see true upper bounds.  1.0 leaves the stored
+    maxima untouched.
+
+    Columnar: each list column is flattened once and every row's
+    directory arrays and payload are numpy views at its offsets; only
+    the term, shard and count become Python values per row."""
+    for batch in tbl.to_batches():
+        if not batch.num_rows:
+            continue
+        terms = batch.column("term").to_numpy(zero_copy_only=False).tolist()
+        shards = batch.column("shard").to_numpy().tolist()
+        counts = batch.column("df_shard").to_numpy().tolist()
+        dirs = []
+        for name, dtype in _BLOCK_DIR:
+            col = batch.column(name)
+            vals = col.values.to_numpy().astype(dtype, copy=False)
+            if name == "block_max_score" and bm_scale != 1.0:
+                vals = vals * bm_scale
+            dirs.append((vals, col.offsets.to_numpy().tolist()))
+        payload, poffs = _binary_parts(batch.column("payload"))
+        for i, (t, shard, n) in enumerate(zip(terms, shards, counts)):
+            yield t, shard, codec.PackedPostings(
+                n,
+                *(v[o[i] : o[i + 1]] for v, o in dirs),
+                payload=payload[poffs[i] : poffs[i + 1]],
+            )
+
+
+def _add_dfs(dfs: Dict[str, int], tbl: pa.Table) -> None:
+    """Add a dictionary slice's (term, df) rows into ``dfs``."""
+    terms = tbl.column("term").to_numpy(zero_copy_only=False).tolist()
+    for t, df in zip(terms, tbl.column("df").to_numpy().tolist()):
+        dfs[t] = dfs.get(t, 0) + df
+
+
+def _read_doc_lens(seg_root: str, shard: int) -> Tuple[np.ndarray, np.ndarray]:
+    """One (segment, shard) doc_stats slice → (doc ids ascending, doc
+    lengths): a single-directory parquet read, no Spark."""
+    tbl = pq.read_table(
+        f"{seg_root}/doc_stats/shard={shard}", columns=["doc_id", "doc_len"]
     )
+    ids = tbl.column("doc_id").to_numpy().astype(np.int64, copy=False)
+    order = ids.argsort()
+    lens = tbl.column("doc_len").to_numpy().astype(np.int64, copy=False)
+    return ids[order], lens[order]
 
 
 def _run_kernel(
@@ -120,16 +187,12 @@ _FORK_ENGINES: dict = {}
 
 def _fork_score_unit(engine_key, unit, uindex, ctx, k, theta0):
     """Runs inside a forked worker: score one unit into a local k-heap
-    using the parent's preloaded caches (no deserialization — the fork
-    shares them copy-on-write)."""
+    from the parent's preloaded packed lists (no deserialization — the
+    fork shares them copy-on-write)."""
     eng = _FORK_ENGINES[engine_key]
     seg, shard = unit
-    rows = [
-        (t, r)
-        for t in uindex
-        for r in eng._postings_cache[seg].get(t, [])
-        if int(r["shard"]) == shard
-    ]
+    cache = eng._postings_cache[seg]
+    rows = [(t, p) for t in uindex for s, p in cache.get(t, ()) if s == shard]
     heap: list = []
     eng._score_unit(unit, rows, uindex, ctx, k, heap, theta0=theta0)
     return heap
@@ -189,9 +252,11 @@ class SearchEngine:
         self._fork_pool_lock = threading.Lock()
         # global df per term (summed over segments)
         self._dict_cache: Optional[Dict[str, int]] = None
-        # per segment: term → postings rows in shard order
+        # per segment: term → [(shard, PackedPostings)] in shard order
         self._postings_cache: Optional[List[Dict[str, list]]] = None
         self._unit_list: Optional[List[Unit]] = None
+        # (segment, table) → discovered pyarrow dataset
+        self._datasets: Dict[Tuple[int, str], ds.Dataset] = {}
         self._preloaded = False
         if preload:
             self._preload()
@@ -202,23 +267,49 @@ class SearchEngine:
         self._preloaded = True  # set first: _doc_lens skips LRU eviction
         dfs: Dict[str, int] = {}
         caches: List[Dict[str, list]] = []
-        for root in self.roots:
-            for r in self.spark.read.parquet(str(root / "dictionary")).collect():
-                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+        for seg in range(len(self.roots)):
+            _add_dfs(dfs, self._read(seg, "dictionary", ["term", "df"]))
             cache: Dict[str, list] = {}
-            for r in self.spark.read.parquet(str(root / "postings")).collect():
-                cache.setdefault(r["term"], []).append(r)
+            tbl = self._read(seg, "postings", _POSTINGS_COLS)
+            for t, shard, packed in _packed_lists(tbl, self._bm_scale[seg]):
+                cache.setdefault(t, []).append((shard, packed))
             for lst in cache.values():
-                lst.sort(key=lambda r: int(r["shard"]))
+                lst.sort(key=lambda sp: sp[0])
             caches.append(cache)
         self._dict_cache = dfs
         self._postings_cache = caches
         for unit in self._shards():
             self._doc_lens(unit)
 
+    def _dataset(self, seg: int, table: str) -> ds.Dataset:
+        """One segment table as a hive-partitioned pyarrow dataset,
+        discovered once per engine (segments are immutable once
+        committed)."""
+        key = (seg, table)
+        if key not in self._datasets:
+            self._datasets[key] = ds.dataset(
+                str(self.roots[seg] / table), format="parquet", partitioning="hive"
+            )
+        return self._datasets[key]
+
+    def _read(
+        self, seg: int, table: str, columns: List[str],
+        terms: Optional[Sequence[str]] = None,
+    ) -> pa.Table:
+        """One segment's dictionary/postings columns; with ``terms``,
+        pruned to their buckets (partition directories) and to the
+        terms themselves (row-group statistics)."""
+        flt = None
+        if terms is not None:
+            nb = self._seg_stats[seg]["num_buckets"]
+            flt = ds.field("bucket").isin(
+                sorted({term_bucket(t, nb) for t in terms})
+            ) & ds.field("term").isin(list(terms))
+        return self._dataset(seg, table).to_table(columns=columns, filter=flt)
+
     def _pruned(self, seg: int, table: str, terms: Sequence[str], schema=None):
-        """One segment's dictionary/postings read, pruned to the
-        buckets and terms of ``terms``."""
+        """One segment's table as a Spark read pruned like ``_read`` —
+        the distributed batch job's input."""
         nb = self._seg_stats[seg]["num_buckets"]
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return (
@@ -233,36 +324,27 @@ class SearchEngine:
             return {t: self._dict_cache[t] for t in terms if t in self._dict_cache}
         dfs: Dict[str, int] = {}
         for seg in range(len(self.roots)):
-            for r in self._pruned(seg, "dictionary", terms).collect():
-                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+            _add_dfs(dfs, self._read(seg, "dictionary", ["term", "df"], terms))
         return dfs
 
     def _fetch_postings(self, terms: Sequence[str]) -> Dict[Unit, list]:
-        """term rows grouped by unit: {(segment, shard): [(term, row)]}"""
+        """Packed lists grouped by unit: {(segment, shard): [(term, packed)]}"""
         by_unit: Dict[Unit, list] = {}
         for seg in range(len(self.roots)):
             if self._postings_cache is not None:
                 cache = self._postings_cache[seg]
-                pairs = [(t, r) for t in terms for r in cache.get(t, [])]
+                rows = [(t, s, p) for t in terms for s, p in cache.get(t, ())]
             else:
-                rows = self._pruned(seg, "postings", terms, POSTINGS_SCHEMA).collect()
-                pairs = [(r["term"], r) for r in rows]
-            for t, r in pairs:
-                by_unit.setdefault((seg, int(r["shard"])), []).append((t, r))
+                tbl = self._read(seg, "postings", _POSTINGS_COLS, terms)
+                rows = _packed_lists(tbl, self._bm_scale[seg])
+            for t, shard, packed in rows:
+                by_unit.setdefault((seg, shard), []).append((t, packed))
         return by_unit
 
     def _doc_lens(self, unit: Unit) -> Tuple[np.ndarray, np.ndarray]:
         if unit not in self._dl_cache:
             seg, shard = unit
-            rows = (
-                self.spark.read.parquet(str(self.roots[seg] / "doc_stats"))
-                .where(F.col("shard") == shard)
-                .orderBy("doc_id")
-                .collect()
-            )
-            ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-            lens = np.array([r["doc_len"] for r in rows], dtype=np.int64)
-            self._dl_cache[unit] = (ids, lens)
+            self._dl_cache[unit] = _read_doc_lens(str(self.roots[seg]), shard)
             if not self._preloaded:
                 # LRU-bound in cold mode (preload pins by design)
                 while len(self._dl_cache) > self._dl_cache_bound:
@@ -291,21 +373,17 @@ class SearchEngine:
         authoritative metadata, not a filesystem listing (r3 VERDICT
         #7: local-FS ``iterdir`` breaks on an object store).  New
         builds record the shard list in stats.json; older indexes fall
-        back to ONE partition-column-only parquet read of doc_stats
-        (Catalyst answers it from partition discovery, which is
-        object-store-safe)."""
+        back to the ``shard=`` partition keys of doc_stats' dataset
+        discovery (a listing, which is object-store-safe)."""
         if self._unit_list is None:
             units: List[Unit] = []
-            for seg, (root, st) in enumerate(zip(self.roots, self._seg_stats)):
+            for seg, st in enumerate(self._seg_stats):
                 shards = st.get("shards")
                 if shards is None:
-                    rows = (
-                        self.spark.read.parquet(str(root / "doc_stats"))
-                        .select("shard")
-                        .distinct()
-                        .collect()
-                    )
-                    shards = [int(r["shard"]) for r in rows]
+                    shards = {
+                        ds.get_partition_keys(f.partition_expression)["shard"]
+                        for f in self._dataset(seg, "doc_stats").get_fragments()
+                    }
                 units.extend((seg, s) for s in sorted(int(s) for s in shards))
             self._unit_list = units
         return self._unit_list
@@ -363,11 +441,7 @@ class SearchEngine:
         self, unit, rows, uindex, ctx, k, heap, mode="auto", theta0=None
     ) -> None:
         dl_ids, dl_lens = self._doc_lens(unit)
-        scale = self._bm_scale[unit[0]]
-        cursors = [
-            wand.TermCursor(_row_to_packed(r, scale), uindex[t], dl_ids)
-            for t, r in rows
-        ]
+        cursors = [wand.TermCursor(p, uindex[t], dl_ids) for t, p in rows]
         _run_kernel(cursors, ctx, dl_ids, dl_lens, heap, k, mode, theta0)
 
     # tests may set this to a callable to capture the distributed
@@ -412,8 +486,10 @@ class SearchEngine:
         ctx ships per task, and k results ship back).  Threads measured
         10× SLOWER than sequential here (the per-shard numpy calls are
         too short to amortize GIL handoff at 400k–6.4M shard sizes);
-        fork is the standard CPython answer.  Children never touch the
-        inherited py4j socket.  Pool is per-engine; preload is required
+        fork is the standard CPython answer.  The query path has no py4j
+        at all: children score from the inherited packed lists and
+        doc-length slices, which are numpy arrays, and never call into
+        Spark or arrow.  Pool is per-engine; preload is required
         (post-fork loads would not be visible to children).  A server
         calls this before its request threads start (APIServer.start)."""
         from concurrent.futures import ProcessPoolExecutor
@@ -463,12 +539,7 @@ class SearchEngine:
         kernel's ``theta0`` — valid only when that unit matched ≥ k
         docs, else no task may prune (delta-floor semantics).  Returns
         (unit, its heap, θ0 or None)."""
-        # df_shard straight off the rows — _row_to_packed would copy
-        # each payload blob just to read its count
-        mass = {
-            u: sum(int(r["df_shard"]) for _, r in rows)
-            for u, rows in by_unit.items()
-        }
+        mass = {u: sum(p.count for _, p in rows) for u, rows in by_unit.items()}
         seed = max(mass, key=lambda u: (mass[u], -u[0], -u[1]))
         heap: list = []
         self._score_unit(seed, by_unit[seed], uindex, ctx, k, heap)
@@ -608,8 +679,8 @@ class SearchEngine:
             by_unit = self._fetch_postings(uterms)
             for unit in sorted(by_unit):
                 dl_ids, dl_lens = self._doc_lens(unit)
-                for t, r in by_unit[unit]:
-                    d, tf = codec.unpack_for(_row_to_packed(r), cand, dl_ids)
+                for t, p in by_unit[unit]:
+                    d, tf = codec.unpack_for(p, cand, dl_ids)
                     if len(d) == 0:
                         continue
                     x = codec.bm25_tf_part(
@@ -685,7 +756,7 @@ class SearchEngine:
                 )
         out_k = [min(kv, self.n_docs) for kv in ks]
         # ONE dictionary lookup for the union of query terms (cold
-        # mode: one pruned Spark read per segment instead of Q)
+        # mode: one pruned read per segment instead of Q)
         union = sorted({t for toks in token_lists for t in toks})
         dfs = self._lookup_dfs(union) if union else {}
         qplans = []  # (ctx, {term: uterm_idx}) per query
@@ -716,28 +787,17 @@ class SearchEngine:
             roots = [str(r) for r in self.roots]
             scales = list(self._bm_scale)
 
-            def score_unit(key, pdf):
-                import pandas as pd
-                import pyarrow.parquet as pq
+            def score_unit(key, tbl):
+                import pyarrow as pa
 
                 from lean_explore_spark.query import search as S
                 from lean_explore_spark.query import wand as W
 
-                seg, shard = int(key[0]), int(key[1])
-                tbl = pq.read_table(
-                    f"{roots[seg]}/doc_stats/shard={shard}",
-                    columns=["doc_id", "doc_len"],
-                )
-                dl_ids = tbl.column("doc_id").to_numpy()
-                order = dl_ids.argsort()
-                dl_ids = dl_ids[order]
-                dl_lens = tbl.column("doc_len").to_numpy()[order]
+                seg, shard = key[0].as_py(), key[1].as_py()
+                dl_ids, dl_lens = S._read_doc_lens(roots[seg], shard)
                 # parse each term slice ONCE, share across queries
                 # (TermCursor holds the per-query scan state)
-                packed = {
-                    r["term"]: S._row_to_packed(r, scales[seg])
-                    for _, r in pdf.iterrows()
-                }
+                packed = {t: p for t, _, p in S._packed_lists(tbl, scales[seg])}
                 qids, docs, scores = [], [], []
                 for qi, (ctx, uindex) in enumerate(qplans):
                     cursors = [
@@ -755,8 +815,12 @@ class SearchEngine:
                     qids.extend([qi] * len(local_heap))
                     docs.extend(e[2] for e in local_heap)
                     scores.extend(e[0] for e in local_heap)
-                return pd.DataFrame(
-                    {"qid": qids, "doc_id": docs, "score": scores}
+                return pa.table(
+                    {
+                        "qid": pa.array(qids, pa.int32()),
+                        "doc_id": pa.array(docs, pa.int64()),
+                        "score": pa.array(scores, pa.float64()),
+                    }
                 )
 
             w = Window.partitionBy("qid").orderBy(
@@ -764,7 +828,7 @@ class SearchEngine:
             )
             topk_df = (
                 postings.groupBy("seg", "shard")
-                .applyInPandas(
+                .applyInArrow(
                     score_unit, schema="qid int, doc_id long, score double"
                 )
                 .withColumn("rn", F.row_number().over(w))

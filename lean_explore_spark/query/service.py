@@ -94,8 +94,8 @@ class SearchService:
         (the reference preloads its assets before serving; right for
         latency-critical corpora that fit).  ``preload=False`` is the
         COLD/at-scale mode (r2 VERDICT #3): every lookup is a pruned
-        Spark read (bucket partition pruning + term pushdown), nothing
-        corpus-sized ever lands on the driver."""
+        parquet read (bucket partition pruning + term row-group
+        statistics), nothing corpus-sized ever lands on the driver."""
         if embedding_mode not in ("spark", "driver"):
             raise ValueError(f"unknown embedding_mode {embedding_mode!r}")
         from collections import OrderedDict
@@ -416,7 +416,8 @@ class SearchService:
         (threshold, lang filter, candidate BM25, combine) are the
         SAME ``_finish`` code.  With a preloaded engine the BM25
         stage is driver-side, so the whole sweep stays at ~2 jobs; a
-        cold engine still pays its per-query pruned postings reads."""
+        cold engine still pays its per-query pruned postings reads
+        (parquet reads on the driver, not Spark jobs)."""
         if distributed and self.mode == "spark":
             import time as _time
 

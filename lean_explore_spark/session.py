@@ -12,6 +12,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's memory, capped at 24g: local mode runs the
+    driver JVM next to its Python workers on one box, and a heap sized
+    past what the box has gets the JVM OOM-killed mid-run (24g on a
+    15 GiB host did).  Hosts without ``meminfo`` keep the cap."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1024, min(DRIVER_MEM_CAP_MB, kib // 2048))}m"
+    except OSError:
+        pass
+    return f"{DRIVER_MEM_CAP_MB}m"
+
 
 def get_spark(
     app_name: str = "lean_explore_spark",
@@ -45,7 +63,10 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # don't fsync every parquet file on local/test disks
         .config("spark.hadoop.parquet.summary.metadata.level", "NONE")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         # long multi-stage pipelines on ONE box accumulate dead shuffle
         # files (every stage's map output lands on the same local disk
         # and is only deleted when driver JVM GC collects the

@@ -274,7 +274,7 @@ class SegmentedSearch(SearchEngine):
             seg_dirs = [root / "base"] + seg_dirs
         if not seg_dirs:
             raise ValueError(f"no segments under {index_root}")
-        # preload=False → cold reads (pruned Spark reads, LRU-bounded
+        # preload=False → cold reads (pruned parquet reads, LRU-bounded
         # doc-length cache) for bases too big to pin
         super().__init__(spark, [str(d) for d in seg_dirs], preload=preload)
 

@@ -301,3 +301,23 @@ def test_cold_mode_dl_cache_is_lru_bounded(spark, index_dir, ostats):
         assert len(eng._dl_cache) <= 2
     pre = SearchEngine(spark, index_dir, preload=True)
     assert len(pre._dl_cache) == len(shards)  # pinned, not bounded
+
+
+def test_serving_read_path_runs_no_spark_jobs(spark, index_dir, ostats):
+    """Serving reads the index through pyarrow only: a preloaded open,
+    a preloaded query, and a cold query with its dictionary, postings
+    and doc-length reads schedule no Spark job."""
+    sc = spark.sparkContext
+    toks = tokenize_stem("customer orders data")
+    want = [(d, s) for d, s in oracle.top_k(ostats, toks, 25)]
+    sc.setJobGroup("serve_read_path", "serving read path")
+    try:
+        pre = SearchEngine(spark, index_dir, preload=True)
+        got_pre = pre.search_tokens(toks, 25)
+        cold = SearchEngine(spark, index_dir, preload=False)
+        got_cold = cold.search_tokens(toks, 25)
+    finally:
+        sc.setJobGroup("", "")
+    assert got_pre == want and got_cold == want
+    assert cold._dl_cache  # the cold query read doc lengths
+    assert list(sc.statusTracker().getJobIdsForGroup("serve_read_path")) == []

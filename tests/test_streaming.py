@@ -106,11 +106,12 @@ def test_segment_block_maxima_bound_scores_at_global_avgdl(spark, tmp_path):
     want = [(d, s) for d, s in oracle.top_k(stats, toks, 5)]
     assert all(d >= 1000 for d, _ in want)  # the short docs win
 
-    seg = I.SegmentedSearch(spark, str(root))
-    assert seg.search("pivot", 5) == want
-    for mode in ("blockmax", "wand"):
-        assert seg.search_tokens(toks, 5, mode=mode) == want, mode
-    assert seg.search_tokens_distributed(toks, 5) == want
+    for preload in (True, False):  # preloaded and cold readers
+        seg = I.SegmentedSearch(spark, str(root), preload=preload)
+        assert seg.search("pivot", 5) == want, preload
+        for mode in ("blockmax", "wand"):
+            assert seg.search_tokens(toks, 5, mode=mode) == want, (mode, preload)
+        assert seg.search_tokens_distributed(toks, 5) == want, preload
 
 
 def test_compaction_preserves_results(spark, streamed, tmp_path):
