@@ -67,6 +67,7 @@ import sys
 from collections.abc import Callable
 from pathlib import Path
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 _REPO = Path(__file__).resolve().parent
@@ -110,6 +111,23 @@ _DOCS_CACHE: dict = {}
 _EMB_CACHE: dict = {}
 
 
+def _session_cached(cache: dict, spark: SparkSession, sf_dir: str, table: str):
+    """``table`` fanned out and cached per (session, sf_dir).  A call
+    from another session first unpersists and drops every other
+    session's entries: a stopped session's DataFrame is useless, and
+    keeping it would pin that session and its cached blocks."""
+    for key in [key for key in cache if key[0] != id(spark)]:
+        try:
+            cache.pop(key).unpersist()
+        except Py4JError:  # its session's JVM side is gone: nothing to free
+            pass
+    key = (id(spark), sf_dir)
+    if key not in cache:
+        ensure_py_files(spark)  # executors need the package on sys.path
+        cache[key] = _fan_out(spark.read.parquet(f"{sf_dir}/{table}.parquet")).cache()
+    return cache[key]
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus relation, fanned out and cached per (session, sf_dir):
     ~30 contract queries consume it, and without the cache each one
@@ -118,23 +136,11 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     r9 sf0.1 runs).  First consumer materializes inside its timed
     window (the _analyzed/_shingles precedent); storage is the
     corpus text, MEMORY_AND_DISK and evictable."""
-    key = (id(spark), sf_dir)
-    if key not in _DOCS_CACHE:
-        ensure_py_files(spark)  # executors need the package on sys.path
-        _DOCS_CACHE[key] = _fan_out(
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-        ).cache()
-    return _DOCS_CACHE[key]
+    return _session_cached(_DOCS_CACHE, spark, sf_dir, "documents")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _EMB_CACHE:
-        ensure_py_files(spark)
-        _EMB_CACHE[key] = _fan_out(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        ).cache()
-    return _EMB_CACHE[key]
+    return _session_cached(_EMB_CACHE, spark, sf_dir, "embeddings")
 
 
 def entry(spark: SparkSession) -> DataFrame:

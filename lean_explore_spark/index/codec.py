@@ -27,8 +27,16 @@ Layout per (term, doc-shard) row:
   Multiplying by idf (known only at query time from the dictionary)
   gives the exact per-term block upper bound.
 
-Encoder and decoder are numpy-vectorized — no per-posting Python in
-the hot path (input_hint: vectorized Arrow UDFs, no per-row Python).
+Encoding: the builder's packer (index/builder.py) encodes every block
+of a shard's run in one ``varint_encode_sized`` pass; ``pack_postings``
+here packs one list block by block (the reference the tests use).
+Decoding: ``_decode_blocks`` is the one reader of the layout.  It
+decodes any ascending set of a list's blocks in one vectorized
+``varint_decode`` pass and checks every gap and tf range against
+``block_count``; ``unpack_all``, ``unpack_selected``, ``unpack_for``
+and the WAND cursor all call it — no per-posting or per-block Python
+in the decode path (input_hint: vectorized Arrow UDFs, no per-row
+Python).
 """
 
 from __future__ import annotations
@@ -78,21 +86,18 @@ def varint_encode(values: np.ndarray) -> bytes:
     return varint_encode_sized(values)[0]
 
 
-def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
-    """Decode LEB128 bytes back to uint64, vectorized."""
+def varint_decode(buf: "bytes | np.ndarray") -> np.ndarray:
+    """Decode LEB128 bytes back to uint64, vectorized.  ``buf`` must
+    end on a value's terminal byte (``_decode_blocks`` checks that)."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.zeros(0, dtype=np.uint64)
     # fast path: no continuation bits → every byte is one value
     # (true for nearly all gap/tf blocks on natural text)
-    if not (b & 0x80).any():
-        if count is not None and count != b.size:
-            raise ValueError(f"expected {count} values, payload holds {b.size}")
+    if b.max() < 0x80:
         return b.astype(np.uint64)
     is_last = (b & 0x80) == 0
     n = int(is_last.sum())
-    if count is not None and count != n:
-        raise ValueError(f"expected {count} values, payload holds {n}")
     val_idx = np.zeros(b.size, dtype=np.int64)
     np.cumsum(is_last[:-1], out=val_idx[1:])
     ends = np.flatnonzero(is_last)
@@ -196,44 +201,72 @@ def pack_postings(
     )
 
 
-def unpack_block(
-    packed: PackedPostings, block_idx: int, dl_ids: np.ndarray
+def _decode_blocks(
+    packed: PackedPostings, blocks, dl_ids: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one block → (doc_ids int64, tfs int64).
+    """Decode the given block indices (ascending) → (doc_ids, tfs),
+    int64 — the one reader of the payload layout.
 
-    ``dl_ids`` = the shard's sorted doc-id array (the doc-length join
-    key every reader already holds); the block's absolute rank comes
-    from binary-searching its external ``block_first``."""
-    off = int(
-        packed.block_gap_bytes[:block_idx].sum()
-        + packed.block_tf_bytes[:block_idx].sum()
-    )
-    g_len = int(packed.block_gap_bytes[block_idx])
-    t_len = int(packed.block_tf_bytes[block_idx])
-    cnt = int(packed.block_count[block_idx])
-    gaps = varint_decode(packed.payload[off : off + g_len], cnt)
-    tfs = varint_decode(packed.payload[off + g_len : off + g_len + t_len], cnt)
-    first_rank = int(
-        np.searchsorted(dl_ids, packed.block_first[block_idx])
-    )
-    ranks = first_rank + np.cumsum(gaps.astype(np.int64))
-    # first gap is 0 → cumsum starts at the block's first rank
-    return dl_ids[ranks], tfs.astype(np.int64)
+    The selected blocks' byte ranges go through ONE ``varint_decode``;
+    the values are split into gaps and tfs by ``block_count``, and each
+    block's first rank is one ``searchsorted`` of its ``block_first`` in
+    ``dl_ids`` plus a cumsum of its gaps, restarted per block.  Each gap
+    range and each tf range must hold exactly ``block_count`` values and
+    end on a value boundary, else ``ValueError`` — a directory that
+    disagrees with its payload never decodes into another block."""
+    blocks = np.asarray(blocks, dtype=np.int64)
+    if blocks.size == 0:
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
+    payload = np.frombuffer(packed.payload, dtype=np.uint8)
+    # array methods, not np.* wrappers: a decode is dozens of calls on
+    # tiny arrays, so call cost counts
+    block_bytes = packed.block_gap_bytes + packed.block_tf_bytes
+    ends = block_bytes.cumsum(dtype=np.int64)  # each block's end in the payload
+    if ends[-1] > payload.size:
+        raise ValueError(
+            f"directory spans {ends[-1]} payload bytes, payload holds {payload.size}"
+        )
+    # the selected blocks' bytes in order: one slice for a contiguous run
+    first, last = int(blocks[0]), int(blocks[-1])
+    if last - first + 1 == blocks.size:
+        start = int(ends[first - 1]) if first else 0
+        buf = payload[start : ends[last]]
+        buf_end = ends[first : last + 1] - start  # each block's end in ``buf``
+    else:
+        sizes = block_bytes[blocks].astype(np.int64)
+        buf_end = sizes.cumsum()
+        buf = payload[np.arange(buf_end[-1]) + (ends[blocks] - buf_end).repeat(sizes)]
+    # block j holds cnt_j gap values then cnt_j tf values, so with cc_j
+    # postings through block j its tf range must end on the last byte
+    # of value 2·cc_j and its gap range on the last byte of value
+    # 2·cc_j − cnt_j
+    cnt = packed.block_count[blocks].astype(np.int64)
+    cc = cnt.cumsum()
+    value_end = (buf < 0x80).nonzero()[0]  # each value's last byte
+    tf_value_end = 2 * cc - 1
+    gap_byte_end = buf_end - packed.block_tf_bytes[blocks]
+    if cnt.min() < 1 or len(value_end) != 2 * cc[-1] or (
+        (value_end[tf_value_end] != buf_end - 1)
+        | (value_end[tf_value_end - cnt] != gap_byte_end - 1)
+    ).any():
+        raise ValueError("block counts disagree with the payload's varint ranges")
+    vals = varint_decode(buf)
+    head = cc - cnt  # each block's first posting
+    gap_at = np.arange(cc[-1]) + head.repeat(cnt)  # block j's gaps start at 2·head_j
+    gaps = vals[gap_at].astype(np.int64)
+    tfs = vals[gap_at + cnt.repeat(cnt)].astype(np.int64)
+    # rank = block's first rank + cumsum of the block's own gaps
+    csum = gaps.cumsum()
+    first_rank = dl_ids.searchsorted(packed.block_first[blocks])
+    ranks = csum + (first_rank - (csum[head] - gaps[head])).repeat(cnt)
+    return dl_ids[ranks], tfs
 
 
 def unpack_all(
     packed: PackedPostings, dl_ids: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Decode the whole list → (doc_ids, tfs)."""
-    ids: List[np.ndarray] = []
-    tfs: List[np.ndarray] = []
-    for bi in range(len(packed.block_first)):
-        i, t = unpack_block(packed, bi, dl_ids)
-        ids.append(i)
-        tfs.append(t)
-    if not ids:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-    return np.concatenate(ids), np.concatenate(tfs)
+    return _decode_blocks(packed, np.arange(len(packed.block_first)), dl_ids)
 
 
 def unpack_for(
@@ -247,48 +280,19 @@ def unpack_for(
     instead of the whole list.  Returns (doc_ids, tfs) restricted to
     ``want_ids``.
     """
-    ids: List[np.ndarray] = []
-    tfs: List[np.ndarray] = []
-    for bi in range(len(packed.block_first)):
-        lo = int(np.searchsorted(want_ids, packed.block_first[bi], "left"))
-        hi = int(np.searchsorted(want_ids, packed.block_last[bi], "right"))
-        if lo >= hi:
-            continue
-        d, t = unpack_block(packed, bi, dl_ids)
-        pos = np.searchsorted(want_ids, d)
-        pos_c = np.minimum(pos, len(want_ids) - 1)
-        mask = want_ids[pos_c] == d
-        if mask.any():
-            ids.append(d[mask])
-            tfs.append(t[mask])
-    if not ids:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-    return np.concatenate(ids), np.concatenate(tfs)
+    lo = np.searchsorted(want_ids, packed.block_first, "left")
+    hi = np.searchsorted(want_ids, packed.block_last, "right")
+    d, t = _decode_blocks(packed, np.flatnonzero(lo < hi), dl_ids)
+    if len(d) == 0:
+        return d, t
+    pos = np.minimum(np.searchsorted(want_ids, d), len(want_ids) - 1)
+    mask = want_ids[pos] == d
+    return d[mask], t[mask]
 
 
 def unpack_selected(
     packed: PackedPostings, block_indices: np.ndarray, dl_ids: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Decode only the given block indices (ascending) — the block-max
-    bulk scorer's partial decode.  Offsets are cumsummed once."""
-    sizes = packed.block_gap_bytes.astype(np.int64) + packed.block_tf_bytes.astype(
-        np.int64
-    )
-    offs = np.zeros(len(sizes) + 1, dtype=np.int64)
-    np.cumsum(sizes, out=offs[1:])
-    ids: List[np.ndarray] = []
-    tfs: List[np.ndarray] = []
-    for bi in block_indices:
-        bi = int(bi)
-        off = int(offs[bi])
-        g_len = int(packed.block_gap_bytes[bi])
-        t_len = int(packed.block_tf_bytes[bi])
-        cnt = int(packed.block_count[bi])
-        gaps = varint_decode(packed.payload[off : off + g_len], cnt)
-        t = varint_decode(packed.payload[off + g_len : off + g_len + t_len], cnt)
-        first_rank = int(np.searchsorted(dl_ids, packed.block_first[bi]))
-        ids.append(dl_ids[first_rank + np.cumsum(gaps.astype(np.int64))])
-        tfs.append(t.astype(np.int64))
-    if not ids:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-    return np.concatenate(ids), np.concatenate(tfs)
+    bulk scorer's partial decode."""
+    return _decode_blocks(packed, block_indices, dl_ids)

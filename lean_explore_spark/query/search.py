@@ -576,7 +576,6 @@ class SearchEngine:
         tokens: Sequence[str],
         k: int = 50,
         threads: int | None = None,
-        _inline: bool = False,
     ) -> List[Tuple[int, float]]:
         """Hot-query driver path (r8, VERDICT r7 #5): the same
         per-unit kernel fanned across a FORKED process pool with θ0
@@ -596,8 +595,8 @@ class SearchEngine:
         top-k is a superset of the unit's global-top-k contribution
         (θ0 pruning only removes docs provably below the global θ),
         and the merge re-sorts by (score desc, doc_id asc) — asserted
-        in tests/test_distributed_search.py.  ``_inline=True`` runs
-        the same θ0-seeded plan serially in-process (test/debug)."""
+        in tests/test_distributed_search.py.  ``threads=1`` runs the
+        same θ0-seeded plan serially in-process, no pool needed."""
         k = min(k, self.n_docs)
         if k <= 0:
             return []
@@ -609,7 +608,7 @@ class SearchEngine:
                 self._doc_lens(u)  # prefetch (preload: dict hit)
             seed, seed_heap, theta0 = self._seed(by_unit, uindex, ctx, k)
             rest = sorted(u for u in by_unit if u != seed)
-            n = 1 if _inline else min(threads or (os.cpu_count() or 8), len(rest))
+            n = min(threads or (os.cpu_count() or 8), len(rest))
             locals_ = [seed_heap] + self._score_units(
                 by_unit, rest, uindex, ctx, k, theta0, n
             )
@@ -668,7 +667,7 @@ class SearchEngine:
         (r1 VERDICT: search_tokens(tokens, n_docs) scored every doc per
         query).  Scores are bit-identical to ``search_tokens`` for the
         same docs: same X matrix fill, same token-sequence-major
-        accumulation."""
+        accumulation (``QueryContext.score_rows``)."""
         cand = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
         if cand.size == 0:
             return {}
@@ -688,10 +687,7 @@ class SearchEngine:
                         ctx.avgdl, ctx.k1, ctx.b,
                     )
                     X[np.searchsorted(cand, d), uindex[t]] = x
-        score = np.zeros(cand.size, dtype=np.float64)
-        for u in ctx.token_uterm:  # token order, like the oracle
-            score += ctx.idfs[u] * (ctx.delta + X[:, u])
-        return {int(d): float(s) for d, s in zip(cand, score)}
+        return {int(d): float(s) for d, s in zip(cand, ctx.score_rows(X))}
 
     # -- distributed serving ----------------------------------------------
 
@@ -795,8 +791,8 @@ class SearchEngine:
 
                 seg, shard = key[0].as_py(), key[1].as_py()
                 dl_ids, dl_lens = S._read_doc_lens(roots[seg], shard)
-                # parse each term slice ONCE, share across queries
-                # (TermCursor holds the per-query scan state)
+                # parse each term slice ONCE, share across queries (a
+                # cursor only pairs a list with the query's term index)
                 packed = {t: p for t, _, p in S._packed_lists(tbl, scales[seg])}
                 qids, docs, scores = [], [], []
                 for qi, (ctx, uindex) in enumerate(qplans):

@@ -7,6 +7,20 @@ the doc space into ascending disjoint ranges, so a shared top-k heap
 sweeps shards in order (the distributed variant runs one task per
 shard and merges top-k — same algorithm, see query/search.py).
 
+Kernels (one per (segment, shard) unit; ``search._run_kernel`` picks):
+
+* ``bulk_score_shard`` — exhaustive and vectorized: every block of
+  every list kept;
+* ``blockmax_bulk_shard`` — block-max pruning at block granularity
+  (``keep`` per list), then the same body on the surviving blocks;
+* ``wand_shard`` — the per-doc DAAT cross-check kernel; the only one
+  that walks a ``TermCursor`` block by block.
+
+Both bulk kernels share one body, ``_score_kept``: decode through
+``codec.unpack_all`` / ``codec.unpack_selected`` → touched-row remap →
+X fill → ``QueryContext.score_rows`` → best-first heap push.  A
+``TermCursor`` decodes nothing until ``wand_shard`` starts its scan.
+
 Exactness contract (rank-identity, SURVEY.md §2.9):
 
 * A scored doc's BM25Plus value is computed with the oracle's exact
@@ -42,16 +56,17 @@ def _inflate(ub: float) -> float:
 
 
 class TermCursor:
-    """Cursor over one (term, shard) packed posting list; decodes one
-    block at a time, skips blocks via the directory."""
+    """One (term, shard) packed posting list and its query term index.
+    Construction decodes nothing: the bulk kernels decode the list
+    through ``codec``, and ``wand_shard`` starts the doc-at-a-time scan
+    (``_load_block(0)``) itself, decoding one block at a time and
+    skipping blocks via the directory."""
 
     __slots__ = (
         "packed",
         "uterm",
         "dl_ids",
-        "max_x",
         "n_blocks",
-        "_payload_offsets",
         "bi",
         "pos",
         "ids",
@@ -71,18 +86,11 @@ class TermCursor:
         self.uterm = uterm
         self.dl_ids = dl_ids
         self.n_blocks = len(packed.block_first)
-        self.max_x = float(packed.block_max_score.max()) if self.n_blocks else 0.0
-        sizes = packed.block_gap_bytes.astype(np.int64) + packed.block_tf_bytes.astype(
-            np.int64
-        )
-        self._payload_offsets = np.zeros(self.n_blocks + 1, dtype=np.int64)
-        np.cumsum(sizes, out=self._payload_offsets[1:])
         self.bi = -1
         self.pos = 0
         self.ids: Optional[np.ndarray] = None
         self.tfs: Optional[np.ndarray] = None
         self.doc = -1
-        self._load_block(0)
 
     def _load_block(self, bi: int) -> None:
         if bi >= self.n_blocks:
@@ -90,16 +98,7 @@ class TermCursor:
             self.ids = None
             self.doc = _INF
             return
-        p = self.packed
-        off = int(self._payload_offsets[bi])
-        g_len = int(p.block_gap_bytes[bi])
-        t_len = int(p.block_tf_bytes[bi])
-        cnt = int(p.block_count[bi])
-        gaps = codec.varint_decode(p.payload[off : off + g_len], cnt)
-        tfs = codec.varint_decode(p.payload[off + g_len : off + g_len + t_len], cnt)
-        first_rank = int(np.searchsorted(self.dl_ids, p.block_first[bi]))
-        self.ids = self.dl_ids[first_rank + np.cumsum(gaps.astype(np.int64))]
-        self.tfs = tfs.astype(np.int64)
+        self.ids, self.tfs = codec._decode_blocks(self.packed, [bi], self.dl_ids)
         self.bi = bi
         self.pos = 0
         self.doc = int(self.ids[0])
@@ -169,6 +168,15 @@ class QueryContext:
             s += idfs[u] * (delta + x[u])
         return s
 
+    def score_rows(self, X: np.ndarray) -> np.ndarray:
+        """``score_doc`` of every row of X (docs × unique terms), the
+        same token-sequence-major float64 sum — what the bulk kernels
+        and candidate scoring use."""
+        score = np.zeros(len(X), dtype=np.float64)
+        for u in self.token_uterm:  # token order, like the oracle
+            score += self.idfs[u] * (self.delta + X[:, u])
+        return score
+
     @property
     def c0(self) -> float:
         return self.score_doc(np.zeros(len(self.idfs), dtype=np.float64))
@@ -202,7 +210,9 @@ def wand_shard(
         tok_counts[u] += 1.0
     term_ub = np.zeros(n_u, dtype=np.float64)
     for cur in cursors:
-        term_ub[cur.uterm] = tok_counts[cur.uterm] * ctx.idfs[cur.uterm] * cur.max_x
+        cur._load_block(0)  # start the scan: the cursor decodes lazily
+        max_x = float(cur.packed.block_max_score.max()) if cur.n_blocks else 0.0
+        term_ub[cur.uterm] = tok_counts[cur.uterm] * ctx.idfs[cur.uterm] * max_x
 
     live = [c for c in cursors if not c.exhausted()]
     x = np.zeros(n_u, dtype=np.float64)
@@ -270,17 +280,18 @@ def wand_shard(
             live = [c for c in live if not c.exhausted()]
 
 
-def bulk_score_shard(
+def _score_kept(
     cursors: List[TermCursor],
+    keep: List[Optional[np.ndarray]],
     ctx: QueryContext,
     dl_ids: np.ndarray,
     dl_lens: np.ndarray,
     heap: List[Tuple[float, int, int]],
     k: int,
 ) -> None:
-    """Vectorized exhaustive scorer for one shard — used when WAND
-    cannot prune enough to pay for its per-doc Python loop (small
-    total posting count, or single dense term at sub-corpus k).
+    """The vectorized scoring body of both bulk kernels: decode each
+    cursor's kept blocks (``keep[i]`` ascending block indices, None =
+    every block), score the touched docs, push them best-first.
 
     This is literally the oracle's computation (oracle/bm25.py
     get_scores) restricted to the shard's touched docs: per unique
@@ -288,16 +299,17 @@ def bulk_score_shard(
     accumulates token-sequence-major over columns — float64 results
     are bit-identical to both the oracle and wand_shard.
     """
-    n_u = len(ctx.idfs)
     # touched-row discovery via a span-bounded bool mask + remap array
     # — replaces the old np.unique SORT over every decoded posting
     # (the p95 cost on hot Zipf terms) without allocating a
     # universe × terms matrix
     decoded = []  # (uterm, pos, x)
     touched = np.zeros(len(dl_ids), dtype=bool)
-    for cur in cursors:
-        # decode every block of every cursor (bulk = exhaustive)
-        d, t = codec.unpack_all(cur.packed, dl_ids)
+    for cur, blocks in zip(cursors, keep):
+        if blocks is None:
+            d, t = codec.unpack_all(cur.packed, dl_ids)
+        else:
+            d, t = codec.unpack_selected(cur.packed, blocks, dl_ids)
         if len(d) == 0:
             continue
         pos = np.searchsorted(dl_ids, d)
@@ -309,12 +321,10 @@ def bulk_score_shard(
     rows = np.flatnonzero(touched)  # ascending → doc ids ascending
     remap = np.empty(len(dl_ids), dtype=np.int64)
     remap[rows] = np.arange(len(rows))
-    Xt = np.zeros((len(rows), n_u), dtype=np.float64)
+    Xt = np.zeros((len(rows), len(ctx.idfs)), dtype=np.float64)
     for uterm, pos, x in decoded:
         Xt[remap[pos], uterm] = x
-    score = np.zeros(len(rows), dtype=np.float64)
-    for u in ctx.token_uterm:  # token order, like the oracle
-        score += ctx.idfs[u] * (ctx.delta + Xt[:, u])
+    score = ctx.score_rows(Xt)
     uniq = dl_ids[rows]
     # best-first by (score desc, doc asc); stop pushing once the heap
     # is full and the next candidate cannot enter
@@ -327,6 +337,21 @@ def bulk_score_shard(
             heapq.heapreplace(heap, entry)
         else:
             break  # sorted order: nothing later can enter either
+
+
+def bulk_score_shard(
+    cursors: List[TermCursor],
+    ctx: QueryContext,
+    dl_ids: np.ndarray,
+    dl_lens: np.ndarray,
+    heap: List[Tuple[float, int, int]],
+    k: int,
+) -> None:
+    """Vectorized exhaustive scorer for one shard — used when WAND
+    cannot prune enough to pay for its per-doc Python loop (small
+    total posting count, or single dense term at sub-corpus k): the
+    shared body with every block of every list kept."""
+    _score_kept(cursors, [None] * len(cursors), ctx, dl_ids, dl_lens, heap, k)
 
 
 def _windowed_max(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -416,40 +441,7 @@ def blockmax_bulk_shard(
                 bound * (1.0 + 1e-9) + 1e-12 >= theta
             )
 
-    decoded = []
-    touched = np.zeros(len(dl_ids), dtype=bool)
-    for i, cur in enumerate(cursors):
-        if keep[i] is None:
-            d, t = codec.unpack_all(cur.packed, dl_ids)
-        else:
-            d, t = codec.unpack_selected(cur.packed, keep[i], dl_ids)
-        if len(d) == 0:
-            continue
-        pos = np.searchsorted(dl_ids, d)
-        x = codec.bm25_tf_part(t, dl_lens[pos], ctx.avgdl, ctx.k1, ctx.b)
-        decoded.append((cur.uterm, pos, x))
-        touched[pos] = True
-    if not decoded:
-        return
-    rows = np.flatnonzero(touched)
-    remap = np.empty(len(dl_ids), dtype=np.int64)
-    remap[rows] = np.arange(len(rows))
-    Xt = np.zeros((len(rows), n_u), dtype=np.float64)
-    for uterm, pos, x in decoded:
-        Xt[remap[pos], uterm] = x
-    score = np.zeros(len(rows), dtype=np.float64)
-    for u in ctx.token_uterm:  # token order, like the oracle
-        score += ctx.idfs[u] * (ctx.delta + Xt[:, u])
-    uniq = dl_ids[rows]
-    order = np.lexsort((uniq, -score))
-    for idx in order:
-        entry = (float(score[idx]), -int(uniq[idx]), int(uniq[idx]))
-        if len(heap) < k:
-            heapq.heappush(heap, entry)
-        elif entry > heap[0]:
-            heapq.heapreplace(heap, entry)
-        else:
-            break
+    _score_kept(cursors, keep, ctx, dl_ids, dl_lens, heap, k)
 
 
 def finalize_topk(

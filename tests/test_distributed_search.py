@@ -171,7 +171,7 @@ def test_parallel_requires_preload_and_pool_reuse(spark, engine, tmp_path_factor
     with pytest.raises(RuntimeError, match="preload"):
         cold.search_tokens_parallel(tokens, 10, threads=2)
     # the theta0-seeded inline plan works cold (no fork needed)
-    assert cold.search_tokens_parallel(tokens, 10, _inline=True) == \
+    assert cold.search_tokens_parallel(tokens, 10, threads=1) == \
         engine.search_tokens(tokens, 10)
 
 

@@ -273,3 +273,23 @@ def test_rows_only_queries_are_deterministic(spark):
         b = _normalize(fn(spark, SF_ORACLE).toPandas())
         assert a.equals(b), name
         assert len(a) > 0, name
+
+
+def test_session_caches_drop_other_sessions(spark):
+    """The corpus caches are keyed by session: a call from a new
+    session unpersists and drops entries a previous (stopped) session
+    left behind, so neither its DataFrame nor its id can be served."""
+    from tests.conftest import SF_SMOKE
+
+    stale = {}
+    for i, cache in enumerate((E._DOCS_CACHE, E._EMB_CACHE)):
+        df = spark.range(3).cache()
+        df.count()
+        key = (-1, f"stale{i}")  # id() is never negative: another session
+        cache[key] = stale[key] = df
+    E._docs(spark, SF_SMOKE)
+    E._emb(spark, SF_SMOKE)
+    for cache in (E._DOCS_CACHE, E._EMB_CACHE):
+        assert not set(stale) & set(cache)
+        assert (id(spark), SF_SMOKE) in cache
+    assert not any(df.is_cached for df in stale.values())
