@@ -43,8 +43,9 @@ def verify(spark, index_dir: str) -> dict:
         .select("shard", "m.n_terms", "m.n_postings", "m.payload_bytes", "m.fingerprint")
         .collect()
     )
-    # recompute from payload bytes themselves (NOT the packer-emitted
-    # fp column — an fsck must not trust the thing it checks)
+    # recompute from the payload bytes themselves, never from what the
+    # packer counted while writing — an fsck must not trust the thing
+    # it checks
     actual = (
         spark.read.parquet(str(root / "postings"))
         .groupBy("shard")

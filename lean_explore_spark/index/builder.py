@@ -26,8 +26,9 @@ Scale rationale (the 100 TB story):
 * Checkpointed resume (north_rule): each shard commits independently —
   postings partition dir written with dynamic partition overwrite,
   then a manifest row (counts, payload bytes, order-independent
-  content fingerprint).  A killed build resumes by skipping manifest-
-  committed shards; rewriting a shard is idempotent.
+  content fingerprint).  The pack job itself computes that lineage
+  while it writes; nothing is read back.  A killed build resumes by
+  skipping manifest-committed shards; rewriting a shard is idempotent.
 * The final top-k query engine reads these partitions with shard +
   term-bucket pruning (query/search.py).
 
@@ -46,12 +47,14 @@ import shutil
 import time
 from dataclasses import dataclass
 from pathlib import Path
-from typing import List
+from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -67,6 +70,9 @@ from lean_explore_spark.index import codec
 from lean_explore_spark.operators import analyze as A
 from lean_explore_spark.pyfiles import ensure_py_files
 
+# The postings row, declared once.  The packer's Arrow schema and every
+# reader's column list derive from it; its list columns are the block
+# directory, named as the ``codec.PackedPostings`` fields they fill.
 POSTINGS_SCHEMA = StructType(
     [
         StructField("term", StringType()),
@@ -78,14 +84,28 @@ POSTINGS_SCHEMA = StructType(
         StructField("block_gap_bytes", ArrayType(IntegerType())),
         StructField("block_tf_bytes", ArrayType(IntegerType())),
         StructField("block_max_score", ArrayType(DoubleType())),
-        StructField("block_max_tf", ArrayType(IntegerType())),
         StructField("payload", BinaryType()),
     ]
 )
 
 
+def read_doc_lens(index_root: str, shard: int) -> Tuple[np.ndarray, np.ndarray]:
+    """One shard's doc_stats slice → (doc ids ascending, doc lengths),
+    int64: a single-directory pyarrow read, no Spark.  The packer (via
+    ``_worker_doc_lens``) and every query-side reader use it."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(
+        f"{index_root}/doc_stats/shard={shard}", columns=["doc_id", "doc_len"]
+    )
+    ids = tbl.column("doc_id").to_numpy().astype(np.int64, copy=False)
+    order = ids.argsort()
+    lens = tbl.column("doc_len").to_numpy().astype(np.int64, copy=False)
+    return ids[order], lens[order]
+
+
 # per-PYTHON-WORKER doc-stats cache: executors reuse worker processes
-# across tasks, so each (doc_stats_root, shard) slice is read from
+# across tasks, so each (index_root, shard) slice is read from
 # parquet once per worker instead of once per pack task (512 tasks ×
 # pq.read_table was a measurable slice of the pack stage).
 # The key carries a BUILD-UNIQUE token (stats.json mtime+hash, captured
@@ -96,23 +116,28 @@ POSTINGS_SCHEMA = StructType(
 _DL_WORKER_CACHE: dict = {}
 
 
-def _worker_doc_lens(doc_stats_root: str, shard: int, build_token: str = ""):
-    key = (doc_stats_root, shard, build_token)
+def _worker_doc_lens(index_root: str, shard: int, build_token: str = ""):
+    key = (index_root, shard, build_token)
     if key not in _DL_WORKER_CACHE:
         if len(_DL_WORKER_CACHE) >= 64:  # bound worker memory across waves
             _DL_WORKER_CACHE.clear()
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(
-            f"{doc_stats_root}/shard={shard}", columns=["doc_id", "doc_len"]
-        )
-        ids = t.column("doc_id").to_numpy()
-        order = ids.argsort()
-        _DL_WORKER_CACHE[key] = (
-            ids[order],
-            t.column("doc_len").to_numpy()[order],
-        )
+        _DL_WORKER_CACHE[key] = read_doc_lens(index_root, shard)
     return _DL_WORKER_CACHE[key]
+
+
+class _LineageParam(AccumulatorParam):
+    """Per-shard manifest lineage, ``{shard: (n_terms, n_postings,
+    payload_bytes, fingerprint)}``: counts add, fingerprints XOR (an
+    order-independent fold, so task order cannot change it)."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, other):
+        for shard, (t, n, nb, fp) in other.items():
+            t0, n0, nb0, fp0 = acc.get(shard, (0, 0, 0, 0))
+            acc[shard] = (t0 + t, n0 + n, nb0 + nb, fp0 ^ fp)
+        return acc
 
 
 def term_bucket(term: str, num_buckets: int) -> int:
@@ -293,7 +318,9 @@ class IndexBuilder:
             return set()
         return {int(r["shard"]) for r in rows if r["status"] == "committed"}
 
-    def _pack_plan(self, shards: List[int], avgdl: float) -> DataFrame:
+    def _pack_plan(
+        self, shards: List[int], avgdl: float, lineage=None
+    ) -> DataFrame:
         """The pack DataFrame for a wave of doc-shards (no action).
 
         Shuffle shape: ONE exchange — ``repartition(shard, bucket)`` +
@@ -303,11 +330,17 @@ class IndexBuilder:
         per term (~1 ms × |vocab × shards| groups dominated the r0
         build); per-task state is bounded by span × bucket share (the
         skew defuse).
+
+        Each task adds its per-shard lineage fold to ``lineage`` (a
+        ``_LineageParam`` accumulator); a plan built only to be
+        inspected gets a throwaway one.
         """
         spark = self.spark
         num_buckets = self.num_buckets
         block_size = self.block_size
         span = json.loads(self.paths.stats_json.read_text())["span"]
+        if lineage is None:
+            lineage = spark.sparkContext.accumulator({}, _LineageParam())
         # build-unique worker-cache token: mtime_ns + content hash of
         # stats.json identifies THIS build's doc_stats at this path
         _sj = self.paths.stats_json
@@ -331,37 +364,13 @@ class IndexBuilder:
             F.explode("tf_map").alias("term", "tf"),
         )
         shard_expr = F.expr(f"cast(doc_id div {span} as int)")
-        doc_stats_root = str(self.paths.doc_stats)
+        index_root = str(self.paths.root)
 
-        # pack output carries two lineage columns the manifest stage
-        # aggregates WITHOUT re-reading payloads: payload_bytes and a
-        # per-row md5 fold (fp).  Readers use POSTINGS_SCHEMA and never
-        # see them (parquet column pruning).
+        # the written row: the shard partition column, then the postings
         pack_schema = StructType(
-            [StructField("shard", IntegerType())]
-            + POSTINGS_SCHEMA.fields
-            + [
-                StructField("payload_bytes", LongType()),
-                StructField("fp", LongType()),
-            ]
+            [StructField("shard", IntegerType())] + POSTINGS_SCHEMA.fields
         )
-
-        cols = [
-            "shard",
-            "term",
-            "bucket",
-            "df_shard",
-            "block_first",
-            "block_last",
-            "block_count",
-            "block_gap_bytes",
-            "block_tf_bytes",
-            "block_max_score",
-            "block_max_tf",
-            "payload",
-            "payload_bytes",
-            "fp",
-        ]
+        arrow_schema = to_arrow_schema(pack_schema)
 
         def pack_stream(batches):
             # FULLY VECTORIZED packer (r2): the r1 streaming variant ran
@@ -371,9 +380,9 @@ class IndexBuilder:
             # A task's input is bounded (each (shard,bucket) group ≤
             # span × its bucket share), so we accumulate the task's
             # Arrow batches, then compute run/block boundaries, ranks,
-            # gaps, block metadata (np.maximum/add.reduceat) and ONE
-            # varint encode for all gaps + one for all tfs; the only
-            # per-run Python left is byte-slicing + md5 + row emit.
+            # gaps, block metadata (np.maximum.reduceat) and ONE varint
+            # encode for every payload; the only per-run Python left is
+            # the term's bucket and the payload's md5.
             import hashlib as _hl
 
             import numpy as np
@@ -423,7 +432,7 @@ class IndexBuilder:
             dls = np.empty(n, dtype=np.int64)
             for shard in np.unique(shard_np):
                 d_ids, d_lens = _worker_doc_lens(
-                    doc_stats_root, int(shard), build_token
+                    index_root, int(shard), build_token
                 )
                 m = shard_np == shard
                 pos = np.searchsorted(d_ids, ids[m])
@@ -437,94 +446,95 @@ class IndexBuilder:
             block_start = (offset_in_run % block_size) == 0
             bstart = np.flatnonzero(block_start)
             bend = np.append(bstart[1:], n)
-            block_first = ids[bstart]
-            block_last = ids[bend - 1]
             block_count = (bend - bstart).astype(np.int32)
-            block_max_score = np.maximum.reduceat(x, bstart)
-            block_max_tf = np.maximum.reduceat(tfs_np, bstart).astype(np.int32)
 
             # rank gaps (0 at block starts → blocks decode independently)
             d = np.zeros(n, dtype=np.int64)
             if n > 1:
                 d[1:] = ranks[1:] - ranks[:-1]
             d[block_start] = 0
-            g_bytes, g_sz = codec.varint_encode_sized(d.astype(np.uint64))
-            t_bytes, t_sz = codec.varint_encode_sized(tfs_np.astype(np.uint64))
-            g_off = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(g_sz, out=g_off[1:])
-            t_off = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(t_sz, out=t_off[1:])
-            block_gap_bytes = np.add.reduceat(g_sz, bstart).astype(np.int32)
-            block_tf_bytes = np.add.reduceat(t_sz, bstart).astype(np.int32)
+            # payload layout (codec): each block's gaps, then its tfs.
+            # Posting i of the block starting at posting h holds value
+            # slots h+i (gap) and h+count+i (tf), so ONE encode of the
+            # interleaved values yields every run's payload in order
+            blk = np.cumsum(block_start) - 1  # each posting's block
+            slot = np.arange(n, dtype=np.int64) + bstart[blk]
+            vals = np.empty(2 * n, dtype=np.uint64)
+            vals[slot] = d
+            vals[slot + block_count[blk]] = tfs_np
+            payload, v_sz = codec.varint_encode_sized(vals)
+            v_off = np.zeros(2 * n + 1, dtype=np.int64)
+            np.cumsum(v_sz, out=v_off[1:])
+            tf_at = v_off[2 * bstart + block_count]  # each block's tf bytes
+            p_off = v_off[2 * np.append(run_start, n)]  # each run's payload
 
-            # per-run block ranges (every run start IS a block start)
-            run_b0 = np.searchsorted(bstart, run_start)
-            run_b1 = np.append(run_b0[1:], len(bstart))
-
-            mv_g = memoryview(g_bytes)
-            mv_t = memoryview(t_bytes)
-            schema = pa.schema(
+            run_shard = shard_np[run_start]
+            run_terms = terms.take(pa.array(run_start)).to_pylist()
+            run_len = run_end - run_start
+            run_bytes = np.diff(p_off)
+            mv = memoryview(payload)
+            # same 15-hex-digit fold as jobs/verify_index.py's SQL
+            # (conv(substring(md5(payload),1,15),16,10))
+            fps = np.array(
                 [
-                    pa.field("shard", pa.int32()),
-                    pa.field("term", pa.string()),
-                    pa.field("bucket", pa.int32()),
-                    pa.field("df_shard", pa.int64()),
-                    pa.field("block_first", pa.list_(pa.int64())),
-                    pa.field("block_last", pa.list_(pa.int64())),
-                    pa.field("block_count", pa.list_(pa.int32())),
-                    pa.field("block_gap_bytes", pa.list_(pa.int32())),
-                    pa.field("block_tf_bytes", pa.list_(pa.int32())),
-                    pa.field("block_max_score", pa.list_(pa.float64())),
-                    pa.field("block_max_tf", pa.list_(pa.int32())),
-                    pa.field("payload", pa.binary()),
-                    pa.field("payload_bytes", pa.int64()),
-                    pa.field("fp", pa.int64()),
-                ]
+                    int(_hl.md5(mv[a:b]).hexdigest()[:15], 16)
+                    for a, b in zip(p_off[:-1].tolist(), p_off[1:].tolist())
+                ],
+                dtype=np.int64,
             )
-            out_rows: List[tuple] = []
-
-            def emit():
-                batch = pa.RecordBatch.from_pydict(
-                    dict(zip(cols, map(list, zip(*out_rows)))), schema=schema
+            # Manifest lineage rides this task, not a read-back job.
+            # The packer runs in the write job's result stage (after
+            # the repartition exchange), and Spark applies a result
+            # task's accumulator update once per partition, so a
+            # retried or speculative task cannot count twice.
+            fold = {}
+            for s in np.unique(run_shard).tolist():
+                m = run_shard == s
+                fold[s] = (
+                    int(m.sum()),
+                    int(run_len[m].sum()),
+                    int(run_bytes[m].sum()),
+                    int(np.bitwise_xor.reduce(fps[m])),
                 )
-                out_rows.clear()
-                return batch
+            lineage.add(fold)
 
-            n_runs = len(run_start)
-            for ri in range(n_runs):
-                b0, b1 = int(run_b0[ri]), int(run_b1[ri])
-                pieces = []
-                for b in range(b0, b1):
-                    rs, re = int(bstart[b]), int(bend[b])
-                    pieces.append(mv_g[g_off[rs] : g_off[re]])
-                    pieces.append(mv_t[t_off[rs] : t_off[re]])
-                payload = b"".join(pieces)
-                s = int(run_start[ri])
-                term_str = terms[s].as_py()
-                out_rows.append(
-                    (
-                        int(shard_np[s]),
-                        term_str,
-                        term_bucket(term_str, num_buckets),
-                        int(run_end[ri] - s),
-                        block_first[b0:b1].tolist(),
-                        block_last[b0:b1].tolist(),
-                        block_count[b0:b1].tolist(),
-                        block_gap_bytes[b0:b1].tolist(),
-                        block_tf_bytes[b0:b1].tolist(),
-                        block_max_score[b0:b1].tolist(),
-                        block_max_tf[b0:b1].tolist(),
-                        payload,
-                        len(payload),
-                        # same 15-hex-digit fold as the r1 SQL variant
-                        # (conv(substring(md5(payload),1,15),16,10))
-                        int(_hl.md5(payload).hexdigest()[:15], 16),
+            # one list entry per run, over its blocks
+            run_blocks = pa.array(
+                np.append(np.searchsorted(bstart, run_start), len(bstart)),
+                pa.int32(),
+            )
+            cols = {
+                "shard": run_shard,
+                "term": run_terms,
+                "bucket": [term_bucket(t, num_buckets) for t in run_terms],
+                "df_shard": run_len,
+                "block_first": ids[bstart],
+                "block_last": ids[bend - 1],
+                "block_count": block_count,
+                "block_gap_bytes": tf_at - v_off[2 * bstart],
+                "block_tf_bytes": v_off[2 * bend] - tf_at,
+                "block_max_score": np.maximum.reduceat(x, bstart),
+                # 64-bit offsets, then a checked cast: a task's payload
+                # past 2 GiB fails here instead of wrapping
+                "payload": pa.LargeBinaryArray.from_buffers(
+                    pa.large_binary(),
+                    len(run_start),
+                    [None, pa.py_buffer(p_off), pa.py_buffer(payload)],
+                ),
+            }
+
+            def column(field):
+                if pa.types.is_list(field.type):
+                    return pa.ListArray.from_arrays(
+                        run_blocks,
+                        pa.array(cols[field.name], field.type.value_type),
+                        type=field.type,
                     )
-                )
-                if len(out_rows) >= 65536:
-                    yield emit()
-            if out_rows:
-                yield emit()
+                return pa.array(cols[field.name]).cast(field.type)
+
+            yield pa.RecordBatch.from_arrays(
+                [column(f) for f in arrow_schema], schema=arrow_schema
+            )
 
         # explicit partition count: without it AQE coalesces this
         # shuffle toward 64MB partitions, capping pack parallelism well
@@ -545,69 +555,35 @@ class IndexBuilder:
         """Pack a wave of doc-shards in ONE Spark job: write the pack
         plan's output with dynamic partition overwrite (only this
         wave's shard=/bucket= dirs are replaced; each (shard, bucket)
-        lands in exactly one task → one file per partition dir), then
-        aggregate the per-shard manifest lineage from the tiny
-        pre-computed columns."""
-        spark = self.spark
-        packed = self._pack_plan(shards, avgdl)
+        lands in exactly one task → one file per partition dir).  The
+        per-shard manifest lineage comes back from the same job's
+        tasks through an accumulator."""
+        lineage = self.spark.sparkContext.accumulator({}, _LineageParam())
         (
-            packed.write.partitionBy("shard", "bucket")
+            self._pack_plan(shards, avgdl, lineage)
+            .write.partitionBy("shard", "bucket")
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .parquet(str(self.paths.postings))
         )
-
-        # per-shard lineage metrics from what was actually written —
-        # the packer pre-computed payload_bytes + fp per row, so this
-        # pass reads FOUR small columns (parquet column pruning skips
-        # the payloads: r1's re-read of everything just written was the
-        # manifest stage's scaling floor)
-        out: List[dict] = []
         committed_at = time.time()
-        read_schema = StructType(
-            [
-                StructField("df_shard", LongType()),
-                StructField("payload_bytes", LongType()),
-                StructField("fp", LongType()),
-                StructField("shard", IntegerType()),
-            ]
-        )
-        written = (
-            spark.read.schema(read_schema)
-            .parquet(str(self.paths.postings))
-            .where(F.col("shard").isin([int(s) for s in shards]))
-        )
-        rows = (
-            written.groupBy("shard")
-            .agg(
-                F.count("*").alias("n_terms"),
-                F.sum("df_shard").alias("n_postings"),
-                F.sum("payload_bytes").alias("payload_bytes"),
-                # order-independent content fingerprint; bit_xor cannot
-                # overflow (Spark 4 ANSI mode makes sum() throw on it)
-                F.expr("bit_xor(fp)").alias("fingerprint"),
-            )
-            .collect()
-        )
-        by_shard = {int(r["shard"]): r for r in rows}
+        out: List[dict] = []
         for shard in shards:
-            r = by_shard.get(int(shard))
+            n_terms, n_postings, payload_bytes, fingerprint = lineage.value.get(
+                int(shard), (0, 0, 0, 0)
+            )
             out.append(
                 {
                     "shard": int(shard),
-                    "n_terms": int(r["n_terms"]) if r else 0,
-                    "n_postings": int(r["n_postings"] or 0) if r else 0,
-                    "payload_bytes": int(r["payload_bytes"] or 0) if r else 0,
-                    "fingerprint": int(r["fingerprint"] or 0) if r else 0,
+                    "n_terms": n_terms,
+                    "n_postings": n_postings,
+                    "payload_bytes": payload_bytes,
+                    "fingerprint": fingerprint,
                     "status": "committed",
                     "committed_at": committed_at,
                 }
             )
         return out
-
-    def pack_shard(self, shard: int, avgdl: float) -> dict:
-        """Single-shard wave (kept for the resume/kill tests)."""
-        return self.pack_shards([shard], avgdl)[0]
 
     def _append_manifest(self, rows: List[dict]) -> None:
         pdf = pd.DataFrame(rows)
@@ -689,23 +665,3 @@ class IndexBuilder:
         stats["stage_timings"] = timings
         return stats
 
-
-def build_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    out_dir: str,
-    *,
-    stem: bool = True,
-    num_shards: int = 8,
-    num_buckets: int = 8,
-    block_size: int = codec.BLOCK_SIZE,
-    resume: bool = True,
-) -> dict:
-    return IndexBuilder(
-        spark,
-        out_dir,
-        stem=stem,
-        num_shards=num_shards,
-        num_buckets=num_buckets,
-        block_size=block_size,
-    ).build(docs, resume=resume)

@@ -19,16 +19,17 @@ Layout per (term, doc-shard) row:
   ``block_first`` (an EXTERNAL id, kept for WAND's directory
   galloping) in ``dl_ids`` — so every block still decodes
   independently, which block-max skipping requires;
-* per-block directory arrays (kept as typed parquet columns, NOT in
-  the binary payload, so Catalyst can prune them): first/last doc,
-  posting count, gap/tf byte lengths, and ``max_score`` = the maximum
-  of the BM25 tf-part  tf·(k1+1)/(k1·(1−b+b·dl/avgdl)+tf)  over the
+* six per-block directory arrays (kept as typed parquet columns, NOT
+  in the binary payload, so Catalyst can prune them): ``block_first``
+  and ``block_last`` (first/last doc id), ``block_count`` (postings),
+  ``block_gap_bytes`` and ``block_tf_bytes`` (byte lengths), and
+  ``block_max_score`` = the maximum of the BM25 tf-part  tf·(k1+1)/(k1·(1−b+b·dl/avgdl)+tf)  over the
   block's postings, computed at build time with true doc lengths.
   Multiplying by idf (known only at query time from the dictionary)
   gives the exact per-term block upper bound.
 
-Encoding: the builder's packer (index/builder.py) encodes every block
-of a shard's run in one ``varint_encode_sized`` pass; ``pack_postings``
+Encoding: the builder's packer (index/builder.py) encodes every
+payload of a pack task in one ``varint_encode_sized`` pass; ``pack_postings``
 here packs one list block by block (the reference the tests use).
 Decoding: ``_decode_blocks`` is the one reader of the layout.  It
 decodes any ascending set of a list's blocks in one vectorized
@@ -132,7 +133,6 @@ class PackedPostings:
     block_gap_bytes: np.ndarray  # int32[n_blocks]
     block_tf_bytes: np.ndarray  # int32[n_blocks]
     block_max_score: np.ndarray  # float64[n_blocks] (tf-part max)
-    block_max_tf: np.ndarray  # int32[n_blocks]
     payload: "bytes | np.ndarray"  # uint8; readers hold numpy views
 
 
@@ -169,7 +169,6 @@ def pack_postings(
     gap_bytes = np.empty(n_blocks, dtype=np.int32)
     tf_bytes = np.empty(n_blocks, dtype=np.int32)
     max_scores = np.empty(n_blocks, dtype=np.float64)
-    max_tfs = np.empty(n_blocks, dtype=np.int32)
     chunks: List[bytes] = []
     for bi in range(n_blocks):
         lo, hi = bi * block_size, min((bi + 1) * block_size, n)
@@ -185,7 +184,6 @@ def pack_postings(
         gap_bytes[bi] = len(g)
         tf_bytes[bi] = len(t)
         max_scores[bi] = float(scores[lo:hi].max())
-        max_tfs[bi] = int(tfs[lo:hi].max())
         chunks.append(g)
         chunks.append(t)
     return PackedPostings(
@@ -196,7 +194,6 @@ def pack_postings(
         block_gap_bytes=gap_bytes,
         block_tf_bytes=tf_bytes,
         block_max_score=max_scores,
-        block_max_tf=max_tfs,
         payload=b"".join(chunks),
     )
 

@@ -43,6 +43,7 @@ Scale notes (100 TB story):
 
 from __future__ import annotations
 
+import dataclasses
 import heapq
 import json
 import math
@@ -55,32 +56,29 @@ from typing import Dict, Iterator, List, Optional, Sequence, Tuple
 import numpy as np
 import pyarrow as pa
 import pyarrow.dataset as ds
-import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 from lean_explore_spark.functions.tokenizer import tokenize, tokenize_stem
 from lean_explore_spark.index import codec
-from lean_explore_spark.index.builder import POSTINGS_SCHEMA, term_bucket
+from lean_explore_spark.index.builder import (
+    POSTINGS_SCHEMA,
+    read_doc_lens,
+    term_bucket,
+)
 from lean_explore_spark.query import wand
 
 Unit = Tuple[int, int]  # (segment index, shard)
 
 
-# postings columns a reader needs (the lineage columns ``fp`` and
-# ``payload_bytes`` are never read) and the block-directory list
-# columns in ``codec.PackedPostings`` field order
-_BLOCK_DIR = (
-    ("block_first", np.int64),
-    ("block_last", np.int64),
-    ("block_count", np.int32),
-    ("block_gap_bytes", np.int32),
-    ("block_tf_bytes", np.int32),
-    ("block_max_score", np.float64),
-    ("block_max_tf", np.int32),
-)
-_POSTINGS_COLS = ["term", "shard", "df_shard"] + [c for c, _ in _BLOCK_DIR] + [
-    "payload"
+# a reader's postings columns (``POSTINGS_SCHEMA`` plus the shard
+# partition, less the bucket it was pruned on) and, of those, the
+# block-directory lists in ``codec.PackedPostings`` field order, which
+# ``_packed_lists`` fills positionally after ``count``
+_POSTINGS_COLS = ["shard"] + [n for n in POSTINGS_SCHEMA.names if n != "bucket"]
+_BLOCK_DIR = [
+    f.name for f in dataclasses.fields(codec.PackedPostings)
+    if f.name.startswith("block_")
 ]
 
 
@@ -116,9 +114,9 @@ def _packed_lists(
         shards = batch.column("shard").to_numpy().tolist()
         counts = batch.column("df_shard").to_numpy().tolist()
         dirs = []
-        for name, dtype in _BLOCK_DIR:
+        for name in _BLOCK_DIR:
             col = batch.column(name)
-            vals = col.values.to_numpy().astype(dtype, copy=False)
+            vals = col.values.to_numpy()
             if name == "block_max_score" and bm_scale != 1.0:
                 vals = vals * bm_scale
             dirs.append((vals, col.offsets.to_numpy().tolist()))
@@ -136,18 +134,6 @@ def _add_dfs(dfs: Dict[str, int], tbl: pa.Table) -> None:
     terms = tbl.column("term").to_numpy(zero_copy_only=False).tolist()
     for t, df in zip(terms, tbl.column("df").to_numpy().tolist()):
         dfs[t] = dfs.get(t, 0) + df
-
-
-def _read_doc_lens(seg_root: str, shard: int) -> Tuple[np.ndarray, np.ndarray]:
-    """One (segment, shard) doc_stats slice → (doc ids ascending, doc
-    lengths): a single-directory parquet read, no Spark."""
-    tbl = pq.read_table(
-        f"{seg_root}/doc_stats/shard={shard}", columns=["doc_id", "doc_len"]
-    )
-    ids = tbl.column("doc_id").to_numpy().astype(np.int64, copy=False)
-    order = ids.argsort()
-    lens = tbl.column("doc_len").to_numpy().astype(np.int64, copy=False)
-    return ids[order], lens[order]
 
 
 def _run_kernel(
@@ -344,7 +330,7 @@ class SearchEngine:
     def _doc_lens(self, unit: Unit) -> Tuple[np.ndarray, np.ndarray]:
         if unit not in self._dl_cache:
             seg, shard = unit
-            self._dl_cache[unit] = _read_doc_lens(str(self.roots[seg]), shard)
+            self._dl_cache[unit] = read_doc_lens(str(self.roots[seg]), shard)
             if not self._preloaded:
                 # LRU-bound in cold mode (preload pins by design)
                 while len(self._dl_cache) > self._dl_cache_bound:
@@ -786,11 +772,12 @@ class SearchEngine:
             def score_unit(key, tbl):
                 import pyarrow as pa
 
+                from lean_explore_spark.index.builder import read_doc_lens
                 from lean_explore_spark.query import search as S
                 from lean_explore_spark.query import wand as W
 
                 seg, shard = key[0].as_py(), key[1].as_py()
-                dl_ids, dl_lens = S._read_doc_lens(roots[seg], shard)
+                dl_ids, dl_lens = read_doc_lens(roots[seg], shard)
                 # parse each term slice ONCE, share across queries (a
                 # cursor only pairs a list with the query's term index)
                 packed = {t: p for t, _, p in S._packed_lists(tbl, scales[seg])}

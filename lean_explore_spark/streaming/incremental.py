@@ -341,6 +341,55 @@ def compact(spark: SparkSession, index_root: str, out_dir: str, **kw) -> dict:
     return _fold_forward_dirs(spark, parts, out_dir, **kw)
 
 
+def _sweep(index_root, names) -> None:
+    """Delete the segment dirs ``names`` that are not live, detaching
+    each UNDER the manifest lock and deleting it outside (ADVICE r6
+    medium): liveness is re-checked per name while holding
+    ``_manifest_lock`` and the dir is atomically renamed to a
+    compaction-owned ``.tmp-sweep-`` name, so a checkpoint-reset sink
+    that re-registers a swept name keeps its now-live dir —
+    registration and detachment are mutually exclusive, yet the
+    expensive rmtree runs unlocked.
+
+    The sweep list loses only the names resolved here: live again,
+    verifiably detached, or already absent — never entries a
+    concurrent writer added (ADVICE r6 low #2).  A failed rename
+    leaves its name listed for the next run, and a ``.tmp-sweep-`` dir
+    left by a failed rmtree is re-derivable garbage by name shape
+    (ADVICE r6 low #1)."""
+    import shutil
+
+    seg_root = _seg_root(index_root)
+    doomed = []
+    with _manifest_lock(index_root):
+        st = _manifest_state(index_root)
+        live_now = set(st["live"])
+        resolved = set()
+        for n in names:
+            if n in live_now:
+                resolved.add(n)  # resurrected — keep dir, delist sweep
+                continue
+            if n.startswith(".tmp-"):
+                doomed.append(seg_root / n)  # already compaction-owned
+                continue
+            tmp_p = seg_root / (".tmp-sweep-" + n.split("=", 1)[-1])
+            try:
+                if tmp_p.exists():
+                    shutil.rmtree(tmp_p, ignore_errors=True)
+                os.rename(seg_root / n, tmp_p)
+            except FileNotFoundError:
+                resolved.add(n)  # verified gone already
+                continue
+            except OSError:
+                continue  # rename failed → stays on sweep list
+            doomed.append(tmp_p)
+            resolved.add(n)
+        if resolved:
+            _write_state(index_root, st["live"], set(st["sweep"]) - resolved)
+    for p in doomed:  # crash here → .tmp-sweep- swept next run
+        shutil.rmtree(p, ignore_errors=True)
+
+
 def compact_tiered(
     spark: SparkSession,
     index_root: str,
@@ -420,46 +469,8 @@ def compact_tiered(
         _write_state(
             root, live, [n for n in st["sweep"] if n in victim_names]
         )
-    # Detach victims UNDER the lock, delete outside it (ADVICE r6
-    # medium): liveness is re-checked per victim while holding
-    # _manifest_lock and the dir is atomically os.rename()d to a
-    # compaction-owned ``.tmp-sweep-`` name, so a checkpoint-reset sink
-    # that re-registers a sweep-listed name between collection and
-    # deletion keeps its now-live dir — registration and detachment are
-    # mutually exclusive, yet the expensive rmtree still runs unlocked.
-    # A name leaves the sweep list only once its plain-named dir is
-    # verifiably gone (renamed away, or already absent); if the rename
-    # itself fails the name stays listed for the next run, and if the
-    # rmtree below fails the leftover ``.tmp-sweep-`` dir is
-    # re-derivable garbage by name shape (ADVICE r6 low #1).
     if victim_names:
-        doomed_paths = []
-        with _manifest_lock(root):
-            live_now = set(_manifest_state(root)["live"])
-            swept = set()
-            for p in victims:
-                if p.name in live_now:
-                    continue  # resurrected since collection — keep
-                if p.name.startswith(".tmp-"):
-                    doomed_paths.append(p)  # already compaction-owned
-                    continue
-                tmp_p = p.parent / (".tmp-sweep-" + p.name.split("=", 1)[-1])
-                try:
-                    if tmp_p.exists():
-                        shutil.rmtree(tmp_p, ignore_errors=True)
-                    os.rename(p, tmp_p)
-                except FileNotFoundError:
-                    swept.add(p.name)  # verified gone already
-                    continue
-                except OSError:
-                    continue  # rename failed → stays on sweep list
-                doomed_paths.append(tmp_p)
-                swept.add(p.name)
-            if swept:
-                st2 = _manifest_state(root)
-                _write_state(root, st2["live"], set(st2["sweep"]) - swept)
-        for p in doomed_paths:
-            shutil.rmtree(p, ignore_errors=True)
+        _sweep(root, [p.name for p in victims])
     if len(live) <= max_segments:
         return {"merged": [], "remaining": len(live)}
 
@@ -485,40 +496,10 @@ def compact_tiered(
         # the merge build stay visible; the inputs go on the sweep list
         fresh = set(_manifest_state(root)["live"])
         _write_state(root, (fresh - set(tier)) | {merged_name}, tier)
-    # Delete the delisted inputs with the same detach-under-lock
-    # pattern (ADVICE r6 medium): re-check liveness per input while
-    # holding the lock — a checkpoint-reset sink can re-register a
-    # segment whose name equals a tier input during this window
-    # (epoch-id reuse); such a dir is live again and must survive —
-    # then atomically rename the rest to ``.tmp-sweep-`` names and
-    # rmtree outside the lock.  The sweep-list update SUBTRACTS only
-    # the names this compaction resolved (resurrected or verifiably
-    # detached), preserving entries a concurrent writer added since
-    # the flip (ADVICE r6 low #2: intersection dropped them).
-    with _manifest_lock(root):
-        st = _manifest_state(root)
-        live_now = set(st["live"])
-        doomed_paths = []
-        resolved = set()
-        for n in tier:
-            if n in live_now:
-                resolved.add(n)  # resurrected — keep dir, delist sweep
-                continue
-            tmp_p = seg_root / (".tmp-sweep-" + n.split("=", 1)[-1])
-            try:
-                if tmp_p.exists():
-                    shutil.rmtree(tmp_p, ignore_errors=True)
-                os.rename(seg_root / n, tmp_p)
-            except FileNotFoundError:
-                resolved.add(n)  # verified gone already
-                continue
-            except OSError:
-                continue  # rename failed → stays on sweep list
-            doomed_paths.append(tmp_p)
-            resolved.add(n)
-        _write_state(root, st["live"], set(st["sweep"]) - resolved)
-    for p in doomed_paths:  # crash here → .tmp-sweep- swept next run
-        shutil.rmtree(p, ignore_errors=True)
+    # the delisted inputs go the same way: a checkpoint-reset sink can
+    # re-register a tier input's name during this window (epoch-id
+    # reuse), and such a dir is live again and must survive
+    _sweep(root, tier)
     return {
         "merged": list(tier),
         "remaining": len(live_segments(root)),

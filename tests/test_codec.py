@@ -66,7 +66,6 @@ def test_pack_roundtrip(postings, block_size, data):
         hi = min(lo + block_size, len(ids))
         assert packed.block_first[bi] == ids[lo]
         assert packed.block_last[bi] == ids[hi - 1]
-        assert packed.block_max_tf[bi] == tfs[lo:hi].max()
         assert packed.block_max_score[bi] == scores[lo:hi].max()
         # upper bound property: no posting in the block beats max_score
         assert np.all(scores[lo:hi] <= packed.block_max_score[bi])

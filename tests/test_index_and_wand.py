@@ -3,6 +3,9 @@ oracle (SURVEY.md §5 plan #2/#4/#5), plus resume/checkpoint tests."""
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import duckdb
 import numpy as np
 import pytest
@@ -11,7 +14,7 @@ from lean_explore_spark.functions.tokenizer import tokenize_stem
 from lean_explore_spark.index.builder import IndexBuilder
 from lean_explore_spark.oracle import bm25 as oracle
 from lean_explore_spark.query.search import SearchEngine
-from tests.conftest import SF_ORACLE
+from tests.conftest import REPO, SF_ORACLE
 
 QUERIES = [
     "fast table scan merge join",
@@ -99,7 +102,7 @@ def test_resume_reproduces_identical_index(spark, tmp_path):
     info = b.write_staging(docs)
     stats = b.write_doc_stats(info)
     for shard in (0, 1):
-        b._append_manifest([b.pack_shard(shard, avgdl=stats["avgdl"])])
+        b._append_manifest(b.pack_shards([shard], avgdl=stats["avgdl"]))
     # resume must pack only shards 2,3 and converge to the same index
     b.build(docs, resume=True)
 
@@ -190,7 +193,6 @@ def test_vectorized_packer_rows_equal_reference_pack(spark, tmp_path):
         assert list(row["block_gap_bytes"]) == want.block_gap_bytes.tolist()
         assert list(row["block_tf_bytes"]) == want.block_tf_bytes.tolist()
         assert list(row["block_max_score"]) == want.block_max_score.tolist()
-        assert list(row["block_max_tf"]) == want.block_max_tf.tolist()
         assert int(row["df_shard"]) == want.count
 
 
@@ -198,9 +200,8 @@ def test_verify_index_fsck(spark, index_dir, tmp_path):
     """jobs/verify_index recomputes per-shard lineage from payload
     bytes and matches the manifest; a corrupted payload is caught."""
     import shutil
-    import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from verify_index import verify
 
     out = verify(spark, index_dir)
@@ -228,6 +229,77 @@ def test_verify_index_fsck(spark, index_dir, tmp_path):
         crc.unlink()
     out2 = verify(spark, str(broken))
     assert not out2["ok"] and out2["mismatches"]
+
+
+def test_pack_shards_reads_no_postings_back(spark, tmp_path, monkeypatch):
+    """The manifest lineage comes from the pack job's own tasks: no
+    parquet read opened during ``pack_shards`` points into postings/."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tests.conftest import SF_SMOKE
+
+    out = tmp_path / "idx"
+    out.mkdir()
+    b = IndexBuilder(spark, str(out), num_shards=2, num_buckets=2)
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    stats = b.write_doc_stats(b.write_staging(docs))
+
+    opened = []
+    real_parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **kw):
+        opened.extend(Path(p).resolve() for p in paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    rows = b.pack_shards([0, 1], avgdl=stats["avgdl"])
+    monkeypatch.undo()
+
+    postings = (out / "postings").resolve()
+    assert opened  # the staging read went through the recorder
+    assert not [p for p in opened if p == postings or postings in p.parents]
+    assert [r["shard"] for r in rows] == [0, 1]
+    assert all(r["n_terms"] > 0 and r["payload_bytes"] > 0 for r in rows)
+
+
+def test_wave_lineage_equals_one_wave_build(spark, index_dir, tmp_path):
+    """Packed one shard per job, the index passes the fsck and commits
+    the same manifest lineage as the one-job build of ``index_dir``."""
+    sys.path.insert(0, str(REPO / "jobs"))
+    from verify_index import verify
+
+    out = tmp_path / "waves"
+    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
+    IndexBuilder(
+        spark, str(out), stem=True, num_shards=4, num_buckets=4, block_size=32
+    ).build(docs, resume=False, wave_size=1)
+
+    assert verify(spark, str(out))["ok"]
+
+    def lineage(d):
+        rows = spark.read.parquet(f"{d}/manifest").drop("committed_at")
+        return sorted(tuple(r) for r in rows.collect())
+
+    waves = lineage(out)
+    assert len(waves) == 4
+    assert waves == lineage(index_dir)
+
+
+def test_postings_files_hold_exactly_the_schema(index_dir):
+    """Every written postings file holds the ``POSTINGS_SCHEMA`` columns
+    less its partition columns, in order — nothing else."""
+    import pyarrow.parquet as pq
+
+    from lean_explore_spark.index.builder import POSTINGS_SCHEMA
+
+    root = Path(index_dir) / "postings"
+    files = list(root.rglob("*.parquet"))
+    assert files
+    for f in files:
+        parts = [d.split("=", 1)[0] for d in f.relative_to(root).parts[:-1]]
+        assert parts == ["shard", "bucket"]
+        want = [n for n in POSTINGS_SCHEMA.names if n not in parts]
+        assert pq.read_schema(f).names == want
 
 
 def test_rebuild_same_path_invalidates_worker_cache(spark, tmp_path):

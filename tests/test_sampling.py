@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 from lean_explore_spark.operators import textstats as T
-from tests.conftest import SF_ORACLE
+from tests.conftest import REPO, SF_ORACLE
 
 
 @pytest.fixture(scope="module")
@@ -101,7 +101,7 @@ def test_pipeline_demo_end_to_end(spark, tmp_path):
     queries over exactly the surviving docs."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from pipeline_demo import run_pipeline
 
     from lean_explore_spark.query.search import SearchEngine
@@ -136,7 +136,7 @@ def test_pipeline_demo_default_skips_quality_stage(spark, tmp_path):
     corpus-wide per-language window+join must not run at all."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     import lean_explore_spark.operators.textstats as T
     from pipeline_demo import run_pipeline
 
@@ -171,7 +171,7 @@ def test_pipeline_demo_single_pass(spark, tmp_path):
     (c) the stage cache is released on return."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from pipeline_demo import run_pipeline
 
     import pyspark.sql.functions as F
@@ -253,7 +253,7 @@ def test_pipeline_span_cut_removes_injected_duplication(spark, tmp_path):
     index serves exactly the survivors."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from pipeline_demo import run_pipeline
 
     def seq(lo, n):
@@ -289,7 +289,7 @@ def test_pipeline_line_dedup_stage(spark, tmp_path):
     and the stage count matches the standalone operator."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from pipeline_demo import run_pipeline
 
     from lean_explore_spark.operators import dedup as D
@@ -329,7 +329,7 @@ def test_pipeline_pii_stage(spark, tmp_path):
     corpus contains the typed tokens, not the raw PII."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from pipeline_demo import run_pipeline
 
     def seq(lo, n):
@@ -372,7 +372,7 @@ def test_pipeline_decontaminate_stage(spark, tmp_path):
     the after_decontaminate observer and matching the standalone op."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from pipeline_demo import run_pipeline
 
     from lean_explore_spark.operators import dedup as D
@@ -419,7 +419,7 @@ def test_pipeline_demo_assembly_stages(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from pipeline_demo import run_pipeline
 
     from lean_explore_spark.operators import classifier as CL
@@ -495,7 +495,7 @@ def test_pipeline_bpe_pack_finale(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from pipeline_demo import run_pipeline
     from verify_index import verify_packed
 
@@ -554,7 +554,7 @@ def test_pipeline_bpe_pack_finale(spark, tmp_path):
 def test_pipeline_bpe_requires_shard_emit(spark, tmp_path):
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     import pytest as _pytest
     from pipeline_demo import run_pipeline
 

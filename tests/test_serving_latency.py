@@ -13,9 +13,9 @@ import pytest
 
 from lean_explore_spark.index.builder import IndexBuilder
 from lean_explore_spark.query.search import SearchEngine
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
-sys.path.insert(0, "/root/repo/jobs")
+sys.path.insert(0, str(REPO / "jobs"))
 
 
 @pytest.fixture(scope="module")

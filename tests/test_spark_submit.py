@@ -16,7 +16,7 @@ import subprocess
 import pytest
 
 from lean_explore_spark.index.builder import IndexBuilder
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
@@ -36,7 +36,7 @@ def test_spark_submit_pyfiles_build_matches_in_process(spark, tmp_path):
         "local[4]",
         "--py-files",
         build_zip(),
-        "/root/repo/jobs/build_index_job.py",
+        str(REPO / "jobs" / "build_index_job.py"),
         "--input",
         f"{SF_SMOKE}/documents.parquet",
         "--output",
@@ -84,7 +84,7 @@ def test_sigkill_mid_build_then_resume_is_byte_identical(spark, tmp_path):
     out = tmp_path / "killidx"
     cmd = [
         sys.executable,
-        "/root/repo/jobs/build_index_job.py",
+        str(REPO / "jobs" / "build_index_job.py"),
         "--input", f"{SF_ORACLE}/documents.parquet",
         "--output", str(out),
         "--shards", "8",

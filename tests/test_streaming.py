@@ -15,6 +15,7 @@ from lean_explore_spark.oracle import bm25 as oracle
 from lean_explore_spark.query.search import SearchEngine
 from lean_explore_spark.sources import pages as P
 from lean_explore_spark.streaming import incremental as I
+from tests.conftest import REPO
 
 QUERIES = ["the data page", "compress encode block", "theorem definition group"]
 
@@ -308,6 +309,27 @@ def test_sweep_is_explicit_not_inferred(spark, tiny_root):
     assert sorted(I.live_segments(root)) == ["seg=10+11", "seg=12"]
 
 
+def test_sweep_keeps_live_names_and_delists_them(tmp_path):
+    """The detach-under-lock helper both compaction sweeps use: a name
+    that is live again keeps its dir and leaves the sweep list; a dead
+    one is deleted and delisted; a listed name it was not given stays
+    listed."""
+    root = tmp_path / "idx"
+    seg_root = root / "segments"
+    for name in ("seg=1", "seg=2", "seg=3"):
+        (seg_root / name).mkdir(parents=True)
+        (seg_root / name / "part.parquet").write_bytes(b"x")
+    I._write_state(root, ["seg=1"], ["seg=1", "seg=2", "seg=3"])
+
+    I._sweep(root, ["seg=1", "seg=2"])
+
+    assert (seg_root / "seg=1" / "part.parquet").exists()  # live: kept
+    assert not (seg_root / "seg=2").exists()
+    assert (seg_root / "seg=3").exists()
+    assert not list(seg_root.glob(".tmp-sweep-*"))
+    assert I._manifest_state(root) == {"live": ["seg=1"], "sweep": ["seg=3"]}
+
+
 def test_register_threads_never_lost_during_compaction(spark, tiny_root, streamed):
     """Real-interleaving stress for the r5 manifest lock: 4 threads
     register out-of-band segments in a loop while compact_tiered runs
@@ -414,7 +436,7 @@ def test_segment_fsck(spark, streamed, tmp_path):
     import shutil
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from verify_index import verify_segments
 
     _, index_root, _ = streamed
