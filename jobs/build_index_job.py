@@ -20,6 +20,8 @@ import sys
 import time
 from pathlib import Path
 
+import pyarrow.parquet as pq
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from lean_explore_spark.index.builder import IndexBuilder  # noqa: E402
@@ -70,16 +72,18 @@ def main(argv=None) -> dict:
     ).build(docs, resume=args.resume, wave_size=args.wave_size)
     wall = time.time() - t0
 
-    manifest = spark.read.parquet(f"{args.output}/manifest")
-    m = manifest.groupBy().sum("n_postings", "payload_bytes").collect()[0]
+    # the builder writes its manifest on the driver; read it the same way
+    m = pq.read_table(
+        f"{args.output}/manifest", columns=["n_postings", "payload_bytes"]
+    ).to_pydict()
     out = {
         "wall_sec": round(wall, 3),
         "n_docs": stats["n_docs"],
         "docs_per_sec": round(stats["n_docs"] / wall, 1),
         "total_tokens": stats["total_tokens"],
         "tokens_per_sec": round(stats["total_tokens"] / wall, 1),
-        "n_postings": int(m["sum(n_postings)"]),
-        "payload_bytes": int(m["sum(payload_bytes)"]),
+        "n_postings": sum(m["n_postings"]),
+        "payload_bytes": sum(m["payload_bytes"]),
         "stage_timings": stats.get("stage_timings", {}),
     }
     print(json.dumps(out))

@@ -23,12 +23,16 @@ Scale rationale (the 100 TB story):
 * One tokenization pass: the staging forward index is written once;
   doc stats and every packing wave read from it (columnar, pruned to
   their shard partition — no re-tokenization, no full-input rescans).
-* Checkpointed resume (north_rule): each shard commits independently —
-  postings partition dir written with dynamic partition overwrite,
-  then a manifest row (counts, payload bytes, order-independent
-  content fingerprint).  The pack job itself computes that lineage
-  while it writes; nothing is read back.  A killed build resumes by
-  skipping manifest-committed shards; rewriting a shard is idempotent.
+* Checkpointed resume (north_rule): each wave of shards commits
+  independently — postings partition dirs written with dynamic
+  partition overwrite, then ONE manifest file per wave, written by the
+  driver (no Spark job) and made visible by an atomic rename: a row
+  per shard with counts, payload bytes and an order-independent
+  content fingerprint, folded by the pack job itself.  A killed build
+  resumes by skipping manifest-committed shards; rewriting a shard is
+  idempotent.
+* Compaction is a build over forward rows: only this module writes an
+  index's files.
 * The final top-k query engine reads these partitions with shard +
   term-bucket pruning (query/search.py).
 
@@ -43,14 +47,17 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import shutil
 import time
+import uuid
 from dataclasses import dataclass
 from pathlib import Path
 from typing import List, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
@@ -93,8 +100,6 @@ def read_doc_lens(index_root: str, shard: int) -> Tuple[np.ndarray, np.ndarray]:
     """One shard's doc_stats slice → (doc ids ascending, doc lengths),
     int64: a single-directory pyarrow read, no Spark.  The packer (via
     ``_worker_doc_lens``) and every query-side reader use it."""
-    import pyarrow.parquet as pq
-
     tbl = pq.read_table(
         f"{index_root}/doc_stats/shard={shard}", columns=["doc_id", "doc_len"]
     )
@@ -214,7 +219,8 @@ class IndexBuilder:
     # -- stage A: forward index ---------------------------------------
 
     def write_staging(self, docs: DataFrame) -> dict:
-        """Tokenize once; write the forward index partitioned by shard."""
+        """Tokenize once; write the forward index partitioned by shard.
+        Forward rows (a ``tf_map`` column: compaction) stage as they are."""
         marker = self.paths.staging / "_STAGING_DONE.json"
         if marker.exists():
             info = json.loads(marker.read_text())
@@ -236,9 +242,12 @@ class IndexBuilder:
         # at 2^62-scale ids rounds DOWN, making max_id div span ==
         # num_shards — a phantom shard that is never packed
         span = max(1, -((max_id + 1) // -self.num_shards))
+        if "tf_map" in docs.columns:
+            forward = docs.select("doc_id", "doc_len", "tf_map")
+        else:
+            forward = A.analyze(docs, stem=self.stem)
         (
-            A.analyze(docs, stem=self.stem)
-            .withColumn(
+            forward.withColumn(
                 # integer `div`, NOT floor(double /): at 2^62-scale
                 # hash ids the double quotient rounds across shard
                 # boundaries (a doc near max_id landed in a phantom
@@ -313,8 +322,10 @@ class IndexBuilder:
         if not self.paths.manifest.exists():
             return set()
         try:
-            rows = self.spark.read.parquet(str(self.paths.manifest)).collect()
-        except Exception:
+            rows = pq.read_table(
+                str(self.paths.manifest), columns=["shard", "status"]
+            ).to_pylist()
+        except pa.ArrowInvalid:  # no wave committed yet: an empty dir
             return set()
         return {int(r["shard"]) for r in rows if r["status"] == "committed"}
 
@@ -586,10 +597,13 @@ class IndexBuilder:
         return out
 
     def _append_manifest(self, rows: List[dict]) -> None:
-        pdf = pd.DataFrame(rows)
-        self.spark.createDataFrame(pdf).write.mode("append").parquet(
-            str(self.paths.manifest)
-        )
+        """Commit a wave as ONE file: written under a hidden name, which
+        parquet readers skip, then renamed — visible whole or not at all."""
+        self.paths.manifest.mkdir(parents=True, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = self.paths.manifest / f".{name}.tmp"
+        pq.write_table(pa.Table.from_pylist(rows), tmp)
+        os.replace(tmp, self.paths.manifest / name)
 
     # -- stage D: dictionary -------------------------------------------
 
@@ -665,3 +679,9 @@ class IndexBuilder:
         stats["stage_timings"] = timings
         return stats
 
+    @staticmethod
+    def is_complete(index_dir) -> bool:
+        """``build`` finished at ``index_dir``: the dictionary is its LAST
+        stage (stats.json and the manifest exist mid-build)."""
+        p = IndexPaths(Path(index_dir))
+        return all(d.exists() for d in (p.stats_json, p.manifest, p.dictionary))

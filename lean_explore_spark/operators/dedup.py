@@ -1307,7 +1307,7 @@ def write_near_dup_artifact(
 
     Meta is written LAST (atomic os.replace) so readers gated on it
     never see a half-written artifact — the same app-marker visibility
-    rule as the index builder's _STAGING_DONE (CLAUDE.md).
+    rule as the index builder's staging marker (CLAUDE.md).
     """
     import json as _json
     import os

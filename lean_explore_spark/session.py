@@ -58,8 +58,11 @@ def get_spark(
         # pure fixed driver time that caps N→4N scaling efficiency
         # (measured: ~12 s fixed across build stages at 400k docs).
         # v2's weaker job-commit atomicity is safe here: readers are
-        # gated by app-level markers (_STAGING_DONE, manifest commits,
-        # stats.json), never by directory existence
+        # gated by app-level markers, never by directory existence:
+        # the builder's staging marker, its manifest files (written on
+        # the driver, each made visible by an atomic rename),
+        # stats.json and the dictionary (IndexBuilder.is_complete), and
+        # the segments' MANIFEST.json
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # don't fsync every parquet file on local/test disks
         .config("spark.hadoop.parquet.summary.metadata.level", "NONE")

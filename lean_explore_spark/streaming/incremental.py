@@ -8,11 +8,12 @@ streaming path a web-scale ingest needs: a file-source stream of new
 pages drains through ``foreachBatch`` into per-batch DELTA SEGMENTS
 (same packed-postings format as the main index, one segment dir per
 micro-batch), with Spark's checkpoint giving exactly-once segment
-commits.  A compaction job folds segments back into the base index by
-rebuilding from the union of forward indexes (BM25's global stats —
-N, avgdl, df — shift with every batch, so merged segments must be
-re-scored anyway; rebuilding from the staged forward index costs one
-pack pass, no re-tokenization).
+commits.  Compaction is ``IndexBuilder.build`` over the union of the
+segments' forward rows (BM25's global stats — N, avgdl, df — shift
+with every batch, so merged segments must be re-scored anyway; the
+builder stages forward rows as they are, so a fold costs one pack
+pass, no re-tokenization).  The builder writes every file inside an
+index dir; this module writes only the segment manifest.
 
 Segment layout:
 
@@ -106,16 +107,9 @@ def _manifest_lock(index_root):
 
 
 def _complete_segment_dirs(seg_root: Path) -> List[str]:
-    """seg=* dirs whose build finished.  The dictionary is the LAST
-    stage the builder writes, so its presence is the completeness
-    marker (stats.json/manifest exist mid-build and would pass a
-    weaker check)."""
+    """seg=* dirs whose build finished (``IndexBuilder.is_complete``)."""
     return sorted(
-        p.name
-        for p in seg_root.glob("seg=*")
-        if (p / "stats.json").exists()
-        and (p / "manifest").exists()
-        and (p / "dictionary").exists()
+        p.name for p in seg_root.glob("seg=*") if IndexBuilder.is_complete(p)
     )
 
 
@@ -282,8 +276,8 @@ class SegmentedSearch(SearchEngine):
 def _fold_forward_dirs(
     spark: SparkSession, parts: List[str], out_dir: str, **kw
 ) -> dict:
-    """One pack pass over the union of forward indexes (no
-    re-tokenization) → a fresh index at ``out_dir``."""
+    """A fresh index at ``out_dir`` over the union of forward indexes:
+    the builder stages the forward rows as they are, then packs."""
     from functools import reduce
 
     # per-root reads + union: the partition (shard=) dirs of different
@@ -295,37 +289,7 @@ def _fold_forward_dirs(
             for p in parts
         ],
     )
-    builder = IndexBuilder(spark, out_dir, **kw)
-    # reuse the already-analyzed forward index as the "docs" by writing
-    # it straight into staging, then run the normal pack+dict stages
-    import shutil
-
-    out = Path(out_dir)
-    if out.exists():
-        shutil.rmtree(out)
-    out.mkdir(parents=True)
-    import pyspark.sql.functions as F
-
-    bounds = staged.agg(
-        F.count("*").alias("n"), F.max("doc_id").alias("m")
-    ).collect()[0]
-    # integer ceil-div (float math.ceil is lossy at 2^62 ids, builder)
-    span = max(1, -((int(bounds["m"]) + 1) // -builder.num_shards))
-    (
-        staged.withColumn(
-            # integer `div`: exact at 2^62-scale hash ids (see builder)
-            "shard", F.expr(f"cast(doc_id div {span} as int)")
-        )
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(str(builder.paths.staging))
-    )
-    (builder.paths.staging / "_STAGING_DONE.json").write_text(
-        json.dumps(
-            {"n_docs": int(bounds["n"]), "max_doc_id": int(bounds["m"]), "span": span}
-        )
-    )
-    return builder.build(staged.sparkSession.createDataFrame([], "doc_id long, text string"), resume=True)
+    return IndexBuilder(spark, out_dir, **kw).build(staged, resume=False)
 
 
 def compact(spark: SparkSession, index_root: str, out_dir: str, **kw) -> dict:
@@ -435,8 +399,6 @@ def compact_tiered(
     Returns {"merged": [...], "remaining": int} plus the merged
     segment's build stats under "stats" (empty dict if below the
     threshold)."""
-    import shutil
-
     root = Path(index_root)
     seg_root = _seg_root(root)
     with _manifest_lock(root):
@@ -485,8 +447,6 @@ def compact_tiered(
         sorted(n.split("=", 1)[1] for n in tier)
     )
     tmp = seg_root / (".tmp-" + merged_name.split("=", 1)[1])
-    if tmp.exists():
-        shutil.rmtree(tmp)
     stats = _fold_forward_dirs(
         spark, [str(seg_root / n / "forward") for n in tier], str(tmp), **kw
     )

@@ -92,8 +92,14 @@ def test_resume_reproduces_identical_index(spark, tmp_path):
 
     full = tmp_path / "full"
     IndexBuilder(spark, str(full), num_shards=4, num_buckets=4).build(
-        docs, resume=False
+        docs, resume=False, wave_size=1
     )
+    # one manifest file per wave (hidden and _-prefixed names are not data)
+    waves = [
+        p for p in (full / "manifest").iterdir()
+        if not p.name.startswith((".", "_"))
+    ]
+    assert len(waves) == 4
 
     # simulate a kill after 2 of 4 shards
     part = tmp_path / "part"
@@ -101,8 +107,18 @@ def test_resume_reproduces_identical_index(spark, tmp_path):
     part.mkdir(parents=True, exist_ok=True)
     info = b.write_staging(docs)
     stats = b.write_doc_stats(info)
+    sc = spark.sparkContext
     for shard in (0, 1):
-        b._append_manifest(b.pack_shards([shard], avgdl=stats["avgdl"]))
+        rows = b.pack_shards([shard], avgdl=stats["avgdl"])
+        # the manifest is written and read on the driver: no Spark job
+        sc.setJobGroup("manifest_io", "manifest commit + resume read")
+        try:
+            b._append_manifest(rows)
+            done = b._completed_shards()
+        finally:
+            sc.setJobGroup("", "")
+    assert done == {0, 1}
+    assert list(sc.statusTracker().getJobIdsForGroup("manifest_io")) == []
     # resume must pack only shards 2,3 and converge to the same index
     b.build(docs, resume=True)
 
@@ -122,9 +138,19 @@ def test_resume_reproduces_identical_index(spark, tmp_path):
     assert [tuple(r) for r in fingerprint(full)] == [
         tuple(r) for r in fingerprint(part)
     ]
-    # manifest has exactly one committed row per shard
-    m = spark.read.parquet(str(part / "manifest")).collect()
-    assert sorted(r["shard"] for r in m) == [0, 1, 2, 3]
+    # manifest has exactly one committed row per shard, and Spark
+    # readers see the same column names and types as ever
+    m = spark.read.parquet(str(part / "manifest"))
+    assert sorted(r["shard"] for r in m.collect()) == [0, 1, 2, 3]
+    assert m.dtypes == [
+        ("shard", "bigint"),
+        ("n_terms", "bigint"),
+        ("n_postings", "bigint"),
+        ("payload_bytes", "bigint"),
+        ("fingerprint", "bigint"),
+        ("status", "string"),
+        ("committed_at", "double"),
+    ]
 
 
 def test_vectorized_packer_rows_equal_reference_pack(spark, tmp_path):

@@ -117,12 +117,23 @@ def test_segment_block_maxima_bound_scores_at_global_avgdl(spark, tmp_path):
 
 def test_compaction_preserves_results(spark, streamed, tmp_path):
     pages_dir, index_root, docs = streamed
-    out = tmp_path / "compacted"
-    I.compact(spark, index_root, str(out), num_shards=2, num_buckets=4)
-    eng = SearchEngine(spark, str(out), preload=True)
     seg = I.SegmentedSearch(spark, index_root)
-    for q in QUERIES:
-        assert eng.search(q, 15) == seg.search(q, 15), q
+    rows = sorted(docs.collect(), key=lambda r: r["doc_id"])
+    stats = oracle.build_stats(
+        [r["doc_id"] for r in rows], (tokenize_stem(r["text"]) for r in rows)
+    )
+    # num_shards=None: compaction auto-sizes shards the way a build does
+    for num_shards in (2, None):
+        out = tmp_path / f"compacted{num_shards}"
+        I.compact(
+            spark, index_root, str(out), num_shards=num_shards, num_buckets=4
+        )
+        eng = SearchEngine(spark, str(out), preload=True)
+        for q in QUERIES:
+            toks = tokenize_stem(q)
+            want = [(d, s) for d, s in oracle.top_k(stats, toks, 15)]
+            assert eng.search(q, 15) == want, (num_shards, q)
+            assert eng.search(q, 15) == seg.search(q, 15), (num_shards, q)
 
 
 def test_restart_is_exactly_once(spark, streamed):
