@@ -7,18 +7,20 @@ Modes:
 
 * ``preloaded``  — dictionary+postings pinned in driver memory
   (reference-style asset preload; the latency-critical config).
-* ``cold``       — ``preload=False``: every lookup is a pruned Spark
-  read (bucket partition pruning + term pushdown), LRU-bounded
-  doc-length cache; nothing corpus-sized on the driver.
-* ``distributed``— one Spark task per doc-shard running block-max
-  WAND, O(k) TakeOrderedAndProject merge to the driver.
+* ``cold``       — ``preload=False``: every lookup is a pruned
+  pyarrow read of the index parquet (bucket partition pruning + term
+  pushdown), LRU-bounded doc-length cache; nothing corpus-sized on
+  the driver.
+* ``distributed``— each query as a one-query batch of
+  search_tokens_distributed_batch: one Spark task per (segment,
+  shard) unit, O(k) row_number window merge to the driver.
 * ``distributed_batch`` (opt-in via --modes) — the whole sweep in ONE
   Spark job (search_tokens_distributed_batch, r5); reports wall+QPS
   only, since per-query latency is meaningless inside a batch.
 * ``auto`` (r8, VERDICT r7 #5) — posting-mass routing: light queries
-  take the sequential preloaded kernel, queries whose Σ df crosses
-  SearchEngine.HOT_MASS_THRESHOLD fan shards across threads
-  (search_tokens_routed).  ``parallel`` forces the threaded kernel on
+  take the inline preloaded executor, queries whose Σ df crosses
+  SearchEngine.HOT_MASS_THRESHOLD fan units across the forked process
+  pool (search_tokens_routed).  ``parallel`` forces the fork pool on
   every query (threshold ablation).  Both bit-identical to preloaded.
 * ``hybrid_driver`` / ``hybrid_spark`` / ``hybrid_ann`` (opt-in) —
   the FULL hybrid pipeline (embed → cosine candidates → threshold →
@@ -172,16 +174,20 @@ def main() -> None:
             fn = lambda q, k: eng.search(q, k)  # noqa: E731
         elif mode == "distributed":
             eng = preloaded_engine()
-            fn = lambda q, k: eng.search_distributed(q, k)  # noqa: E731
+            fn = lambda q, k: eng.search_tokens_distributed_batch(  # noqa: E731
+                [eng.analyze_query(q)], k
+            )[0]
         elif mode == "auto":
             # r8 (VERDICT r7 #5): posting-mass routing — light queries
-            # keep the sequential preloaded kernel, hot ones fan their
-            # shards across threads (search_tokens_routed); targets
+            # keep the inline preloaded executor, hot ones fan their
+            # units across the fork pool (search_tokens_routed); targets
             # the 6.4M p95 tail without touching the 25 ms median
             eng = preloaded_engine()
-            fn = lambda q, k: eng.search_routed(q, k)  # noqa: E731
+            fn = lambda q, k: eng.search_tokens_routed(  # noqa: E731
+                eng.analyze_query(q), k
+            )
         elif mode == "parallel":
-            # the hot-path kernel unconditionally (threshold ablation)
+            # the fork-pool executor unconditionally (threshold ablation)
             eng = preloaded_engine()
             fn = lambda q, k: eng.search_tokens_parallel(  # noqa: E731
                 eng.analyze_query(q), k

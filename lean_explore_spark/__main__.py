@@ -128,7 +128,9 @@ def main(argv=None) -> int:
 
         eng = SearchEngine(spark, args.index, preload=not args.distributed)
         hits = (
-            eng.search_distributed(args.query, args.limit)
+            eng.search_tokens_distributed_batch(
+                [eng.analyze_query(args.query)], args.limit
+            )[0]
             if args.distributed
             else eng.search(args.query, args.limit)
         )

@@ -598,11 +598,17 @@ class IndexBuilder:
 
     def _append_manifest(self, rows: List[dict]) -> None:
         """Commit a wave as ONE file: written under a hidden name, which
-        parquet readers skip, then renamed — visible whole or not at all."""
+        parquet readers skip, then renamed — visible whole or not at all.
+        Written without the embedded Arrow schema and column statistics,
+        which halve a one-row file and which no reader uses: the parquet
+        types alone read back as the same columns."""
         self.paths.manifest.mkdir(parents=True, exist_ok=True)
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = self.paths.manifest / f".{name}.tmp"
-        pq.write_table(pa.Table.from_pylist(rows), tmp)
+        pq.write_table(
+            pa.Table.from_pylist(rows), tmp,
+            store_schema=False, write_statistics=False,
+        )
         os.replace(tmp, self.paths.manifest / name)
 
     # -- stage D: dictionary -------------------------------------------

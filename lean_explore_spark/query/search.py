@@ -4,21 +4,26 @@ Rebuild of the reference hot path (SURVEY.md §3.1,
 src/lean_explore/local/search.py:630-777) minus the FAISS candidate
 stage: the corpus IS the candidate set (§2.9 semantic pin).
 
-Read path per query:
+Every route runs one query plan:
 
   tokenize+stem on the driver (pure fn) →
-  dictionary lookup with bucket partition pruning + term pushdown →
+  ``_plan``: ONE dictionary lookup over the batch's union of terms,
+  with bucket partition pruning + term pushdown → idf constants →
   postings read pruned to (bucket ∈ query buckets) ∧ (term ∈ query) →
-  block-max WAND per shard (ascending doc ranges, shared heap) →
-  + delta-floor fill for sub-k result sets.
+  ``_score_unit`` per unit: cursors + kernel (block-max bulk by
+  default) into a k-heap → ``_merge`` when units ran on separate
+  heaps → delta-floor fill for sub-k result sets (``_finalize``).
 
 Segments: an engine opens an ORDERED LIST of index roots — a single
 index is the one-segment case; a base index plus streamed delta
 segments (streaming/incremental.py) is the general one, base first.
 N, avgdl and df are summed over the segments, so scores equal a
 monolithic rebuild over the same docs.  Every unit of work is a
-(segment, shard) pair; the kernels, the fork-pool fan-out, the
-distributed job and the delta-floor fill all iterate those units.
+(segment, shard) pair.  Routes differ only in the executor that runs
+a plan's units: inline on one shared heap (``search_tokens``), on a
+forked process pool after θ0 seeding (``search_tokens_parallel``;
+``search_tokens_routed`` picks between the two by posting mass), or
+as the tasks of one Spark job (``search_tokens_distributed_batch``).
 
 Scale notes (100 TB story):
 
@@ -30,11 +35,10 @@ Scale notes (100 TB story):
   each bucket at build time so row-group min/max actually cut.
   Postings become ``codec.PackedPostings`` in one place,
   ``_packed_lists``, as numpy views over the read columns.
-* shards are independent doc ranges → the distributed variant scores
-  (segment, shard) units as parallel Spark tasks
-  (``search_distributed``), each loading only its span-bounded
-  doc-length slice, and merges k-heaps.  Spark stays the build engine
-  and the engine of that batch job.
+* shards are independent doc ranges → the Spark executor scores
+  (segment, shard) units as parallel tasks, each loading only its
+  span-bounded doc-length slice, and merges k-heaps.  Spark stays the
+  build engine and the engine of that batch job.
 * ``preload=True`` pins the dictionary + packed postings in driver
   memory — the analog of the reference preloading its assets before
   benching (benchmarking/benchmark_search_rate.py:260-300); cold mode
@@ -51,7 +55,7 @@ import os
 from collections import OrderedDict
 from functools import reduce
 from pathlib import Path
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -136,26 +140,62 @@ def _add_dfs(dfs: Dict[str, int], tbl: pa.Table) -> None:
         dfs[t] = dfs.get(t, 0) + df
 
 
-def _run_kernel(
-    cursors, ctx, dl_ids, dl_lens, heap, k, mode="auto", theta0=None
-) -> None:
-    """Kernel selection for one unit — driver loop, fork workers and
-    Spark tasks all go through here.  'auto' picks vectorized bulk for
-    small posting totals, block-max-pruned bulk otherwise;
-    'wand'/'bulk'/'blockmax' force a path — all produce bit-identical
-    scores (tests assert it).  ``theta0`` only feeds the block-max
-    kernel (the others never prune on it)."""
+# the kernel names a plan accepts ('auto' picks per unit, see
+# ``_score_unit``); any other name is refused, never run as a kernel
+# it does not name
+_MODES = ("auto", "bulk", "blockmax", "wand")
+
+
+class _Query(NamedTuple):
+    """One query's plan (``SearchEngine._plan``): its scoring constants,
+    the unique-term index of each live term, and k clamped to N."""
+
+    ctx: wand.QueryContext
+    uindex: Dict[str, int]
+    k: int
+
+
+def _score_unit(rows, dl, q: _Query, heap, mode="auto", theta0=None) -> None:
+    """Score one unit's ``(term, packed)`` rows for query ``q`` into
+    ``heap`` — the ONE place cursors are built and a kernel is picked.
+    The inline loop, fork workers and Spark batch tasks all call it;
+    they differ only in where ``rows`` and the unit's doc lengths ``dl``
+    come from.  'auto' picks vectorized bulk for small posting totals,
+    block-max-pruned bulk otherwise; 'wand'/'bulk'/'blockmax' force a
+    path — all produce bit-identical scores (tests assert it).
+    ``theta0`` only feeds the block-max kernel (the others never prune
+    on it)."""
+    dl_ids, dl_lens = dl
+    cursors = [wand.TermCursor(p, q.uindex[t], dl_ids) for t, p in rows]
     if mode == "wand":
-        wand.wand_shard(cursors, ctx, dl_ids, dl_lens, heap, k)
+        wand.wand_shard(cursors, q.ctx, dl_ids, dl_lens, heap, q.k)
     elif mode == "bulk" or (
         mode == "auto"
-        and sum(c.packed.count for c in cursors) <= SearchEngine.BULK_THRESHOLD
+        and sum(p.count for _, p in rows) <= SearchEngine.BULK_THRESHOLD
     ):
-        wand.bulk_score_shard(cursors, ctx, dl_ids, dl_lens, heap, k)
+        wand.bulk_score_shard(cursors, q.ctx, dl_ids, dl_lens, heap, q.k)
     else:  # 'blockmax' or auto with a large posting total
         wand.blockmax_bulk_shard(
-            cursors, ctx, dl_ids, dl_lens, heap, k, theta0=theta0
+            cursors, q.ctx, dl_ids, dl_lens, heap, q.k, theta0=theta0
         )
+
+
+def _merge(heaps, k: int) -> list:
+    """The one k-heap merge of the fork and Spark executors: per-unit
+    (or per-task) heaps → the top-k entries by (score desc, doc_id
+    asc), still heap entries for ``_finalize``.
+
+    Exactness: units are disjoint doc ranges, and each unit's local
+    top-k is a superset of that unit's contribution to the global
+    top-k (a local θ is only lower than the global one, and θ0 pruning
+    only removes docs provably below the global θ → never over-prunes).
+    Delta-floor safety: a matched doc always scores STRICTLY above the
+    floor (idf > 0, tf ≥ 1 ⇒ X > 0), so floor-fill docs can only enter
+    when fewer than k matched docs exist globally — and then every unit
+    emitted its complete matched set, so the fill sees all matched
+    ids.  Asserted bit-exact in tests/test_distributed_search.py and
+    tests/test_streaming.py."""
+    return heapq.nlargest(k, (e for h in heaps for e in h))
 
 
 # Engine registry inherited by forked hot-query workers, KEYED per
@@ -171,16 +211,16 @@ def _run_kernel(
 _FORK_ENGINES: dict = {}
 
 
-def _fork_score_unit(engine_key, unit, uindex, ctx, k, theta0):
+def _fork_score_unit(engine_key, unit, q, theta0):
     """Runs inside a forked worker: score one unit into a local k-heap
     from the parent's preloaded packed lists (no deserialization — the
     fork shares them copy-on-write)."""
     eng = _FORK_ENGINES[engine_key]
     seg, shard = unit
     cache = eng._postings_cache[seg]
-    rows = [(t, p) for t in uindex for s, p in cache.get(t, ()) if s == shard]
+    rows = [(t, p) for t in q.uindex for s, p in cache.get(t, ()) if s == shard]
     heap: list = []
-    eng._score_unit(unit, rows, uindex, ctx, k, heap, theta0=theta0)
+    _score_unit(rows, eng._doc_lens(unit), q, heap, theta0=theta0)
     return heap
 
 
@@ -316,6 +356,8 @@ class SearchEngine:
     def _fetch_postings(self, terms: Sequence[str]) -> Dict[Unit, list]:
         """Packed lists grouped by unit: {(segment, shard): [(term, packed)]}"""
         by_unit: Dict[Unit, list] = {}
+        if not terms:  # a query with no live term reads nothing
+            return by_unit
         for seg in range(len(self.roots)):
             if self._postings_cache is not None:
                 cache = self._postings_cache[seg]
@@ -383,37 +425,51 @@ class SearchEngine:
         tokens = self.analyze_query(query)
         return self.search_tokens(tokens, k)
 
-    def _build_ctx(self, tokens: Sequence[str], dfs: Optional[Dict[str, int]] = None):
-        """Shared query planning: df lookup → idf/C constants → ctx.
-        ``dfs`` may carry a lookup already covering ``tokens`` (the
-        batch path does one lookup for all of its queries)."""
-        if dfs is None:
-            dfs = self._lookup_dfs(sorted(set(tokens))) if tokens else {}
-        # absent terms contribute nothing at all (oracle: idf.get or 0)
-        live_tokens = [t for t in tokens if t in dfs]
-        uterms: List[str] = []
-        uindex: Dict[str, int] = {}
-        for t in live_tokens:
-            if t not in uindex:
-                uindex[t] = len(uterms)
-                uterms.append(t)
-        # math.log, not np.log: numpy's SIMD log can differ from libm in
-        # the last ulp, and the oracle (rank_bm25) uses math.log
-        idfs = np.array(
-            [math.log(self.n_docs + 1) - math.log(dfs[t]) for t in uterms],
-            dtype=np.float64,
+    def _plan(
+        self,
+        token_lists: Sequence[Sequence[str]],
+        ks: Sequence[int],
+        mode: str = "auto",
+    ) -> List[_Query]:
+        """The query plan of every route: ONE df lookup over the union
+        of the queries' terms (cold mode: one pruned dictionary read per
+        segment, not one per query) → idf/C constants → a ``_Query``
+        per query.  A query whose clamped k is ≤ 0 plans no terms, so
+        no executor scores it."""
+        if mode not in _MODES:
+            raise ValueError(
+                f"unknown mode {mode!r}, expected one of {_MODES}"
+            )
+        ks = [min(kv, self.n_docs) for kv in ks]
+        union = sorted(
+            {t for toks, kv in zip(token_lists, ks) if kv > 0 for t in toks}
         )
-        ctx = wand.QueryContext(
-            token_uterm=[uindex[t] for t in live_tokens],
-            idfs=idfs,
-            k1=codec.K1,
-            b=codec.B,
-            delta=1.0,
-            avgdl=self.avgdl,
-        )
-        return ctx, uterms, uindex
+        dfs = self._lookup_dfs(union) if union else {}
+        plans = []
+        for toks, kv in zip(token_lists, ks):
+            # absent terms contribute nothing at all (oracle: idf.get or 0)
+            live_tokens = [t for t in toks if t in dfs] if kv > 0 else []
+            uindex: Dict[str, int] = {}
+            for t in live_tokens:
+                uindex.setdefault(t, len(uindex))
+            # math.log, not np.log: numpy's SIMD log can differ from libm in
+            # the last ulp, and the oracle (rank_bm25) uses math.log
+            idfs = np.array(
+                [math.log(self.n_docs + 1) - math.log(dfs[t]) for t in uindex],
+                dtype=np.float64,
+            )
+            ctx = wand.QueryContext(
+                token_uterm=[uindex[t] for t in live_tokens],
+                idfs=idfs,
+                k1=codec.K1,
+                b=codec.B,
+                delta=1.0,
+                avgdl=self.avgdl,
+            )
+            plans.append(_Query(ctx, uindex, kv))
+        return plans
 
-    def _finalize(self, heap, ctx, k) -> List[Tuple[int, float]]:
+    def _finalize(self, heap, q: _Query) -> List[Tuple[int, float]]:
         """Delta-floor fill, shard-LAZY (r2 VERDICT #2): ids come from
         ``iter_doc_ids``, which loads each doc_stats slice only when
         the fill actually reaches it.  A sub-k rare-term query
@@ -421,14 +477,7 @@ class SearchEngine:
         never the corpus id universe."""
         matched_ids = {e[2] for e in heap}
         unmatched = (d for d in self.iter_doc_ids() if d not in matched_ids)
-        return wand.finalize_topk(heap, ctx, k, unmatched)
-
-    def _score_unit(
-        self, unit, rows, uindex, ctx, k, heap, mode="auto", theta0=None
-    ) -> None:
-        dl_ids, dl_lens = self._doc_lens(unit)
-        cursors = [wand.TermCursor(p, uindex[t], dl_ids) for t, p in rows]
-        _run_kernel(cursors, ctx, dl_ids, dl_lens, heap, k, mode, theta0)
+        return wand.finalize_topk(heap, q.ctx, q.k, unmatched)
 
     # tests may set this to a callable to capture the distributed
     # merge plan before execution (kept None in production)
@@ -439,21 +488,27 @@ class SearchEngine:
     # of blocks (above it, block pruning cut p50 2.4× at 400k docs)
     BULK_THRESHOLD = 4096
 
+    # -- executors: who scores a plan's units ------------------------------
+
+    def _inline(self, q: _Query, by_unit, mode="auto", theta0=None) -> list:
+        """Inline executor: the units in order on this thread, into ONE
+        shared heap, so each unit prunes on the θ the units before it
+        reached."""
+        heap: List[Tuple[float, int, int]] = []
+        for unit in sorted(by_unit):
+            _score_unit(
+                by_unit[unit], self._doc_lens(unit), q, heap, mode, theta0
+            )
+        return heap
+
     def search_tokens(
         self, tokens: Sequence[str], k: int = 50, mode: str = "auto"
     ) -> List[Tuple[int, float]]:
-        """Sequential driver loop over the units, one shared heap.
-        ``mode`` as in ``_run_kernel``."""
-        k = min(k, self.n_docs)
-        if k <= 0:
-            return []
-        ctx, uterms, uindex = self._build_ctx(tokens)
-        heap: List[Tuple[float, int, int]] = []
-        if uterms:
-            by_unit = self._fetch_postings(uterms)
-            for unit in sorted(by_unit):
-                self._score_unit(unit, by_unit[unit], uindex, ctx, k, heap, mode)
-        return self._finalize(heap, ctx, k)
+        """One query on the inline executor.  ``mode`` as in
+        ``_score_unit``; an unknown one raises ``ValueError``."""
+        [q] = self._plan([tokens], [k], mode)
+        heap = self._inline(q, self._fetch_postings(q.uindex), mode)
+        return self._finalize(heap, q)
 
     # Routed-serving posting-mass threshold (r8, VERDICT r7 #5): below
     # this many total postings (Σ df over live query terms) the
@@ -469,7 +524,7 @@ class SearchEngine:
         """Persistent process pool FORKED after preload: children share
         the preloaded postings/doc-length dicts copy-on-write — no GIL,
         no per-query serialization of index data (only the tiny query
-        ctx ships per task, and k results ship back).  Threads measured
+        plan ships per task, and k results ship back).  Threads measured
         10× SLOWER than sequential here (the per-shard numpy calls are
         too short to amortize GIL handoff at 400k–6.4M shard sizes);
         fork is the standard CPython answer.  The query path has no py4j
@@ -518,44 +573,38 @@ class SearchEngine:
                 self._fork_pool = None
             _FORK_ENGINES.pop(id(self), None)
 
-    def _seed(self, by_unit, uindex, ctx, k):
+    def _seed(self, by_unit, q: _Query):
         """θ0 seeding (r8): score the DENSEST unit alone.  Its k-th
         score lower-bounds the global k-th (a subset's k-th best ≤ the
         global's), so it may seed every other unit's pruning via the
         kernel's ``theta0`` — valid only when that unit matched ≥ k
-        docs, else no task may prune (delta-floor semantics).  Returns
+        docs, else no unit may prune (delta-floor semantics).  Returns
         (unit, its heap, θ0 or None)."""
         mass = {u: sum(p.count for _, p in rows) for u, rows in by_unit.items()}
         seed = max(mass, key=lambda u: (mass[u], -u[0], -u[1]))
-        heap: list = []
-        self._score_unit(seed, by_unit[seed], uindex, ctx, k, heap)
-        return seed, heap, (heap[0][0] if len(heap) >= k else None)
+        heap = self._inline(q, {seed: by_unit[seed]})
+        return seed, heap, (heap[0][0] if len(heap) >= q.k else None)
 
-    def _score_units(self, by_unit, units, uindex, ctx, k, theta0, n):
-        """Score ``units`` into one local heap each: on the fork pool
-        when ``n`` > 1, inline otherwise.  If close_pool() retires the
-        pool between lookup and submit, the units not yet submitted
-        are scored inline — same kernel, same θ0, bit-identical."""
+    def _fork(self, q: _Query, by_unit, n: int) -> list:
+        """Fork-pool executor: the seed unit here (``_seed``), every
+        other unit on the pool with its θ0, then the merge.  If
+        close_pool() retires the pool between lookup and submit, the
+        units not yet submitted are scored inline — same kernel, same
+        θ0, bit-identical."""
+        pool = self._ensure_fork_pool(n)
+        seed, seed_heap, theta0 = self._seed(by_unit, q)
+        rest = sorted(u for u in by_unit if u != seed)
         futs = []
-        if n > 1:
-            pool = self._ensure_fork_pool(n)
-            try:
-                for u in units:
-                    futs.append(
-                        pool.submit(
-                            _fork_score_unit, id(self), u, uindex, ctx, k,
-                            theta0,
-                        )
-                    )
-            except RuntimeError:  # cannot schedule new futures after shutdown
-                pass
-        heaps = [f.result() for f in futs]
-        for u in units[len(futs):]:
-            heaps.append([])
-            self._score_unit(
-                u, by_unit[u], uindex, ctx, k, heaps[-1], theta0=theta0
-            )
-        return heaps
+        try:
+            for u in rest:
+                futs.append(
+                    pool.submit(_fork_score_unit, id(self), u, q, theta0)
+                )
+        except RuntimeError:  # cannot schedule new futures after shutdown
+            pass
+        left = {u: by_unit[u] for u in rest[len(futs):]}
+        heaps = [seed_heap, self._inline(q, left, theta0=theta0)]
+        return _merge(heaps + [f.result() for f in futs], q.k)
 
     def search_tokens_parallel(
         self,
@@ -563,45 +612,29 @@ class SearchEngine:
         k: int = 50,
         threads: int | None = None,
     ) -> List[Tuple[int, float]]:
-        """Hot-query driver path (r8, VERDICT r7 #5): the same
-        per-unit kernel fanned across a FORKED process pool with θ0
-        seeding (``_seed``).
+        """Hot-query driver path (r8, VERDICT r7 #5): the same plan and
+        unit scorer, the units fanned across a FORKED process pool with
+        θ0 seeding (``_fork``).
 
         Two measured problems with naive per-shard fan-out, both fixed
-        here (400k numbers in BENCH.md §13b): (1) independent local
-        heaps lose the sequential θ cascade, so no block ever prunes —
-        the densest unit is scored inline first and seeds every other
-        unit's pruning; (2) Python threads were 10× slower than
-        sequential (shard-sized numpy calls are too short to amortize
-        GIL handoff), so the fan-out uses processes forked AFTER
-        preload — children read the postings dicts copy-on-write, only
-        the query ctx and k-row results cross the boundary.
+        there (400k numbers in BENCH.md §13b): (1) independent local
+        heaps lose the inline θ cascade, so no block ever prunes — the
+        densest unit is scored first and seeds every other unit's
+        pruning; (2) Python threads were 10× slower than sequential
+        (shard-sized numpy calls are too short to amortize GIL
+        handoff), so the fan-out uses processes forked AFTER preload —
+        children read the postings dicts copy-on-write, only the query
+        plan and k-row results cross the boundary.
 
-        Results are bit-identical to search_tokens: per-unit local
-        top-k is a superset of the unit's global-top-k contribution
-        (θ0 pruning only removes docs provably below the global θ),
-        and the merge re-sorts by (score desc, doc_id asc) — asserted
-        in tests/test_distributed_search.py.  ``threads=1`` runs the
-        same θ0-seeded plan serially in-process, no pool needed."""
-        k = min(k, self.n_docs)
-        if k <= 0:
-            return []
-        ctx, uterms, uindex = self._build_ctx(tokens)
-        heap: List[Tuple[float, int, int]] = []
-        if uterms:
-            by_unit = self._fetch_postings(uterms)
-            for u in by_unit:
-                self._doc_lens(u)  # prefetch (preload: dict hit)
-            seed, seed_heap, theta0 = self._seed(by_unit, uindex, ctx, k)
-            rest = sorted(u for u in by_unit if u != seed)
-            n = min(threads or (os.cpu_count() or 8), len(rest))
-            locals_ = [seed_heap] + self._score_units(
-                by_unit, rest, uindex, ctx, k, theta0, n
-            )
-            cand = [(e[0], e[2]) for loc in locals_ for e in loc]
-            cand.sort(key=lambda t: (-t[0], t[1]))
-            heap = [(s, -d, d) for s, d in cand[:k]]
-        return self._finalize(heap, ctx, k)
+        Results are bit-identical to search_tokens (``_merge``).  With
+        fewer than two units besides the seed to fan out (``threads=1``,
+        or a query touching ≤ 2 units) the query runs on the inline
+        executor, no pool needed."""
+        [q] = self._plan([tokens], [k])
+        by_unit = self._fetch_postings(q.uindex)
+        n = min(threads or (os.cpu_count() or 8), len(by_unit) - 1)
+        heap = self._fork(q, by_unit, n) if n > 1 else self._inline(q, by_unit)
+        return self._finalize(heap, q)
 
     def query_posting_mass(self, tokens: Sequence[str]) -> int:
         """Σ df over the query's live terms — the routing signal.  In
@@ -637,9 +670,6 @@ class SearchEngine:
             return self.search_tokens_parallel(tokens, k, threads=threads)
         return self.search_tokens(tokens, k)
 
-    def search_routed(self, query: str, k: int = 50) -> List[Tuple[int, float]]:
-        return self.search_tokens_routed(self.analyze_query(query), k)
-
     def score_candidates(
         self, tokens: Sequence[str], doc_ids: Sequence[int]
     ) -> Dict[int, float]:
@@ -657,35 +687,113 @@ class SearchEngine:
         cand = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
         if cand.size == 0:
             return {}
-        ctx, uterms, uindex = self._build_ctx(tokens)
-        n_u = len(ctx.idfs)
-        X = np.zeros((cand.size, n_u), dtype=np.float64)
-        if uterms:
-            by_unit = self._fetch_postings(uterms)
-            for unit in sorted(by_unit):
-                dl_ids, dl_lens = self._doc_lens(unit)
-                for t, p in by_unit[unit]:
-                    d, tf = codec.unpack_for(p, cand, dl_ids)
-                    if len(d) == 0:
-                        continue
-                    x = codec.bm25_tf_part(
-                        tf, dl_lens[np.searchsorted(dl_ids, d)],
-                        ctx.avgdl, ctx.k1, ctx.b,
-                    )
-                    X[np.searchsorted(cand, d), uindex[t]] = x
-        return {int(d): float(s) for d, s in zip(cand, ctx.score_rows(X))}
+        [q] = self._plan([tokens], [cand.size])
+        X = np.zeros((cand.size, len(q.ctx.idfs)), dtype=np.float64)
+        by_unit = self._fetch_postings(q.uindex)
+        for unit in sorted(by_unit):
+            dl_ids, dl_lens = self._doc_lens(unit)
+            for t, p in by_unit[unit]:
+                d, tf = codec.unpack_for(p, cand, dl_ids)
+                if len(d) == 0:
+                    continue
+                x = codec.bm25_tf_part(
+                    tf, dl_lens[np.searchsorted(dl_ids, d)],
+                    q.ctx.avgdl, q.ctx.k1, q.ctx.b,
+                )
+                X[np.searchsorted(cand, d), q.uindex[t]] = x
+        return {int(d): float(s) for d, s in zip(cand, q.ctx.score_rows(X))}
 
     # -- distributed serving ----------------------------------------------
 
-    def search_distributed(self, query: str, k: int = 50) -> List[Tuple[int, float]]:
-        return self.search_tokens_distributed(self.analyze_query(query), k)
+    def _spark(self, plans: List[_Query], mode: str) -> List[list]:
+        """Spark batch executor: every query's units in ONE job, one
+        task per (segment, shard) unit; returns, per query, the heap
+        entries its tasks emitted.  The union of the queries' terms is
+        fetched in one pruned postings read per segment; each task
+        parses each term slice once, loads only its span-bounded
+        doc-length file and runs the unit scorer once per query; a
+        per-query row_number window (planned as a partial
+        WindowGroupLimit before the exchange) bounds each task's output
+        and the driver at O(Q·k) rows.  Postings never transit the
+        driver.  A preloaded driver seeds each query's θ0 (``_seed``)
+        so every task can prune from the start; cold engines skip
+        seeding."""
+        from pyspark.sql.window import Window
 
-    def search_tokens_distributed(
-        self, tokens: Sequence[str], k: int = 50
-    ) -> List[Tuple[int, float]]:
-        """Cluster-scale serving of one query: the batch job below run
-        on a one-query batch."""
-        return self.search_tokens_distributed_batch([tokens], k)[0]
+        from lean_explore_spark.pyfiles import ensure_py_files
+
+        heaps: List[list] = [[] for _ in plans]
+        all_terms = sorted({t for q in plans for t in q.uindex})
+        if not all_terms:  # nothing to score (a query with terms has k > 0)
+            return heaps
+        theta0s: List[Optional[float]] = [None] * len(plans)
+        if self._preloaded and mode in ("blockmax", "auto"):
+            for qi, q in enumerate(plans):
+                by_unit = self._fetch_postings(q.uindex)
+                if by_unit:
+                    theta0s[qi] = self._seed(by_unit, q)[2]
+        ensure_py_files(self.spark)
+        postings = reduce(
+            lambda a, b: a.unionByName(b),
+            [
+                self._pruned(seg, "postings", all_terms, POSTINGS_SCHEMA)
+                .withColumn("seg", F.lit(seg))
+                for seg in range(len(self.roots))
+            ],
+        )
+        # the task closure ships these, never ``self``
+        roots = [str(r) for r in self.roots]
+        scales = list(self._bm_scale)
+
+        def score_unit(key, tbl):
+            import pyarrow as pa
+
+            from lean_explore_spark.index.builder import read_doc_lens
+            from lean_explore_spark.query import search as S
+
+            seg, shard = key[0].as_py(), key[1].as_py()
+            dl = read_doc_lens(roots[seg], shard)
+            # parse each term slice ONCE, share across queries (a
+            # cursor only pairs a list with the query's term index)
+            packed = {t: p for t, _, p in S._packed_lists(tbl, scales[seg])}
+            qids, docs, scores = [], [], []
+            for qi, q in enumerate(plans):
+                rows = [(t, packed[t]) for t in q.uindex if t in packed]
+                if not rows:
+                    continue
+                heap: list = []
+                S._score_unit(rows, dl, q, heap, mode, theta0s[qi])
+                qids.extend([qi] * len(heap))
+                docs.extend(e[2] for e in heap)
+                scores.extend(e[0] for e in heap)
+            return pa.table(
+                {
+                    "qid": pa.array(qids, pa.int32()),
+                    "doc_id": pa.array(docs, pa.int64()),
+                    "score": pa.array(scores, pa.float64()),
+                }
+            )
+
+        kk = max(q.k for q in plans)
+        w = Window.partitionBy("qid").orderBy(
+            F.desc("score"), F.asc("doc_id")
+        )
+        topk_df = (
+            postings.groupBy("seg", "shard")
+            .applyInArrow(
+                score_unit, schema="qid int, doc_id long, score double"
+            )
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= kk)
+            .select("qid", "doc_id", "score")
+        )
+        if self._plan_probe is not None:  # test hook (plan assert)
+            self._plan_probe(topk_df)
+        rows = topk_df.collect()
+        assert len(rows) <= kk * len(plans)  # O(Q·k) driver
+        for r in rows:
+            heaps[r["qid"]].append((r["score"], -r["doc_id"], r["doc_id"]))
+        return heaps
 
     def search_tokens_distributed_batch(
         self,
@@ -693,41 +801,17 @@ class SearchEngine:
         k: "int | Sequence[int]" = 50,
         mode: str = "blockmax",
     ) -> List[List[Tuple[int, float]]]:
-        """Cluster-scale serving (r5): Q queries in ONE Spark job.  The
-        union of all queries' terms is fetched in one pruned postings
-        read per segment; each (segment, shard) task parses each term
-        slice once, loads only its span-bounded doc-length file and
-        runs the kernel once per query; a per-query row_number window
-        (planned as a partial WindowGroupLimit before the exchange)
-        bounds each task's output and the driver at O(Q·k) rows.
-        Postings never transit the driver.  Per-query serving would
-        pay ~0.5 s of job scheduling per query on this box (BENCH.md §3
-        r5 table) — for offline sweeps (gather_results, LLM-judge
-        dumps, relevance suites) that fixed cost dominates.
-
-        Exactness: each unit's local top-k is a superset of that unit's
-        contribution to the global top-k (per-task θ is only lower
-        than a global θ would be → never over-prunes); the merge
-        re-sorts by (score desc, doc_id asc).  Delta-floor safety: a
-        matched doc always scores STRICTLY above the floor (idf > 0,
-        tf ≥ 1 ⇒ X > 0), so floor-fill docs can only enter when fewer
-        than k matched docs exist globally — and then every unit
-        emitted its complete matched set, so the fill sees all matched
-        ids.  Asserted bit-exact in tests/test_distributed_search.py
-        and tests/test_streaming.py.
+        """Cluster-scale serving (r5): Q queries in ONE Spark job
+        (``_spark``).  Per-query serving would pay ~0.5 s of job
+        scheduling per query on this box (BENCH.md §3 r5 table) — for
+        offline sweeps (gather_results, LLM-judge dumps, relevance
+        suites) that fixed cost dominates.  One query is the one-query
+        batch; results are exact by ``_merge``.
 
         ``k`` may be a single int or one int PER QUERY (r5 VERDICT #7);
-        the tasks heap to max(k) and each query's final list is cut to
-        its own k.  ``mode`` picks the per-unit kernel as in
-        ``search_tokens`` ('blockmax' default — the right choice for
-        big shards).  A preloaded driver seeds each query's θ0
-        (``_seed``) so every task can prune from the start; cold
-        engines skip seeding.
-        """
-        from pyspark.sql.window import Window
-
-        from lean_explore_spark.pyfiles import ensure_py_files
-
+        each task heaps a query to its own k.  ``mode`` picks the
+        per-unit kernel as in ``search_tokens`` ('blockmax' default —
+        the right choice for big shards)."""
         if isinstance(k, int):
             ks = [k] * len(token_lists)
         else:
@@ -736,99 +820,8 @@ class SearchEngine:
                 raise ValueError(
                     f"k list length {len(ks)} != {len(token_lists)} queries"
                 )
-        out_k = [min(kv, self.n_docs) for kv in ks]
-        # ONE dictionary lookup for the union of query terms (cold
-        # mode: one pruned read per segment instead of Q)
-        union = sorted({t for toks in token_lists for t in toks})
-        dfs = self._lookup_dfs(union) if union else {}
-        qplans = []  # (ctx, {term: uterm_idx}) per query
-        for toks in token_lists:
-            ctx, _, uindex = self._build_ctx(toks, dfs)
-            qplans.append((ctx, uindex))
-
-        heaps: List[list] = [[] for _ in token_lists]
-        all_terms = sorted({t for _, ui in qplans for t in ui})
-        kk = max(out_k, default=0)
-        theta0s: List[Optional[float]] = [None] * len(token_lists)
-        if self._preloaded and mode in ("blockmax", "auto"):
-            for qi, (ctx, uindex) in enumerate(qplans):
-                if uindex and out_k[qi] > 0:
-                    by_unit = self._fetch_postings(list(uindex))
-                    theta0s[qi] = self._seed(by_unit, uindex, ctx, out_k[qi])[2]
-        if all_terms and kk > 0:
-            ensure_py_files(self.spark)
-            postings = reduce(
-                lambda a, b: a.unionByName(b),
-                [
-                    self._pruned(seg, "postings", all_terms, POSTINGS_SCHEMA)
-                    .withColumn("seg", F.lit(seg))
-                    for seg in range(len(self.roots))
-                ],
-            )
-            # the task closure ships these, never ``self``
-            roots = [str(r) for r in self.roots]
-            scales = list(self._bm_scale)
-
-            def score_unit(key, tbl):
-                import pyarrow as pa
-
-                from lean_explore_spark.index.builder import read_doc_lens
-                from lean_explore_spark.query import search as S
-                from lean_explore_spark.query import wand as W
-
-                seg, shard = key[0].as_py(), key[1].as_py()
-                dl_ids, dl_lens = read_doc_lens(roots[seg], shard)
-                # parse each term slice ONCE, share across queries (a
-                # cursor only pairs a list with the query's term index)
-                packed = {t: p for t, _, p in S._packed_lists(tbl, scales[seg])}
-                qids, docs, scores = [], [], []
-                for qi, (ctx, uindex) in enumerate(qplans):
-                    cursors = [
-                        W.TermCursor(packed[t], u, dl_ids)
-                        for t, u in uindex.items()
-                        if t in packed
-                    ]
-                    if not cursors:
-                        continue
-                    local_heap: list = []
-                    S._run_kernel(
-                        cursors, ctx, dl_ids, dl_lens, local_heap, kk, mode,
-                        theta0s[qi],
-                    )
-                    qids.extend([qi] * len(local_heap))
-                    docs.extend(e[2] for e in local_heap)
-                    scores.extend(e[0] for e in local_heap)
-                return pa.table(
-                    {
-                        "qid": pa.array(qids, pa.int32()),
-                        "doc_id": pa.array(docs, pa.int64()),
-                        "score": pa.array(scores, pa.float64()),
-                    }
-                )
-
-            w = Window.partitionBy("qid").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-            topk_df = (
-                postings.groupBy("seg", "shard")
-                .applyInArrow(
-                    score_unit, schema="qid int, doc_id long, score double"
-                )
-                .withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") <= kk)
-                .select("qid", "doc_id", "score")
-            )
-            if self._plan_probe is not None:  # test hook (plan assert)
-                self._plan_probe(topk_df)
-            rows = topk_df.collect()
-            assert len(rows) <= kk * len(token_lists)  # O(Q·k) driver
-            for r in rows:
-                heaps[r["qid"]].append(
-                    (r["score"], -r["doc_id"], r["doc_id"])
-                )
+        plans = self._plan(token_lists, ks, mode)
+        heaps = self._spark(plans, mode)
         return [
-            self._finalize(
-                sorted(h, reverse=True)[: out_k[qi]], qplans[qi][0], out_k[qi]
-            )
-            for qi, h in enumerate(heaps)
+            self._finalize(_merge([h], q.k), q) for q, h in zip(plans, heaps)
         ]

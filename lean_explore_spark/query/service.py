@@ -515,7 +515,7 @@ class SearchService:
         results are bit-identical to both other paths."""
         tokens = self.engine.analyze_query(query)
         if distributed:
-            return self.engine.search_tokens_distributed(tokens, k)
+            return self.engine.search_tokens_distributed_batch([tokens], k)[0]
         if routed:
             return self.engine.search_tokens_routed(tokens, k)
         return self.engine.search_tokens(tokens, k)

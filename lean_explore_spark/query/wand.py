@@ -4,10 +4,12 @@ Custom operator (SURVEY.md §4 "needs custom work" #3): DAAT traversal
 with term-upper-bound pivoting and block-level skipping, not
 expressible as DataFrame ops.  Runs per doc-shard; shards partition
 the doc space into ascending disjoint ranges, so a shared top-k heap
-sweeps shards in order (the distributed variant runs one task per
-shard and merges top-k — same algorithm, see query/search.py).
+sweeps shards in order (the fork-pool and Spark executors score units
+on separate heaps and merge top-k — same algorithm, see
+query/search.py).
 
-Kernels (one per (segment, shard) unit; ``search._run_kernel`` picks):
+Kernels (one per (segment, shard) unit; ``search._score_unit`` builds
+the cursors and picks one):
 
 * ``bulk_score_shard`` — exhaustive and vectorized: every block of
   every list kept;

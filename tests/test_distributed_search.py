@@ -6,10 +6,12 @@ from __future__ import annotations
 import re
 import threading
 
+import duckdb
 import pytest
 
 from lean_explore_spark.functions.tokenizer import tokenize_stem
 from lean_explore_spark.index.builder import IndexBuilder
+from lean_explore_spark.oracle import bm25 as oracle
 from lean_explore_spark.query.search import SearchEngine
 from tests.conftest import SF_ORACLE
 
@@ -32,11 +34,21 @@ def engine(spark, tmp_path_factory):
     return SearchEngine(spark, str(out), preload=True)
 
 
+@pytest.fixture(scope="module")
+def ostats():
+    rows = duckdb.sql(
+        f"select doc_id, text from '{SF_ORACLE}/documents.parquet' order by doc_id"
+    ).fetchall()
+    return oracle.build_stats(
+        [r[0] for r in rows], (tokenize_stem(r[1]) for r in rows)
+    )
+
+
 @pytest.mark.parametrize("query", QUERIES)
 def test_distributed_equals_local(engine, query):
     tokens = tokenize_stem(query)
     local = engine.search_tokens(tokens, 20)
-    dist = engine.search_tokens_distributed(tokens, 20)
+    dist = engine.search_tokens_distributed_batch([tokens], 20)[0]
     assert dist == local
 
 
@@ -49,7 +61,7 @@ def test_distributed_merge_is_take_ordered(engine):
     engine._plan_probe = plans.append
     try:
         tokens = tokenize_stem("fast table scan merge join")
-        dist = engine.search_tokens_distributed(tokens, 10)
+        dist = engine.search_tokens_distributed_batch([tokens], 10)[0]
     finally:
         engine._plan_probe = None
     assert dist == engine.search_tokens(tokens, 10)
@@ -62,7 +74,7 @@ def test_distributed_fill_path(engine):
     # k exceeding matched docs: distributed fill must match local
     tokens = ["windowpag"]  # stemmed rare-ish term may or may not exist
     local = engine.search_tokens(tokens, engine.n_docs)
-    dist = engine.search_tokens_distributed(tokens, engine.n_docs)
+    dist = engine.search_tokens_distributed_batch([tokens], engine.n_docs)[0]
     assert dist == local
 
 
@@ -88,24 +100,40 @@ def test_batch_distributed_bit_exact_and_one_job_class(spark, engine):
     assert len(got) == len(token_lists)
     for toks, res in zip(token_lists, got):
         assert res == engine.search_tokens(toks, 20), toks
-        assert res == engine.search_tokens_distributed(toks, 20), toks
+        assert res == engine.search_tokens_distributed_batch([toks], 20)[0], toks
 
 
 def test_batch_distributed_empty_batch(engine):
     assert engine.search_tokens_distributed_batch([], 10) == []
 
 
-def test_batch_distributed_per_query_k_and_modes(engine):
+def test_batch_distributed_per_query_k_and_modes(engine, ostats):
     """r5 VERDICT #7: k may vary per query (each result cut to its own
     k, not the batch max), and the per-shard kernel is selectable —
-    every mode bit-exact vs the local engine."""
-    batch_queries = QUERIES[:3] + ["the data page"]
+    every mode bit-exact vs the local engine.  Every executor of the
+    one query plan — inline, fork pool, routed fan-out and the Spark
+    batch — returns the oracle's list for each query of the batch,
+    including k > n_docs, k = 0, an all-absent query and an empty
+    one."""
+    batch_queries = QUERIES[:3] + [
+        "the data page", "fast join", "merge join", "nonexistentterm zz", ""
+    ]
     token_lists = [tokenize_stem(q) for q in batch_queries]
-    ks = [5, 17, 1, 40]
+    ks = [5, 17, 1, 40, engine.n_docs + 3, 0, 6, 4]
+    want = [
+        oracle.top_k(ostats, toks, kv) for toks, kv in zip(token_lists, ks)
+    ]
     got = engine.search_tokens_distributed_batch(token_lists, ks)
-    for toks, kv, res in zip(token_lists, ks, got):
+    assert got == want
+    for toks, kv, res in zip(token_lists, ks, want):
         assert len(res) == min(kv, engine.n_docs)
-        assert res == engine.search_tokens(toks, kv), (toks, kv)
+        assert engine.search_tokens(toks, kv) == res, (toks, kv)
+        assert engine.search_tokens_parallel(toks, kv, threads=2) == res, (
+            toks, kv,
+        )
+        assert engine.search_tokens_routed(
+            toks, kv, mass_threshold=0
+        ) == res, (toks, kv)
     for mode in ("auto", "bulk", "wand", "blockmax"):
         got_m = engine.search_tokens_distributed_batch(
             token_lists, ks, mode=mode

@@ -8,6 +8,7 @@ from pathlib import Path
 
 import duckdb
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 
 from lean_explore_spark.functions.tokenizer import tokenize_stem
@@ -64,6 +65,23 @@ def test_wand_bit_exact_vs_oracle(engine, ostats, query, k, mode):
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (wd, ws) in zip(got, want):
         assert gs == ws, f"doc {gd}: {gs!r} != {ws!r} (bit-exact required)"
+
+
+def test_unknown_mode_is_rejected(spark, engine):
+    """A mode names the kernel that runs: a misspelt one must raise,
+    not silently run some other kernel — on the local path and on the
+    Spark batch path, which refuses it before starting any job."""
+    tokens = tokenize_stem("fast table scan")
+    with pytest.raises(ValueError, match="wnad"):
+        engine.search_tokens(tokens, 5, mode="wnad")
+    sc = spark.sparkContext
+    sc.setJobGroup("bad_mode", "batch with an unknown mode")
+    try:
+        with pytest.raises(ValueError, match="typo"):
+            engine.search_tokens_distributed_batch([tokens], 5, mode="typo")
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("bad_mode")) == []
 
 
 def test_k_larger_than_matched(engine, ostats):
@@ -151,6 +169,16 @@ def test_resume_reproduces_identical_index(spark, tmp_path):
         ("status", "string"),
         ("committed_at", "double"),
     ]
+    # ... from files that carry no column statistics and no embedded
+    # Arrow schema (neither is read; both are most of a one-row file)
+    for f in [*waves, *(part / "manifest").glob("part-*.parquet")]:
+        md = pq.ParquetFile(f).metadata
+        assert b"ARROW:schema" not in (md.metadata or {}), f
+        assert not any(
+            md.row_group(g).column(c).is_stats_set
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        ), f
 
 
 def test_vectorized_packer_rows_equal_reference_pack(spark, tmp_path):

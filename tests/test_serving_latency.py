@@ -39,10 +39,14 @@ def test_modes_rank_identical_and_cold_bounded(spark, served_index):
 
     for q in queries[:10]:
         assert cold.search(q, 20) == pre.search(q, 20), q
-        assert pre.search_distributed(q, 20) == pre.search(q, 20), q
+        toks = pre.analyze_query(q)
+        assert (
+            pre.search_tokens_distributed_batch([toks], 20)[0]
+            == pre.search(q, 20)
+        ), q
         # r8 routed/fork paths serve the same ranks
-        assert pre.search_routed(q, 20) == pre.search(q, 20), q
-        assert cold.search_routed(q, 20) == pre.search(q, 20), q
+        assert pre.search_tokens_routed(toks, 20) == pre.search(q, 20), q
+        assert cold.search_tokens_routed(toks, 20) == pre.search(q, 20), q
     pre.close_pool()
 
     m_pre = measure(lambda q, k: pre.search(q, k), queries, 20, repeats=2)

@@ -112,7 +112,7 @@ def test_segment_block_maxima_bound_scores_at_global_avgdl(spark, tmp_path):
         assert seg.search("pivot", 5) == want, preload
         for mode in ("blockmax", "wand"):
             assert seg.search_tokens(toks, 5, mode=mode) == want, (mode, preload)
-        assert seg.search_tokens_distributed(toks, 5) == want, preload
+        assert seg.search_tokens_distributed_batch([toks], 5)[0] == want, preload
 
 
 def test_compaction_preserves_results(spark, streamed, tmp_path):
@@ -427,8 +427,10 @@ def test_segmented_distributed_batch_rank_identical(spark, streamed):
     jobs = sc.statusTracker().getJobIdsForGroup("seg_dist_batch")
     assert 0 < len(jobs) <= 6, len(jobs)  # not O(Q) scheduling
 
-    # single-query wrapper + per-query k + cold engines
-    assert seg.search_distributed(QUERIES[0], 7) == seg.search(QUERIES[0], 7)
+    # one-query batch + per-query k + cold engines
+    assert seg.search_tokens_distributed_batch(
+        [tokenize_stem(QUERIES[0])], 7
+    )[0] == seg.search(QUERIES[0], 7)
     ks = [3, 9, 1, 15, 2, 4]
     got_k = seg.search_tokens_distributed_batch(token_lists, ks)
     for q, kv, res in zip(batch, ks, got_k):
