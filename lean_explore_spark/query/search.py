@@ -33,16 +33,18 @@ Scale notes (100 TB story):
   its query terms' buckets) and the ``term`` predicate is checked
   against parquet row-group statistics; rows are sorted by term within
   each bucket at build time so row-group min/max actually cut.
-  Postings become ``codec.PackedPostings`` in one place,
-  ``_packed_lists``, as numpy views over the read columns.
+  Postings become kernel input in one place, ``SegmentPostings``: a
+  read's columns as a few flat arrays plus a term → row-range index,
+  from which a query's rows become ``codec.PackedPostings`` views.
 * shards are independent doc ranges → the Spark executor scores
   (segment, shard) units as parallel tasks, each loading only its
   span-bounded doc-length slice, and merges k-heaps.  Spark stays the
   build engine and the engine of that batch job.
-* ``preload=True`` pins the dictionary + packed postings in driver
-  memory — the analog of the reference preloading its assets before
-  benching (benchmarking/benchmark_search_rate.py:260-300); cold mode
-  reads the pruned slices per query and bounds its doc-length cache.
+* ``preload=True`` pins the dictionary + each segment's
+  ``SegmentPostings`` in driver memory — the analog of the reference
+  preloading its assets before benching
+  (benchmarking/benchmark_search_rate.py:260-300); cold mode reads the
+  pruned slices per query and bounds its doc-length cache.
 """
 
 from __future__ import annotations
@@ -55,10 +57,11 @@ import os
 from collections import OrderedDict
 from functools import reduce
 from pathlib import Path
-from typing import Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple
+from typing import Dict, List, NamedTuple, Optional, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
@@ -78,7 +81,7 @@ Unit = Tuple[int, int]  # (segment index, shard)
 # a reader's postings columns (``POSTINGS_SCHEMA`` plus the shard
 # partition, less the bucket it was pruned on) and, of those, the
 # block-directory lists in ``codec.PackedPostings`` field order, which
-# ``_packed_lists`` fills positionally after ``count``
+# ``SegmentPostings.by_shard`` fills positionally after ``count``
 _POSTINGS_COLS = ["shard"] + [n for n in POSTINGS_SCHEMA.names if n != "bucket"]
 _BLOCK_DIR = [
     f.name for f in dataclasses.fields(codec.PackedPostings)
@@ -86,51 +89,109 @@ _BLOCK_DIR = [
 ]
 
 
-def _binary_parts(arr: pa.Array) -> Tuple[np.ndarray, List[int]]:
+def _binary_parts(arr: pa.Array) -> Tuple[np.ndarray, np.ndarray]:
     """A binary array's value bytes (numpy view) and its n+1 offsets."""
     _, offs, data = arr.buffers()
     width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
     o = np.frombuffer(offs, dtype=width)[arr.offset : arr.offset + len(arr) + 1]
     if data is None:  # every value empty
-        return np.zeros(0, dtype=np.uint8), o.tolist()
-    return np.frombuffer(data, dtype=np.uint8), o.tolist()
+        return np.zeros(0, dtype=np.uint8), o
+    return np.frombuffer(data, dtype=np.uint8), o
 
 
-def _packed_lists(
-    tbl: pa.Table, bm_scale: float = 1.0
-) -> Iterator[Tuple[str, int, codec.PackedPostings]]:
-    """Postings rows as kernel input, ``(term, shard, packed)`` per row —
-    the ONE place block maxima reach a kernel.  Preload, cold reads and
-    the distributed job's tasks all build their lists here.  A segment
-    stores ``block_max_score`` as tf-parts at its OWN avgdl; scored at
-    the global avgdl they may be larger, so the caller passes the
-    segment's ``bm_scale`` (see ``SearchEngine.__init__``) and the
-    kernels only ever see true upper bounds.  1.0 leaves the stored
-    maxima untouched.
+class SegmentPostings:
+    """One segment's postings rows as the columns pyarrow read — the
+    ONE place block maxima reach a kernel.  Preload holds one per
+    segment (every row); cold reads and the Spark batch tasks build one
+    from their pruned tables.  A segment stores ``block_max_score`` as
+    tf-parts at its OWN avgdl; scored at the global avgdl they may be
+    larger, so the constructor multiplies them by the segment's
+    ``bm_scale`` (see ``SearchEngine.__init__``) once, and the kernels
+    only ever see true upper bounds.  1.0 leaves the stored maxima
+    untouched.
 
-    Columnar: each list column is flattened once and every row's
-    directory arrays and payload are numpy views at its offsets; only
-    the term, shard and count become Python values per row."""
-    for batch in tbl.to_batches():
-        if not batch.num_rows:
-            continue
-        terms = batch.column("term").to_numpy(zero_copy_only=False).tolist()
-        shards = batch.column("shard").to_numpy().tolist()
-        counts = batch.column("df_shard").to_numpy().tolist()
-        dirs = []
+    Rows are ordered by (term, shard) and held as a few flat arrays, not
+    one Python object per row: the six block-directory value arrays,
+    the payload bytes, ``_meta`` (int64 per row: shard, df_shard,
+    directory start/end, payload start/end) and ``_index`` (term → its
+    row range).  ``by_shard`` builds ``codec.PackedPostings`` views for
+    the rows a query asks for; each view's payload is bounded by its own
+    row's offsets, so a directory that overstates its row's bytes fails
+    the decode's length check instead of reading the next row."""
+
+    __slots__ = ("_dirs", "_payload", "_meta", "_index")
+
+    def __init__(self, tbl: pa.Table, bm_scale: float = 1.0) -> None:
+        tbl = tbl.select(_POSTINGS_COLS).sort_by(
+            [("term", "ascending"), ("shard", "ascending")]
+        )
+        n = tbl.num_rows
+        offs = None
+        self._dirs = []
         for name in _BLOCK_DIR:
-            col = batch.column(name)
-            vals = col.values.to_numpy()
+            col = tbl.column(name).combine_chunks()
+            o = col.offsets.to_numpy()
+            vals = col.values.to_numpy()[o[0] : o[-1]]
+            o = o - o[0]
+            if offs is None:
+                offs = o
+            elif not np.array_equal(o, offs):
+                raise ValueError(
+                    f"{name} disagrees with block_first on a row's block count"
+                )
             if name == "block_max_score" and bm_scale != 1.0:
                 vals = vals * bm_scale
-            dirs.append((vals, col.offsets.to_numpy().tolist()))
-        payload, poffs = _binary_parts(batch.column("payload"))
-        for i, (t, shard, n) in enumerate(zip(terms, shards, counts)):
-            yield t, shard, codec.PackedPostings(
-                n,
-                *(v[o[i] : o[i + 1]] for v, o in dirs),
-                payload=payload[poffs[i] : poffs[i + 1]],
-            )
+            self._dirs.append(vals)
+        self._payload, poffs = _binary_parts(
+            tbl.column("payload").combine_chunks()
+        )
+        self._meta = np.stack(
+            [
+                tbl.column("shard").to_numpy(),
+                tbl.column("df_shard").to_numpy(),
+                offs[:-1], offs[1:], poffs[:-1], poffs[1:],
+            ],
+            axis=1,
+        ).astype(np.int64)
+        # term runs: a row starts one where its term differs from the last
+        terms = tbl.column("term").combine_chunks()
+        new_run = pc.not_equal(terms[1:], terms[:-1])
+        starts = np.flatnonzero(
+            np.concatenate([[n > 0], new_run.to_numpy(zero_copy_only=False)])
+        )
+        bounds = starts.tolist() + [n]
+        self._index: Dict[str, Tuple[int, int]] = dict(
+            zip(terms.take(starts).to_pylist(), zip(bounds, bounds[1:]))
+        )
+
+    def by_shard(
+        self, terms, shard: Optional[int] = None
+    ) -> Dict[int, List[Tuple[str, codec.PackedPostings]]]:
+        """``{shard: [(term, packed)]}`` over the rows of ``terms``, each
+        shard's rows in the order of ``terms`` — or, with ``shard``,
+        only that shard.  Views, no copies: this runs per query, so a
+        row costs one tuple unpack, seven slices and one dataclass."""
+        out: Dict[int, List[Tuple[str, codec.PackedPostings]]] = {}
+        first, last, count, gap, tf, bmax = self._dirs
+        payload, meta, index = self._payload, self._meta, self._index
+        packed = codec.PackedPostings
+        for t in terms:
+            r = index.get(t)
+            if r is None:
+                continue
+            for s, n, d0, d1, p0, p1 in meta[r[0] : r[1]].tolist():
+                if shard is None or s == shard:
+                    d = slice(d0, d1)
+                    row = (t, packed(
+                        n, first[d], last[d], count[d], gap[d], tf[d],
+                        bmax[d], payload[p0:p1],
+                    ))
+                    rows = out.get(s)
+                    if rows is None:
+                        out[s] = [row]
+                    else:
+                        rows.append(row)
+        return out
 
 
 def _add_dfs(dfs: Dict[str, int], tbl: pa.Table) -> None:
@@ -200,25 +261,25 @@ def _merge(heaps, k: int) -> list:
 
 # Engine registry inherited by forked hot-query workers, KEYED per
 # engine and never overwritten (registered in _ensure_fork_pool before
-# the pool forks; children read the preloaded postings/doc-length
-# dicts through it COW).  A single mutable global would be wrong with
-# several live engines: a worker forked after another engine's
-# registration would silently score against the wrong index.  Keyed
-# entries are present in every fork taken after their registration, so
-# lookups stay correct no matter when a worker spawns; close_pool()
-# removes the entry (it also keeps a strong ref, pinning the engine
-# while its pool lives — intended).
+# the pool forks; children read the preloaded ``SegmentPostings`` and
+# doc-length slices through it COW).  A single mutable global would be
+# wrong with several live engines: a worker forked after another
+# engine's registration would silently score against the wrong index.
+# Keyed entries are present in every fork taken after their
+# registration, so lookups stay correct no matter when a worker spawns;
+# close_pool() removes the entry (it also keeps a strong ref, pinning
+# the engine while its pool lives — intended).
 _FORK_ENGINES: dict = {}
 
 
 def _fork_score_unit(engine_key, unit, q, theta0):
     """Runs inside a forked worker: score one unit into a local k-heap
-    from the parent's preloaded packed lists (no deserialization — the
-    fork shares them copy-on-write)."""
+    from the parent's preloaded ``SegmentPostings`` (no deserialization:
+    the fork shares their few flat arrays copy-on-write, and only the
+    unit's rows of the query's terms become ``PackedPostings`` views)."""
     eng = _FORK_ENGINES[engine_key]
     seg, shard = unit
-    cache = eng._postings_cache[seg]
-    rows = [(t, p) for t in q.uindex for s, p in cache.get(t, ()) if s == shard]
+    rows = eng._resident[seg].by_shard(q.uindex, shard).get(shard, [])
     heap: list = []
     _score_unit(rows, eng._doc_lens(unit), q, heap, theta0=theta0)
     return heap
@@ -272,14 +333,18 @@ class SearchEngine:
             OrderedDict()
         )
         self._dl_cache_bound = dl_cache_shards or self.DL_CACHE_SHARDS
+        # guards the cold-mode LRU: request threads of a
+        # ThreadingHTTPServer share it, and one may evict a slice
+        # between another's lookup and its use
+        self._dl_lock = threading.Lock()
         # serializes fork-pool creation: the engine is served from a
         # ThreadingHTTPServer, where two hot queries could otherwise
         # race the lazy create (ADVICE r8, medium)
         self._fork_pool_lock = threading.Lock()
         # global df per term (summed over segments)
         self._dict_cache: Optional[Dict[str, int]] = None
-        # per segment: term → [(shard, PackedPostings)] in shard order
-        self._postings_cache: Optional[List[Dict[str, list]]] = None
+        # per segment: its postings as columns (preload only)
+        self._resident: Optional[List[SegmentPostings]] = None
         self._unit_list: Optional[List[Unit]] = None
         # (segment, table) → discovered pyarrow dataset
         self._datasets: Dict[Tuple[int, str], ds.Dataset] = {}
@@ -290,22 +355,17 @@ class SearchEngine:
     # -- asset access ----------------------------------------------------
 
     def _preload(self) -> None:
-        self._preloaded = True  # set first: _doc_lens skips LRU eviction
         dfs: Dict[str, int] = {}
-        caches: List[Dict[str, list]] = []
+        resident: List[SegmentPostings] = []
         for seg in range(len(self.roots)):
             _add_dfs(dfs, self._read(seg, "dictionary", ["term", "df"]))
-            cache: Dict[str, list] = {}
             tbl = self._read(seg, "postings", _POSTINGS_COLS)
-            for t, shard, packed in _packed_lists(tbl, self._bm_scale[seg]):
-                cache.setdefault(t, []).append((shard, packed))
-            for lst in cache.values():
-                lst.sort(key=lambda sp: sp[0])
-            caches.append(cache)
+            resident.append(SegmentPostings(tbl, self._bm_scale[seg]))
         self._dict_cache = dfs
-        self._postings_cache = caches
-        for unit in self._shards():
-            self._doc_lens(unit)
+        self._resident = resident
+        for seg, shard in self._shards():
+            self._dl_cache[seg, shard] = read_doc_lens(str(self.roots[seg]), shard)
+        self._preloaded = True  # last: from here _doc_lens only reads
 
     def _dataset(self, seg: int, table: str) -> ds.Dataset:
         """One segment table as a hive-partitioned pyarrow dataset,
@@ -359,27 +419,39 @@ class SearchEngine:
         if not terms:  # a query with no live term reads nothing
             return by_unit
         for seg in range(len(self.roots)):
-            if self._postings_cache is not None:
-                cache = self._postings_cache[seg]
-                rows = [(t, s, p) for t in terms for s, p in cache.get(t, ())]
+            if self._resident is not None:
+                post = self._resident[seg]
             else:
                 tbl = self._read(seg, "postings", _POSTINGS_COLS, terms)
-                rows = _packed_lists(tbl, self._bm_scale[seg])
-            for t, shard, packed in rows:
-                by_unit.setdefault((seg, shard), []).append((t, packed))
+                post = SegmentPostings(tbl, self._bm_scale[seg])
+            for shard, rows in post.by_shard(terms).items():
+                by_unit[seg, shard] = rows
         return by_unit
 
     def _doc_lens(self, unit: Unit) -> Tuple[np.ndarray, np.ndarray]:
-        if unit not in self._dl_cache:
-            seg, shard = unit
-            self._dl_cache[unit] = read_doc_lens(str(self.roots[seg]), shard)
-            if not self._preloaded:
-                # LRU-bound in cold mode (preload pins by design)
-                while len(self._dl_cache) > self._dl_cache_bound:
-                    self._dl_cache.popitem(last=False)
-        else:
+        """A unit's (doc ids, doc lengths).  Preloaded: pinned at open
+        and never written again, so read without the lock (a forked
+        worker then never waits on a lock some thread held at fork
+        time).  Cold: an LRU of ``dl_cache_shards`` slices shared by
+        request threads, so lookup, insert and eviction run under
+        ``_dl_lock``, and the slice returned is the one read or
+        inserted, never a second lookup another thread may have
+        evicted."""
+        if self._preloaded:
+            return self._dl_cache[unit]
+        with self._dl_lock:
+            dl = self._dl_cache.get(unit)
+            if dl is not None:
+                self._dl_cache.move_to_end(unit)
+                return dl
+        seg, shard = unit
+        dl = read_doc_lens(str(self.roots[seg]), shard)  # outside the lock
+        with self._dl_lock:
+            self._dl_cache[unit] = dl
             self._dl_cache.move_to_end(unit)
-        return self._dl_cache[unit]
+            while len(self._dl_cache) > self._dl_cache_bound:
+                self._dl_cache.popitem(last=False)
+        return dl
 
     def iter_doc_ids(self):
         """All doc ids ascending, shard-LAZY: within a segment, shard s
@@ -522,17 +594,18 @@ class SearchEngine:
 
     def _ensure_fork_pool(self, n: int = 1):
         """Persistent process pool FORKED after preload: children share
-        the preloaded postings/doc-length dicts copy-on-write — no GIL,
+        the preloaded ``SegmentPostings`` (a few flat arrays per
+        segment) and doc-length slices copy-on-write — no GIL,
         no per-query serialization of index data (only the tiny query
         plan ships per task, and k results ship back).  Threads measured
         10× SLOWER than sequential here (the per-shard numpy calls are
         too short to amortize GIL handoff at 400k–6.4M shard sizes);
         fork is the standard CPython answer.  The query path has no py4j
-        at all: children score from the inherited packed lists and
-        doc-length slices, which are numpy arrays, and never call into
-        Spark or arrow.  Pool is per-engine; preload is required
-        (post-fork loads would not be visible to children).  A server
-        calls this before its request threads start (APIServer.start)."""
+        at all: children score from views of the inherited arrays and
+        never call into Spark or arrow.  Pool is per-engine; preload is
+        required (post-fork loads would not be visible to children).  A
+        server calls this before its request threads start
+        (APIServer.start)."""
         from concurrent.futures import ProcessPoolExecutor
         import multiprocessing as mp
 
@@ -623,8 +696,8 @@ class SearchEngine:
         pruning; (2) Python threads were 10× slower than sequential
         (shard-sized numpy calls are too short to amortize GIL
         handoff), so the fan-out uses processes forked AFTER preload —
-        children read the postings dicts copy-on-write, only the query
-        plan and k-row results cross the boundary.
+        children read the resident postings copy-on-write, only the
+        query plan and k-row results cross the boundary.
 
         Results are bit-identical to search_tokens (``_merge``).  With
         fewer than two units besides the seed to fan out (``threads=1``,
@@ -707,17 +780,18 @@ class SearchEngine:
 
     def _spark(self, plans: List[_Query], mode: str) -> List[list]:
         """Spark batch executor: every query's units in ONE job, one
-        task per (segment, shard) unit; returns, per query, the heap
-        entries its tasks emitted.  The union of the queries' terms is
-        fetched in one pruned postings read per segment; each task
-        parses each term slice once, loads only its span-bounded
-        doc-length file and runs the unit scorer once per query; a
-        per-query row_number window (planned as a partial
-        WindowGroupLimit before the exchange) bounds each task's output
-        and the driver at O(Q·k) rows.  Postings never transit the
-        driver.  A preloaded driver seeds each query's θ0 (``_seed``)
-        so every task can prune from the start; cold engines skip
-        seeding."""
+        task per (segment, shard) unit; returns, per query, its seed
+        heap plus the heap entries its tasks emitted.  The union of the
+        queries' terms is fetched in one pruned postings read per
+        segment; each task reads its rows into one ``SegmentPostings``,
+        loads only its span-bounded doc-length file and runs the unit
+        scorer once per query; a per-query row_number window (planned
+        as a partial WindowGroupLimit before the exchange) bounds each
+        task's output and the driver at O(Q·k) rows.  Postings never
+        transit the driver.  A preloaded driver scores each query's
+        densest unit itself (``_seed``): its θ0 lets every task prune
+        from the start, its heap joins the merge, and that unit's task
+        skips the query.  Cold engines skip seeding."""
         from pyspark.sql.window import Window
 
         from lean_explore_spark.pyfiles import ensure_py_files
@@ -726,12 +800,13 @@ class SearchEngine:
         all_terms = sorted({t for q in plans for t in q.uindex})
         if not all_terms:  # nothing to score (a query with terms has k > 0)
             return heaps
+        seeds: List[Optional[Unit]] = [None] * len(plans)
         theta0s: List[Optional[float]] = [None] * len(plans)
         if self._preloaded and mode in ("blockmax", "auto"):
             for qi, q in enumerate(plans):
                 by_unit = self._fetch_postings(q.uindex)
                 if by_unit:
-                    theta0s[qi] = self._seed(by_unit, q)[2]
+                    seeds[qi], heaps[qi], theta0s[qi] = self._seed(by_unit, q)
         ensure_py_files(self.spark)
         postings = reduce(
             lambda a, b: a.unionByName(b),
@@ -753,12 +828,13 @@ class SearchEngine:
 
             seg, shard = key[0].as_py(), key[1].as_py()
             dl = read_doc_lens(roots[seg], shard)
-            # parse each term slice ONCE, share across queries (a
-            # cursor only pairs a list with the query's term index)
-            packed = {t: p for t, _, p in S._packed_lists(tbl, scales[seg])}
+            # read the columns ONCE, share across queries
+            post = S.SegmentPostings(tbl, scales[seg])
             qids, docs, scores = [], [], []
             for qi, q in enumerate(plans):
-                rows = [(t, packed[t]) for t in q.uindex if t in packed]
+                if seeds[qi] == (seg, shard):  # the driver scored it
+                    continue
+                rows = post.by_shard(q.uindex, shard).get(shard)
                 if not rows:
                     continue
                 heap: list = []

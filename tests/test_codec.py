@@ -166,6 +166,76 @@ def test_corrupted_directory_raises(n, block, how):
         wand.wand_shard([cursor], ctx, universe, lens, [], k=len(universe))
 
 
+def _segment_table(lists, dirs=None):
+    """A postings table of one shard, one row per ``(term, packed)``,
+    in the reader's column layout; ``dirs`` overrides a term's
+    block-directory arrays."""
+    import pyarrow as pa
+
+    dirs = dirs or {}
+    cols = {"shard": pa.array([0] * len(lists), pa.int32()),
+            "term": [t for t, _ in lists],
+            "df_shard": pa.array([p.count for _, p in lists], pa.int64())}
+    for f in dataclasses.fields(codec.PackedPostings):
+        if f.name.startswith("block_"):
+            cols[f.name] = [
+                dirs.get(t, {}).get(f.name, getattr(p, f.name)).tolist()
+                for t, p in lists
+            ]
+    cols["payload"] = pa.array([bytes(p.payload) for _, p in lists], pa.binary())
+    return pa.table(cols)
+
+
+@pytest.mark.parametrize("how", ["next_row_block", "count+1", "bytes+1"])
+def test_corrupted_row_in_segment_never_reads_its_neighbour(how):
+    """In a segment's flat payload buffer every row's bytes sit next to
+    the next row's.  A directory that overstates its row's bytes or
+    counts must raise ValueError when that row is decoded, never decode
+    the neighbour's bytes — here the worst case too: a phantom block
+    whose directory entry is exactly the next row's, which a view not
+    bounded by its own row would decode cleanly into the next row's
+    postings.  The neighbours still decode exactly."""
+    from lean_explore_spark.query.search import SegmentPostings
+
+    universe = np.arange(0, 5000, 5, dtype=np.int64)
+    lists, want = [], {}
+    for i, t in enumerate(["alpha", "bravo", "charlie"]):
+        ranks = np.arange(i, 900, 7 + i, dtype=np.int64)
+        tfs = np.arange(1, len(ranks) + 1, dtype=np.int64) % 5 + 1
+        lists.append((t, codec.pack_postings(
+            universe[ranks], tfs, np.full(len(ranks), 50), avgdl=50.0,
+            block_size=64, ranks=ranks,
+        )))
+        want[t] = (universe[ranks], tfs)
+    bad = {name: getattr(lists[1][1], name).copy() for name in (
+        "block_first", "block_last", "block_count", "block_gap_bytes",
+        "block_tf_bytes", "block_max_score")}
+    if how == "next_row_block":
+        nxt = lists[2][1]
+        bad = {k: np.concatenate([v, getattr(nxt, k)[:1]]) for k, v in bad.items()}
+    elif how == "count+1":
+        bad["block_count"][-1] += 1
+    else:
+        bad["block_tf_bytes"][-1] += 1
+    seg = SegmentPostings(_segment_table(lists, {"bravo": bad}))
+    [rows] = seg.by_shard(["alpha", "bravo", "charlie"]).values()
+    rows = dict(rows)
+    assert set(rows) == {"alpha", "bravo", "charlie"}
+    last = len(rows["bravo"].block_first) - 1
+    with pytest.raises(ValueError):
+        codec.unpack_all(rows["bravo"], universe)
+    with pytest.raises(ValueError):
+        codec.unpack_selected(rows["bravo"], [last], universe)
+    for t in ("alpha", "charlie"):
+        d, tf = codec.unpack_all(rows[t], universe)
+        assert np.array_equal(d, want[t][0]) and np.array_equal(tf, want[t][1])
+    # a row whose directory columns disagree on its block count is
+    # refused when the segment is built
+    short = dict(bad, block_max_score=bad["block_max_score"][:-1])
+    with pytest.raises(ValueError):
+        SegmentPostings(_segment_table(lists, {"bravo": short}))
+
+
 def test_cursor_construction_decodes_nothing(monkeypatch):
     """A TermCursor is a view: constructing one decodes nothing, and a
     bulk kernel decodes each list exactly once."""

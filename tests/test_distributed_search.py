@@ -145,6 +145,37 @@ def test_batch_distributed_per_query_k_and_modes(engine, ostats):
         engine.search_tokens_distributed_batch(token_lists, [5, 6])
 
 
+def test_batch_seed_unit_is_scored_once(engine, ostats, monkeypatch):
+    """A preloaded engine scores each query's densest unit on the driver
+    for θ0 (``_seed``); that heap joins the merge, so the unit's Spark
+    task must skip the query: no task row of a seeded query may come
+    from its seed unit, and answers stay the oracle's."""
+    queries = ["the data page", "fast table scan merge join", "customer orders data"]
+    token_lists = [tokenize_stem(q) for q in queries]
+    seeds = []
+    seed = engine._seed
+
+    def recording(by_unit, q):
+        out = seed(by_unit, q)
+        seeds.append(out[0])
+        return out
+
+    monkeypatch.setattr(engine, "_seed", recording)
+    task_rows = []
+    monkeypatch.setattr(
+        engine, "_plan_probe", lambda df: task_rows.extend(df.collect())
+    )
+    for mode in ("blockmax", "auto"):
+        seeds.clear()
+        task_rows.clear()
+        got = engine.search_tokens_distributed_batch(token_lists, 10, mode=mode)
+        assert got == [oracle.top_k(ostats, t, 10) for t in token_lists]
+        assert len(seeds) == len(queries) and task_rows
+        for r in task_rows:
+            seed_ids = set(engine._doc_lens(seeds[r["qid"]])[0].tolist())
+            assert r["doc_id"] not in seed_ids, (mode, queries[r["qid"]])
+
+
 @pytest.mark.parametrize("query", QUERIES)
 def test_parallel_driver_equals_local(engine, query):
     """r8 hot-query path: the thread-fanned per-shard kernel merges

@@ -132,7 +132,7 @@ def test_cold_mode_parity(service, spark):
         pagerank=service.pagerank, preload=False,
     )
     assert cold.engine._dict_cache is None
-    assert cold.engine._postings_cache is None
+    assert cold.engine._resident is None
     for q in ("fast table scan", "merge join index"):
         a = service.search(q, sim_threshold=-1.0)
         b = cold.search(q, sim_threshold=-1.0)
@@ -141,7 +141,7 @@ def test_cold_mode_parity(service, spark):
         ]
     # cold mode never filled the preload caches
     assert cold.engine._dict_cache is None
-    assert cold.engine._postings_cache is None
+    assert cold.engine._resident is None
 
 
 def test_lexical_search_distributed_parity(service):
