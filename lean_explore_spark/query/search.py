@@ -18,12 +18,15 @@ Segments: an engine opens an ORDERED LIST of index roots — a single
 index is the one-segment case; a base index plus streamed delta
 segments (streaming/incremental.py) is the general one, base first.
 N, avgdl and df are summed over the segments, so scores equal a
-monolithic rebuild over the same docs.  Every unit of work is a
-(segment, shard) pair.  Routes differ only in the executor that runs
-a plan's units: inline on one shared heap (``search_tokens``), on a
-forked process pool after θ0 seeding (``search_tokens_parallel``;
-``search_tokens_routed`` picks between the two by posting mass), or
-as the tasks of one Spark job (``search_tokens_distributed_batch``).
+monolithic rebuild over the same docs.  A unit of work is a (segment,
+shard) pair, or — on a preloaded engine's inline executor — a whole
+segment whose every shard takes the exhaustive kernel: one kernel call
+and one decode per term for the segment instead of one per shard.
+Routes differ only in the executor that runs a plan's units: inline on
+one shared heap (``search_tokens``), on a forked process pool after θ0
+seeding (``search_tokens_parallel``; ``search_tokens_routed`` picks
+between the two by posting mass), or as the tasks of one Spark job
+(``search_tokens_distributed_batch``).
 
 Scale notes (100 TB story):
 
@@ -35,16 +38,19 @@ Scale notes (100 TB story):
   each bucket at build time so row-group min/max actually cut.
   Postings become kernel input in one place, ``SegmentPostings``: a
   read's columns as a few flat arrays plus a term → row-range index,
-  from which a query's rows become ``codec.PackedPostings`` views.
+  from which a query's rows become ``codec.PackedPostings`` views, one
+  per (term, shard) row or one per term over all its shards.
 * shards are independent doc ranges → the Spark executor scores
   (segment, shard) units as parallel tasks, each loading only its
   span-bounded doc-length slice, and merges k-heaps.  Spark stays the
   build engine and the engine of that batch job.
 * ``preload=True`` pins the dictionary + each segment's
-  ``SegmentPostings`` in driver memory — the analog of the reference
-  preloading its assets before benching
+  ``SegmentPostings`` and doc lengths (one array pair per segment,
+  which each shard's entry views) in driver memory — the analog of the
+  reference preloading its assets before benching
   (benchmarking/benchmark_search_rate.py:260-300); cold mode reads the
-  pruned slices per query and bounds its doc-length cache.
+  pruned slices per query and bounds its doc-length cache, so it keeps
+  (segment, shard) units.
 """
 
 from __future__ import annotations
@@ -75,13 +81,15 @@ from lean_explore_spark.index.builder import (
 )
 from lean_explore_spark.query import wand
 
-Unit = Tuple[int, int]  # (segment index, shard)
+# (segment index, shard); the inline executor's whole-segment unit has
+# shard None
+Unit = Tuple[int, Optional[int]]
 
 
 # a reader's postings columns (``POSTINGS_SCHEMA`` plus the shard
 # partition, less the bucket it was pruned on) and, of those, the
 # block-directory lists in ``codec.PackedPostings`` field order, which
-# ``SegmentPostings.by_shard`` fills positionally after ``count``
+# ``SegmentPostings.views`` fills positionally after ``count``
 _POSTINGS_COLS = ["shard"] + [n for n in POSTINGS_SCHEMA.names if n != "bucket"]
 _BLOCK_DIR = [
     f.name for f in dataclasses.fields(codec.PackedPostings)
@@ -113,13 +121,15 @@ class SegmentPostings:
     Rows are ordered by (term, shard) and held as a few flat arrays, not
     one Python object per row: the six block-directory value arrays,
     the payload bytes, ``_meta`` (int64 per row: shard, df_shard,
-    directory start/end, payload start/end) and ``_index`` (term → its
-    row range).  ``by_shard`` builds ``codec.PackedPostings`` views for
-    the rows a query asks for; each view's payload is bounded by its own
-    row's offsets, so a directory that overstates its row's bytes fails
-    the decode's length check instead of reading the next row."""
+    directory start/end, payload start/end), ``_index`` (term → its row
+    range) and ``_bad`` (the rows whose directory byte total disagrees
+    with their payload length; none in an intact index).  ``views``
+    builds ``codec.PackedPostings`` views for the rows a query asks for,
+    one per row or one per term over all its rows; a view holding a row
+    in ``_bad`` raises instead of decoding a neighbouring row's
+    bytes."""
 
-    __slots__ = ("_dirs", "_payload", "_meta", "_index")
+    __slots__ = ("_dirs", "_payload", "_meta", "_index", "_bad")
 
     def __init__(self, tbl: pa.Table, bm_scale: float = 1.0) -> None:
         tbl = tbl.select(_POSTINGS_COLS).sort_by(
@@ -153,6 +163,13 @@ class SegmentPostings:
             ],
             axis=1,
         ).astype(np.int64)
+        # each row's directory byte total against its payload length
+        _, _, _, gap, tf, _ = self._dirs
+        end = np.zeros(len(gap) + 1, dtype=np.int64)
+        np.cumsum(gap + tf, out=end[1:])
+        self._bad = frozenset(np.flatnonzero(
+            end[offs[1:]] - end[offs[:-1]] != np.diff(poffs)
+        ).tolist())
         # term runs: a row starts one where its term differs from the last
         terms = tbl.column("term").combine_chunks()
         new_run = pc.not_equal(terms[1:], terms[:-1])
@@ -164,33 +181,62 @@ class SegmentPostings:
             zip(terms.take(starts).to_pylist(), zip(bounds, bounds[1:]))
         )
 
-    def by_shard(
-        self, terms, shard: Optional[int] = None
-    ) -> Dict[int, List[Tuple[str, codec.PackedPostings]]]:
+    def shard_mass(self, terms) -> Dict[int, int]:
+        """Σ ``count`` per shard over the rows of ``terms``."""
+        mass: Dict[int, int] = {}
+        meta, index = self._meta, self._index
+        for t in terms:
+            r = index.get(t)
+            if r is not None:
+                for s, n in meta[r[0] : r[1], :2].tolist():
+                    mass[s] = mass.get(s, 0) + n
+        return mass
+
+    def views(
+        self, terms, shard: Optional[int] = None, whole: bool = False
+    ) -> Dict[Optional[int], List[Tuple[str, codec.PackedPostings]]]:
         """``{shard: [(term, packed)]}`` over the rows of ``terms``, each
-        shard's rows in the order of ``terms`` — or, with ``shard``,
-        only that shard.  Views, no copies: this runs per query, so a
-        row costs one tuple unpack, seven slices and one dataclass."""
-        out: Dict[int, List[Tuple[str, codec.PackedPostings]]] = {}
+        shard's rows in the order of ``terms`` — with ``shard``, only
+        that shard's.  With ``whole``, ``{None: [(term, packed)]}``: one
+        view per term over its rows in every shard.  Rows sort by
+        (term, shard) and shards are ascending doc-id ranges, so a
+        term's rows are one run of directory entries and payload bytes,
+        and the run is a valid posting list against the segment's
+        shard-concatenated doc ids (a block's rank comes from its
+        ``block_first``).  Views, no copies: this runs per query, so a
+        view costs seven slices and one dataclass.  A view whose rows
+        include one whose directory disagrees with its own payload
+        length raises ``ValueError``: decoding it could read the next
+        row's bytes."""
+        out: Dict[Optional[int], List[Tuple[str, codec.PackedPostings]]] = {}
         first, last, count, gap, tf, bmax = self._dirs
         payload, meta, index = self._payload, self._meta, self._index
-        packed = codec.PackedPostings
+        bad = self._bad
         for t in terms:
             r = index.get(t)
             if r is None:
                 continue
-            for s, n, d0, d1, p0, p1 in meta[r[0] : r[1]].tolist():
-                if shard is None or s == shard:
-                    d = slice(d0, d1)
-                    row = (t, packed(
-                        n, first[d], last[d], count[d], gap[d], tf[d],
-                        bmax[d], payload[p0:p1],
-                    ))
-                    rows = out.get(s)
-                    if rows is None:
-                        out[s] = [row]
-                    else:
-                        rows.append(row)
+            rows = meta[r[0] : r[1]].tolist()
+            if whole:
+                runs = [(None, 0, len(rows))]
+            else:
+                runs = [
+                    (row[0], i, i + 1) for i, row in enumerate(rows)
+                    if shard is None or row[0] == shard
+                ]
+            for key, lo, hi in runs:
+                if bad and not bad.isdisjoint(range(r[0] + lo, r[0] + hi)):
+                    raise ValueError(
+                        f"a postings row of {t!r} has a block directory "
+                        "that disagrees with its payload length"
+                    )
+                d = slice(rows[lo][2], rows[hi - 1][3])
+                view = codec.PackedPostings(
+                    sum(row[1] for row in rows[lo:hi]), first[d], last[d],
+                    count[d], gap[d], tf[d], bmax[d],
+                    payload[rows[lo][4] : rows[hi - 1][5]],
+                )
+                out.setdefault(key, []).append((t, view))
         return out
 
 
@@ -216,24 +262,33 @@ class _Query(NamedTuple):
     k: int
 
 
+def _exhaustive(mode: str, mass: int) -> bool:
+    """Whether a shard holding ``mass`` of a query's postings takes the
+    exhaustive kernel under ``mode`` — the kernel rule of
+    ``_score_unit``, and the inline executor's rule for scoring a whole
+    segment as one unit (``SearchEngine._fetch_postings``)."""
+    return mode == "bulk" or (
+        mode == "auto" and mass <= SearchEngine.BULK_THRESHOLD
+    )
+
+
 def _score_unit(rows, dl, q: _Query, heap, mode="auto", theta0=None) -> None:
     """Score one unit's ``(term, packed)`` rows for query ``q`` into
     ``heap`` — the ONE place cursors are built and a kernel is picked.
-    The inline loop, fork workers and Spark batch tasks all call it;
-    they differ only in where ``rows`` and the unit's doc lengths ``dl``
-    come from.  'auto' picks vectorized bulk for small posting totals,
-    block-max-pruned bulk otherwise; 'wand'/'bulk'/'blockmax' force a
-    path — all produce bit-identical scores (tests assert it).
-    ``theta0`` only feeds the block-max kernel (the others never prune
-    on it)."""
+    A unit is one shard of a segment, or a whole segment whose every
+    shard takes the exhaustive kernel (the inline executor's merged
+    unit, which it scores in mode 'bulk').  The inline loop, fork
+    workers and Spark batch tasks all call it; they differ only in
+    where ``rows`` and the unit's doc lengths ``dl`` come from.  'auto'
+    picks vectorized bulk for small posting totals, block-max-pruned
+    bulk otherwise; 'wand'/'bulk'/'blockmax' force a path — all produce
+    bit-identical scores (tests assert it).  ``theta0`` only feeds the
+    block-max kernel (the others never prune on it)."""
     dl_ids, dl_lens = dl
     cursors = [wand.TermCursor(p, q.uindex[t], dl_ids) for t, p in rows]
     if mode == "wand":
         wand.wand_shard(cursors, q.ctx, dl_ids, dl_lens, heap, q.k)
-    elif mode == "bulk" or (
-        mode == "auto"
-        and sum(p.count for _, p in rows) <= SearchEngine.BULK_THRESHOLD
-    ):
+    elif _exhaustive(mode, sum(p.count for _, p in rows)):
         wand.bulk_score_shard(cursors, q.ctx, dl_ids, dl_lens, heap, q.k)
     else:  # 'blockmax' or auto with a large posting total
         wand.blockmax_bulk_shard(
@@ -279,7 +334,7 @@ def _fork_score_unit(engine_key, unit, q, theta0):
     unit's rows of the query's terms become ``PackedPostings`` views)."""
     eng = _FORK_ENGINES[engine_key]
     seg, shard = unit
-    rows = eng._resident[seg].by_shard(q.uindex, shard).get(shard, [])
+    rows = eng._resident[seg].views(q.uindex, shard).get(shard, [])
     heap: list = []
     _score_unit(rows, eng._doc_lens(unit), q, heap, theta0=theta0)
     return heap
@@ -343,8 +398,11 @@ class SearchEngine:
         self._fork_pool_lock = threading.Lock()
         # global df per term (summed over segments)
         self._dict_cache: Optional[Dict[str, int]] = None
-        # per segment: its postings as columns (preload only)
+        # per segment: its postings as columns, and its shards' doc
+        # lengths concatenated in shard order, which the per-shard
+        # ``_dl_cache`` entries view (preload only)
         self._resident: Optional[List[SegmentPostings]] = None
+        self._seg_dl: List[Tuple[np.ndarray, np.ndarray]] = []
         self._unit_list: Optional[List[Unit]] = None
         # (segment, table) → discovered pyarrow dataset
         self._datasets: Dict[Tuple[int, str], ds.Dataset] = {}
@@ -363,8 +421,19 @@ class SearchEngine:
             resident.append(SegmentPostings(tbl, self._bm_scale[seg]))
         self._dict_cache = dfs
         self._resident = resident
-        for seg, shard in self._shards():
-            self._dl_cache[seg, shard] = read_doc_lens(str(self.roots[seg]), shard)
+        for seg, root in enumerate(self.roots):
+            shards = [s for g, s in self._shards() if g == seg]
+            parts = [read_doc_lens(str(root), s) for s in shards]
+            ids, lens = (
+                np.concatenate(c)
+                for c in zip(*(parts or [(np.zeros(0, np.int64),) * 2]))
+            )
+            self._seg_dl.append((ids, lens))
+            at = 0
+            for s, (part, _) in zip(shards, parts):
+                view = slice(at, at + len(part))
+                self._dl_cache[seg, s] = (ids[view], lens[view])
+                at = view.stop
         self._preloaded = True  # last: from here _doc_lens only reads
 
     def _dataset(self, seg: int, table: str) -> ds.Dataset:
@@ -413,23 +482,37 @@ class SearchEngine:
             _add_dfs(dfs, self._read(seg, "dictionary", ["term", "df"], terms))
         return dfs
 
-    def _fetch_postings(self, terms: Sequence[str]) -> Dict[Unit, list]:
-        """Packed lists grouped by unit: {(segment, shard): [(term, packed)]}"""
+    def _fetch_postings(
+        self, terms: Sequence[str], mode: Optional[str] = None
+    ) -> Dict[Unit, list]:
+        """Packed lists grouped by unit: {(segment, shard): [(term,
+        packed)]}.  With ``mode`` (the inline executor's), a preloaded
+        segment whose every shard takes the exhaustive kernel under it
+        is ONE unit, (segment, None), of one view per term over all its
+        shards: one kernel call and one decode per term instead of one
+        per shard.  Other segments keep per-shard units, so block-max
+        pruning and the θ cascade see them as before."""
         by_unit: Dict[Unit, list] = {}
         if not terms:  # a query with no live term reads nothing
             return by_unit
         for seg in range(len(self.roots)):
             if self._resident is not None:
                 post = self._resident[seg]
+                whole = mode is not None and all(
+                    _exhaustive(mode, m)
+                    for m in post.shard_mass(terms).values()
+                )
             else:
                 tbl = self._read(seg, "postings", _POSTINGS_COLS, terms)
                 post = SegmentPostings(tbl, self._bm_scale[seg])
-            for shard, rows in post.by_shard(terms).items():
+                whole = False  # cold: no whole-segment doc lengths held
+            for shard, rows in post.views(terms, whole=whole).items():
                 by_unit[seg, shard] = rows
         return by_unit
 
     def _doc_lens(self, unit: Unit) -> Tuple[np.ndarray, np.ndarray]:
         """A unit's (doc ids, doc lengths).  Preloaded: pinned at open
+        (a whole-segment unit's are the segment's concatenated arrays)
         and never written again, so read without the lock (a forked
         worker then never waits on a lock some thread held at fork
         time).  Cold: an LRU of ``dl_cache_shards`` slices shared by
@@ -438,7 +521,8 @@ class SearchEngine:
         inserted, never a second lookup another thread may have
         evicted."""
         if self._preloaded:
-            return self._dl_cache[unit]
+            seg, shard = unit
+            return self._seg_dl[seg] if shard is None else self._dl_cache[unit]
         with self._dl_lock:
             dl = self._dl_cache.get(unit)
             if dl is not None:
@@ -557,7 +641,9 @@ class SearchEngine:
 
     # below this many postings in a shard, plain exhaustive bulk wins:
     # the block-max bound computation can't pay for itself on a handful
-    # of blocks (above it, block pruning cut p50 2.4× at 400k docs)
+    # of blocks (above it, block pruning cut p50 2.4× at 400k docs).
+    # Per SHARD also where the inline executor merges a segment whose
+    # shards are all at or below it into one bulk unit (``_exhaustive``)
     BULK_THRESHOLD = 4096
 
     # -- executors: who scores a plan's units ------------------------------
@@ -565,11 +651,13 @@ class SearchEngine:
     def _inline(self, q: _Query, by_unit, mode="auto", theta0=None) -> list:
         """Inline executor: the units in order on this thread, into ONE
         shared heap, so each unit prunes on the θ the units before it
-        reached."""
+        reached.  A whole-segment unit exists only where every shard
+        takes the exhaustive kernel, so it is scored in mode 'bulk'."""
         heap: List[Tuple[float, int, int]] = []
         for unit in sorted(by_unit):
             _score_unit(
-                by_unit[unit], self._doc_lens(unit), q, heap, mode, theta0
+                by_unit[unit], self._doc_lens(unit), q, heap,
+                "bulk" if unit[1] is None else mode, theta0,
             )
         return heap
 
@@ -579,7 +667,7 @@ class SearchEngine:
         """One query on the inline executor.  ``mode`` as in
         ``_score_unit``; an unknown one raises ``ValueError``."""
         [q] = self._plan([tokens], [k], mode)
-        heap = self._inline(q, self._fetch_postings(q.uindex), mode)
+        heap = self._inline(q, self._fetch_postings(q.uindex, mode), mode)
         return self._finalize(heap, q)
 
     # Routed-serving posting-mass threshold (r8, VERDICT r7 #5): below
@@ -834,7 +922,7 @@ class SearchEngine:
             for qi, q in enumerate(plans):
                 if seeds[qi] == (seg, shard):  # the driver scored it
                     continue
-                rows = post.by_shard(q.uindex, shard).get(shard)
+                rows = post.views(q.uindex, shard).get(shard)
                 if not rows:
                     continue
                 heap: list = []

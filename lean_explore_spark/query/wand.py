@@ -8,8 +8,10 @@ sweeps shards in order (the fork-pool and Spark executors score units
 on separate heaps and merge top-k — same algorithm, see
 query/search.py).
 
-Kernels (one per (segment, shard) unit; ``search._score_unit`` builds
-the cursors and picks one):
+Kernels (one call per unit: a (segment, shard) pair, or a whole
+segment whose every shard takes the exhaustive kernel, its lists then
+spanning every shard against the segment's concatenated doc ids;
+``search._score_unit`` builds the cursors and picks one):
 
 * ``bulk_score_shard`` — exhaustive and vectorized: every block of
   every list kept;
@@ -20,8 +22,9 @@ the cursors and picks one):
 
 Both bulk kernels share one body, ``_score_kept``: decode through
 ``codec.unpack_all`` / ``codec.unpack_selected`` → touched-row remap →
-X fill → ``QueryContext.score_rows`` → best-first heap push.  A
-``TermCursor`` decodes nothing until ``wand_shard`` starts its scan.
+X fill → ``QueryContext.score_rows`` → the call's top k (every tie at
+the k-th score kept) pushed best-first.  A ``TermCursor`` decodes
+nothing until ``wand_shard`` starts its scan.
 
 Exactness contract (rank-identity, SURVEY.md §2.9):
 
@@ -58,7 +61,8 @@ def _inflate(ub: float) -> float:
 
 
 class TermCursor:
-    """One (term, shard) packed posting list and its query term index.
+    """One term's packed posting list in a unit (its row in one shard,
+    or its rows in every shard of a segment) and its query term index.
     Construction decodes nothing: the bulk kernels decode the list
     through ``codec``, and ``wand_shard`` starts the doc-at-a-time scan
     (``_load_block(0)``) itself, decoding one block at a time and
@@ -82,7 +86,7 @@ class TermCursor:
         uterm: int,
         dl_ids: np.ndarray,
     ):
-        """``dl_ids`` = the shard's sorted doc-id array: rank gaps in
+        """``dl_ids`` = the unit's sorted doc-id array: rank gaps in
         the payload dereference through it (codec docstring)."""
         self.packed = packed
         self.uterm = uterm
@@ -328,11 +332,18 @@ def _score_kept(
         Xt[remap[pos], uterm] = x
     score = ctx.score_rows(Xt)
     uniq = dl_ids[rows]
+    # only this call's top k can enter a k-heap: once they are pushed,
+    # the heap's floor is at least this call's k-th entry.  Keep every
+    # tie at the k-th score (which of them ranks k-th is the doc-id
+    # order's call), then sort just those
+    if len(score) > k:
+        top = np.flatnonzero(score >= np.partition(score, -k)[-k])
+        score, uniq = score[top], uniq[top]
     # best-first by (score desc, doc asc); stop pushing once the heap
     # is full and the next candidate cannot enter
     order = np.lexsort((uniq, -score))
-    for idx in order:
-        entry = (float(score[idx]), -int(uniq[idx]), int(uniq[idx]))
+    for s, d in zip(score[order].tolist(), uniq[order].tolist()):
+        entry = (s, -d, d)
         if len(heap) < k:
             heapq.heappush(heap, entry)
         elif entry > heap[0]:

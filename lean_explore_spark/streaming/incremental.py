@@ -26,7 +26,7 @@ Query-time: there is one searcher.  ``SegmentedSearch`` only resolves
 the segment list — ``base`` first, then the manifest-live segments —
 and hands it to ``query.search.SearchEngine``, which treats a single
 index as the one-segment case.  The engine sums N, avgdl and df over
-the segments and scores every (segment, shard) unit with those GLOBAL
+the segments and scores every unit with those GLOBAL
 stats, so every path (sequential, routed fork pool, distributed,
 candidate scoring) is rank-identical to a from-scratch index over the
 same docs — asserted in tests/test_streaming.py.  This module holds

@@ -166,74 +166,117 @@ def test_corrupted_directory_raises(n, block, how):
         wand.wand_shard([cursor], ctx, universe, lens, [], k=len(universe))
 
 
-def _segment_table(lists, dirs=None):
-    """A postings table of one shard, one row per ``(term, packed)``,
-    in the reader's column layout; ``dirs`` overrides a term's
+def _segment_table(rows, dirs=None):
+    """A postings table, one row per ``(term, shard, packed)``, in the
+    reader's column layout; ``dirs`` overrides a (term, shard) row's
     block-directory arrays."""
     import pyarrow as pa
 
     dirs = dirs or {}
-    cols = {"shard": pa.array([0] * len(lists), pa.int32()),
-            "term": [t for t, _ in lists],
-            "df_shard": pa.array([p.count for _, p in lists], pa.int64())}
+    cols = {"shard": pa.array([s for _, s, _ in rows], pa.int32()),
+            "term": [t for t, _, _ in rows],
+            "df_shard": pa.array([p.count for _, _, p in rows], pa.int64())}
     for f in dataclasses.fields(codec.PackedPostings):
         if f.name.startswith("block_"):
             cols[f.name] = [
-                dirs.get(t, {}).get(f.name, getattr(p, f.name)).tolist()
-                for t, p in lists
+                dirs.get((t, s), {}).get(f.name, getattr(p, f.name)).tolist()
+                for t, s, p in rows
             ]
-    cols["payload"] = pa.array([bytes(p.payload) for _, p in lists], pa.binary())
+    cols["payload"] = pa.array(
+        [bytes(p.payload) for _, _, p in rows], pa.binary()
+    )
     return pa.table(cols)
 
 
-@pytest.mark.parametrize("how", ["next_row_block", "count+1", "bytes+1"])
-def test_corrupted_row_in_segment_never_reads_its_neighbour(how):
+# (term, shard) rows of a segment, the corrupt row and its neighbour in
+# the flat payload buffer: the next term's row in the same shard, or
+# the same term's row in the next shard
+_CORRUPT_LAYOUTS = {
+    "next_term": ([("alpha", 0), ("bravo", 0), ("charlie", 0)],
+                  ("bravo", 0), ("charlie", 0)),
+    "next_shard": ([("alpha", 0), ("bravo", 0), ("bravo", 1), ("bravo", 2),
+                    ("charlie", 1)],
+                   ("bravo", 1), ("bravo", 2)),
+}
+
+
+@pytest.mark.parametrize("how, layout", [
+    pytest.param(how, layout, id=how if layout == "next_term" else f"{how}-{layout}")
+    for layout in sorted(_CORRUPT_LAYOUTS)
+    for how in ["next_row_block", "count+1", "bytes+1"]
+])
+def test_corrupted_row_in_segment_never_reads_its_neighbour(how, layout):
     """In a segment's flat payload buffer every row's bytes sit next to
-    the next row's.  A directory that overstates its row's bytes or
-    counts must raise ValueError when that row is decoded, never decode
-    the neighbour's bytes — here the worst case too: a phantom block
-    whose directory entry is exactly the next row's, which a view not
-    bounded by its own row would decode cleanly into the next row's
-    postings.  The neighbours still decode exactly."""
+    the next row's, and a term's rows in every shard are one run that a
+    term-wide view (``views(whole=True)``) decodes as one list.  A
+    directory that overstates its row's bytes or counts must raise
+    ValueError when a view holding that row is built or decoded, never
+    decode the neighbour's bytes — here the worst case too: a phantom
+    block whose directory entry is exactly the neighbour's first, which
+    a view not bounded by its own row would decode cleanly into the
+    neighbour's postings.  Every other row, alone or in its term's
+    run, still decodes exactly."""
     from lean_explore_spark.query.search import SegmentPostings
 
-    universe = np.arange(0, 5000, 5, dtype=np.int64)
-    lists, want = [], {}
-    for i, t in enumerate(["alpha", "bravo", "charlie"]):
-        ranks = np.arange(i, 900, 7 + i, dtype=np.int64)
+    layout_rows, corrupt, neighbour = _CORRUPT_LAYOUTS[layout]
+    universe = np.arange(0, 6000, 5, dtype=np.int64)  # 3 shards × 400 ids
+    rows, want = [], {}
+    for t, s in layout_rows:
+        i = "abc".index(t[0])
+        ranks = np.arange(i, 400, 7 + i, dtype=np.int64)
+        ids = universe[400 * s + ranks]
         tfs = np.arange(1, len(ranks) + 1, dtype=np.int64) % 5 + 1
-        lists.append((t, codec.pack_postings(
-            universe[ranks], tfs, np.full(len(ranks), 50), avgdl=50.0,
-            block_size=64, ranks=ranks,
+        rows.append((t, s, codec.pack_postings(
+            ids, tfs, np.full(len(ranks), 50), avgdl=50.0,
+            block_size=16, ranks=ranks,
         )))
-        want[t] = (universe[ranks], tfs)
-    bad = {name: getattr(lists[1][1], name).copy() for name in (
+        want[t, s] = (ids, tfs)
+    packed = {(t, s): p for t, s, p in rows}
+    bad = {name: getattr(packed[corrupt], name).copy() for name in (
         "block_first", "block_last", "block_count", "block_gap_bytes",
         "block_tf_bytes", "block_max_score")}
     if how == "next_row_block":
-        nxt = lists[2][1]
+        nxt = packed[neighbour]
         bad = {k: np.concatenate([v, getattr(nxt, k)[:1]]) for k, v in bad.items()}
     elif how == "count+1":
         bad["block_count"][-1] += 1
     else:
         bad["block_tf_bytes"][-1] += 1
-    seg = SegmentPostings(_segment_table(lists, {"bravo": bad}))
-    [rows] = seg.by_shard(["alpha", "bravo", "charlie"]).values()
-    rows = dict(rows)
-    assert set(rows) == {"alpha", "bravo", "charlie"}
-    last = len(rows["bravo"].block_first) - 1
-    with pytest.raises(ValueError):
-        codec.unpack_all(rows["bravo"], universe)
-    with pytest.raises(ValueError):
-        codec.unpack_selected(rows["bravo"], [last], universe)
-    for t in ("alpha", "charlie"):
-        d, tf = codec.unpack_all(rows[t], universe)
-        assert np.array_equal(d, want[t][0]) and np.array_equal(tf, want[t][1])
+    seg = SegmentPostings(_segment_table(rows, {corrupt: bad}))
+    t, s = corrupt
+    # the corrupt row's last block, in its own row and in its term's run
+    last = len(bad["block_first"]) - 1
+    before = sum(
+        len(p.block_first) for (u, r), p in packed.items() if u == t and r < s
+    )
+    for kw, at in (({"shard": s}, last), ({"whole": True}, before + last)):
+        if how != "count+1":  # its bytes disagree: refused as a view
+            with pytest.raises(ValueError, match="payload length"):
+                seg.views([t], **kw)
+        with pytest.raises(ValueError):
+            [[(_, view)]] = seg.views([t], **kw).values()
+            codec.unpack_all(view, universe)
+        with pytest.raises(ValueError):
+            [[(_, view)]] = seg.views([t], **kw).values()
+            codec.unpack_selected(view, [at], universe)
+    for t, s in want:
+        if (t, s) == corrupt:
+            continue
+        [[(_, view)]] = seg.views([t], shard=s).values()
+        d, tf = codec.unpack_all(view, universe)
+        assert np.array_equal(d, want[t, s][0])
+        assert np.array_equal(tf, want[t, s][1])
+        if t != corrupt[0]:  # a term run without the corrupt row
+            [[(_, view)]] = seg.views([t], whole=True).values()
+            d, tf = codec.unpack_all(view, universe)
+            mine = [want[key] for key in sorted(want) if key[0] == t]
+            assert np.array_equal(d, np.concatenate([w[0] for w in mine]))
+            assert np.array_equal(tf, np.concatenate([w[1] for w in mine]))
     # a row whose directory columns disagree on its block count is
     # refused when the segment is built
     short = dict(bad, block_max_score=bad["block_max_score"][:-1])
     with pytest.raises(ValueError):
-        SegmentPostings(_segment_table(lists, {"bravo": short}))
+        SegmentPostings(_segment_table(rows, {corrupt: short}))
 
 
 def test_cursor_construction_decodes_nothing(monkeypatch):

@@ -497,3 +497,142 @@ def test_preload_holds_no_python_object_per_row(spark, index_dir):
         tracemalloc.stop()
     assert eng._resident is not None
     assert traced / rows < 400, (traced, rows)
+
+
+def _kernel_calls(monkeypatch):
+    """Count the kernel and decode calls a query makes, by name."""
+    from lean_explore_spark.index import codec
+    from lean_explore_spark.query import wand
+
+    calls = {}
+    for mod, name in [(wand, "bulk_score_shard"), (wand, "blockmax_bulk_shard"),
+                      (wand, "wand_shard"), (codec, "unpack_all"),
+                      (codec, "unpack_selected")]:
+        def counted(*args, _f=getattr(mod, name), _n=name, **kwargs):
+            calls[_n] = calls.get(_n, 0) + 1
+            return _f(*args, **kwargs)
+
+        monkeypatch.setattr(mod, name, counted)
+    return calls
+
+
+@pytest.fixture(scope="module")
+def zebra_index(spark, tmp_path_factory):
+    """The oracle corpus with "zebra" added to docs 0-59 only, so that
+    term is absent from three of the four doc-range shards; its index
+    root and oracle stats."""
+    import pyspark.sql.functions as F
+
+    out = tmp_path_factory.mktemp("idx") / "zebra"
+    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet").withColumn(
+        "text",
+        F.when(F.col("doc_id") < 60, F.concat("text", F.lit(" zebra")))
+        .otherwise(F.col("text")),
+    )
+    IndexBuilder(
+        spark, str(out), stem=True, num_shards=4, num_buckets=4, block_size=32
+    ).build(docs, resume=False)
+    rows = sorted(docs.select("doc_id", "text").collect())
+    return str(out), oracle.build_stats(
+        [r[0] for r in rows], (tokenize_stem(r[1]) for r in rows)
+    )
+
+
+def test_light_query_scores_a_preloaded_segment_in_one_kernel_call(
+    spark, zebra_index, monkeypatch
+):
+    """A preloaded engine scores a segment whose every shard takes the
+    exhaustive kernel as ONE unit: one ``bulk_score_shard`` call per
+    segment and one ``unpack_all`` per (term, segment), not one per
+    (term, shard).  With ``BULK_THRESHOLD`` 0 no shard is light, so the
+    same query takes per-shard block-max units again.  The queries hold
+    a term absent from most shards, a repeated token, and that term
+    alone at a k it cannot fill (the delta-floor fill); every answer
+    equals the oracle and the cold engine."""
+    import json
+
+    index_dir, ostats = zebra_index
+    pre = SearchEngine(spark, index_dir, preload=True)
+    cold = SearchEngine(spark, index_dir, preload=False)
+    span = json.loads(Path(index_dir, "stats.json").read_text())["span"]
+
+    def shards(terms):
+        return {d // span for t in terms for d in ostats.postings[t]}
+
+    assert shards(["zebra"]) == {0} and len(pre._shards()) == 4
+    queries = [(tokenize_stem("zebra customer orders data data"), 25),
+               (["zebra"], 80)]
+    for toks, k in queries:
+        want = [(d, s) for d, s in oracle.top_k(ostats, toks, k)]
+        terms = set(toks)
+        assert cold.search_tokens(toks, k) == want
+
+        calls = _kernel_calls(monkeypatch)
+        assert pre.search_tokens(toks, k) == want
+        assert calls == {"bulk_score_shard": 1, "unpack_all": len(terms)}
+        monkeypatch.undo()
+
+        monkeypatch.setattr(SearchEngine, "BULK_THRESHOLD", 0)
+        calls = _kernel_calls(monkeypatch)
+        assert pre.search_tokens(toks, k) == want
+        assert calls.get("bulk_score_shard", 0) == 0
+        assert calls["blockmax_bulk_shard"] == len(shards(terms))
+        monkeypatch.undo()
+
+
+def test_preloaded_doc_lengths_are_views_of_the_segment(engine):
+    """Preload holds each segment's doc lengths once, concatenated in
+    shard order; every per-shard entry is a view into them, and the
+    concatenation is the ascending doc-id universe a whole-segment
+    unit decodes against."""
+    [(ids, lens)] = engine._seg_dl
+    assert len(engine._dl_cache) == len(engine._shards()) > 1
+    for (seg, shard), (s_ids, s_lens) in engine._dl_cache.items():
+        assert seg == 0
+        assert np.shares_memory(s_ids, ids) and np.shares_memory(s_lens, lens)
+    assert np.array_equal(
+        np.concatenate([engine._dl_cache[u][0] for u in engine._shards()]), ids
+    )
+    assert (np.diff(ids) > 0).all()
+
+
+@pytest.mark.parametrize("prefilled", [False, True])
+def test_bulk_push_keeps_every_tie_at_the_kth_score(prefilled):
+    """More than k docs tie at the k-th score (same tf, same doc
+    length): one ``bulk_score_shard`` call, into an empty heap or into
+    one an earlier unit filled, must leave exactly the full sort by
+    (score desc, doc asc) cut at k."""
+    from lean_explore_spark.index import codec
+    from lean_explore_spark.query import wand
+
+    k = 10
+    ctx = wand.QueryContext(
+        token_uterm=[0], idfs=np.array([1.3]), k1=codec.K1, b=codec.B,
+        delta=1.0, avgdl=50.0,
+    )
+    # (first doc id, tfs): 3 docs above the tie, 30 tied, 40 below; the
+    # earlier unit has 2 above and 4 tied, so it fills the heap first
+    units = [(1000, [5] * 3 + [2] * 30 + [1] * 40)]
+    if prefilled:
+        units.insert(0, (0, [5] * 2 + [2] * 4 + [1] * 20))
+    heap, every = [], []
+    for start, tfs in units:
+        rng = np.random.default_rng(start)
+        dl_ids = np.arange(start, start + 400, 2, dtype=np.int64)
+        dl_lens = np.full(len(dl_ids), 50, dtype=np.int64)
+        ranks = np.sort(rng.choice(len(dl_ids), len(tfs), replace=False))
+        tf = rng.permutation(np.array(tfs, dtype=np.int64))
+        packed = codec.pack_postings(
+            dl_ids[ranks], tf, dl_lens[ranks], avgdl=50.0, block_size=16,
+            ranks=ranks,
+        )
+        cursor = wand.TermCursor(packed, 0, dl_ids)
+        wand.bulk_score_shard([cursor], ctx, dl_ids, dl_lens, heap, k)
+        every += [
+            (ctx.score_doc([wand.x_value(t, 50, 50.0, ctx.k1, ctx.b)]), d)
+            for d, t in zip(dl_ids[ranks].tolist(), tf.tolist())
+        ]
+    want = sorted(every, key=lambda e: (-e[0], e[1]))[:k]
+    assert sum(s == want[-1][0] for s, _ in every) > k  # a tie at the cut
+    got = sorted(heap, key=lambda e: (-e[0], e[2]))
+    assert [(s, d) for s, _, d in got] == want

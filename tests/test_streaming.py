@@ -7,6 +7,7 @@ from __future__ import annotations
 import time
 from pathlib import Path
 
+import numpy as np
 import pytest
 
 from lean_explore_spark.functions.tokenizer import tokenize_stem
@@ -71,6 +72,62 @@ def test_segmented_search_rank_identical_to_monolithic(spark, streamed, tmp_path
         assert seg.search_tokens_parallel(toks, 15, threads=2) == want, q
         assert seg.score_candidates(toks, [d for d, _ in want]) == dict(want), q
     seg.close_pool()
+
+
+def test_segmented_whole_segment_units_rank_identical(
+    spark, streamed, tmp_path, monkeypatch
+):
+    """A base plus two delta segments, preloaded: the inline executor
+    scores each segment whose every shard is light as one unit (one
+    ``bulk_score_shard`` call per segment), over doc lengths that are
+    views of the segment's concatenated arrays.  In modes auto, bulk
+    and blockmax, for a term absent from some shards, a repeated token
+    and a sub-k query that needs the delta-floor fill, every answer
+    equals the oracle and the cold engine."""
+    from lean_explore_spark.query import wand
+
+    _, _, docs = streamed
+    rows = sorted(docs.collect(), key=lambda r: r["doc_id"])
+    root = tmp_path / "idx"
+    parts = [("base", rows[:250], 2), ("seg=1", rows[250:350], 2),
+             ("seg=2", rows[350:], 1)]
+    for name, part, shards in parts:
+        out = root / name if name == "base" else root / "segments" / name
+        IndexBuilder(spark, str(out), num_shards=shards, num_buckets=4).build(
+            spark.createDataFrame(part), resume=False
+        )
+        if name != "base":
+            I.register_segment(root, name)
+    stats = oracle.build_stats(
+        [r["doc_id"] for r in rows], (tokenize_stem(r["text"]) for r in rows)
+    )
+    pre = I.SegmentedSearch(spark, str(root))
+    cold = I.SegmentedSearch(spark, str(root), preload=False)
+    assert len(pre.roots) == 3
+    for seg, (ids, lens) in enumerate(pre._seg_dl):
+        for (g, _), (s_ids, s_lens) in pre._dl_cache.items():
+            if g == seg:
+                assert np.shares_memory(s_ids, ids)
+                assert np.shares_memory(s_lens, lens)
+    # a term in few docs, absent from some (segment, shard) units
+    rare = min((len(m), t) for t, m in stats.postings.items() if len(m) > 1)[1]
+    assert len(pre._fetch_postings([rare])) < len(pre._shards())
+    queries = [(tokenize_stem("the data page page") + [rare], 15),
+               ([rare], 40), (tokenize_stem(QUERIES[1]), 15)]
+    calls = []
+    bulk = wand.bulk_score_shard
+    monkeypatch.setattr(
+        wand, "bulk_score_shard", lambda *a: calls.append(1) or bulk(*a)
+    )
+    for toks, k in queries:
+        want = [(d, s) for d, s in oracle.top_k(stats, toks, k)]
+        for mode in ("auto", "bulk", "blockmax"):
+            assert pre.search_tokens(toks, k, mode=mode) == want, (toks, mode)
+            assert cold.search_tokens(toks, k, mode=mode) == want, (toks, mode)
+        calls.clear()
+        pre.search_tokens(toks, k, mode="bulk")
+        touched = {g for g, _ in pre._fetch_postings(set(toks))}
+        assert len(calls) == len(touched) > 0, toks
 
 
 def test_segment_block_maxima_bound_scores_at_global_avgdl(spark, tmp_path):
