@@ -24,12 +24,14 @@ Modes:
   every query (threshold ablation).  Both bit-identical to preloaded.
 * ``hybrid_driver`` / ``hybrid_spark`` / ``hybrid_ann`` (opt-in) —
   the FULL hybrid pipeline (embed → cosine candidates → threshold →
-  candidate BM25 → combine), embedding matrix preloaded / per-query
-  Spark scan / LSH-probe-pruned scan (r5 VERDICT #6; reference
-  anchor benchmark_search_rate.py:301-358 measures hybrid, not BM25).
-* ``hybrid_spark_batch`` / ``hybrid_ann_batch`` (opt-in) — the r6
-  batched hybrid sweep (~2 Spark jobs for the whole query set);
-  wall+QPS only.
+  candidate BM25 → combine), embedding matrix preloaded / one-query
+  Spark scan (one candidate job chain per query; no lang lookup, as
+  no lang filter is given) / LSH-probe-pruned scan (r5 VERDICT #6;
+  reference anchor benchmark_search_rate.py:301-358 measures hybrid,
+  not BM25).  All three return the same floats.
+* ``hybrid_spark_batch`` / ``hybrid_ann_batch`` (opt-in) —
+  ``batch_search`` over the whole query set, its candidates planned
+  together (~2 Spark jobs for the whole set); wall+QPS only.
 
 Per-query latency is min-of-``--repeats`` (the robust estimator on a
 ±2-3× CPU-steal VM — BENCH.md §0); the reported wall is the best
@@ -341,10 +343,10 @@ def main() -> None:
             # r5 VERDICT #6: the reference's rate benchmark measures
             # its FULL hybrid path (benchmark_search_rate.py:301-358),
             # not BM25 alone.  Modes: hybrid_driver (preloaded
-            # embedding matrix), hybrid_spark (per-query table scan,
-            # ~2 jobs/query), hybrid_ann (spark + 8 LSH probe tables),
-            # hybrid_spark_batch / hybrid_ann_batch (the r6 batched
-            # sweep — whole query set in ~2 jobs; wall+QPS only).
+            # embedding matrix), hybrid_spark (one-query table scan per
+            # search), hybrid_ann (spark + 8 LSH probe tables),
+            # hybrid_spark_batch / hybrid_ann_batch (batch_search over
+            # the whole query set in ~2 jobs; wall+QPS only).
             from lean_explore_spark.query.service import SearchService
 
             emb_path = work / f"emb_{args.pages}"
@@ -368,11 +370,11 @@ def main() -> None:
                 preload=True,
             )
             if mode.endswith("_batch"):
-                svc.batch_search(queries[:5], distributed=True)  # warm
+                svc.batch_search(queries[:5])  # warm
                 best = float("inf")
                 for _ in range(max(1, args.repeats)):
                     t0 = time.time()
-                    svc.batch_search(queries, distributed=True)
+                    svc.batch_search(queries)
                     best = min(best, time.time() - t0)
                 out["modes"][mode] = {
                     "wall_sec": round(best, 3),
