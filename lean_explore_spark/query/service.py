@@ -110,6 +110,23 @@ def similarity(unit: np.ndarray, qunit: np.ndarray) -> np.ndarray:
     return np.einsum("ij,j->i", unit, qunit)
 
 
+def top_k(ids: np.ndarray, sims: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the ``k`` best rows in the candidate order (sim
+    desc, id asc): exactly ``np.lexsort((ids, -sims))[:k]``, without
+    sorting every row.  A partition finds the k-th best similarity and
+    only the rows at or above it, ties included, are sorted: over a
+    20000×64 driver matrix the full sort took ~4 ms a query against
+    ~0.6 ms for the similarity (4-core VM).  A NaN similarity compares
+    false, so it stays in the pool and sorts last, as in the full
+    sort.  The chunk scorer makes the same cut per chunk."""
+    neg = -sims
+    pool = np.arange(len(neg))
+    if len(neg) > k:
+        kth = np.partition(neg, k - 1)[k - 1]
+        pool = np.flatnonzero(~(neg > kth))
+    return pool[np.lexsort((ids[pool], neg[pool]))[:k]]
+
+
 def _chunk_scorer(qunits: np.ndarray, k: int, probed: bool):
     """``mapInPandas`` body for both Spark shapes: score a chunk's
     (row, query) pairs and keep the chunk's top ``k`` per query, in
@@ -130,22 +147,25 @@ def _chunk_scorer(qunits: np.ndarray, k: int, probed: bool):
             )
             vec_ids = pdf["vec_id"].to_numpy()
             qids = pdf["qid"].to_numpy() if probed else None
-            frames = []
+            # one frame per chunk, not per query: a pandas frame per
+            # (chunk, query) cost ~0.7 s of a 2.5 s 299-query ANN batch
+            # (4-core VM)
+            kept_qids, kept_ids, kept_sims = [], [], []
             for qi in np.unique(qids) if probed else range(len(qunits)):
                 rows = qids == qi if probed else slice(None)
                 ids = vec_ids[rows]
                 sims = similarity(unit[rows], qunits[qi])
-                keep = np.lexsort((ids, -sims))[:k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "qid": np.full(len(keep), qi, dtype=np.int32),
-                            "vec_id": ids[keep],
-                            "sim": sims[keep],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+                keep = top_k(ids, sims, k)
+                kept_qids.append(np.full(len(keep), qi, dtype=np.int32))
+                kept_ids.append(ids[keep])
+                kept_sims.append(sims[keep])
+            yield pd.DataFrame(
+                {
+                    "qid": np.concatenate(kept_qids),
+                    "vec_id": np.concatenate(kept_ids),
+                    "sim": np.concatenate(kept_sims),
+                }
+            )
 
     return score
 
@@ -243,7 +263,7 @@ class SearchService:
         self, qvec: np.ndarray, k: int
     ) -> List[tuple]:
         sims = similarity(self._emb_norm, unit_query(qvec))
-        order = np.lexsort((self._emb_ids, -sims))[:k]
+        order = top_k(self._emb_ids, sims, k)
         return [(int(self._emb_ids[i]), float(sims[i])) for i in order]
 
     def _candidates_spark(

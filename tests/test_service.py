@@ -15,6 +15,7 @@ from lean_explore_spark.query import hybrid
 from lean_explore_spark.query.service import (
     SearchService,
     similarity,
+    top_k,
     unit_query,
     unit_rows,
 )
@@ -361,6 +362,22 @@ def test_similarity_is_row_local(dim):
     shifted = buf[1:].reshape(mat.shape)  # 8-byte offset: misaligned rows
     shifted[:] = mat
     assert np.array_equal(similarity(unit_rows(shifted), q), full)
+
+
+def test_top_k_equals_full_sort():
+    """The partition cut keeps exactly the rows, in exactly the order,
+    of a full (sim desc, id asc) sort: ties at the k-th similarity
+    broken by id, NaN last, k at or above the row count."""
+    rng = np.random.default_rng(7)
+    for _ in range(300):
+        n = int(rng.integers(1, 400))
+        sims = rng.integers(-5, 6, size=n) / 4.0  # many ties
+        sims[rng.random(n) < 0.05] = np.nan
+        ids = rng.permutation(10 * n)[:n].astype(np.int64)
+        k = int(rng.integers(0, n + 20))
+        assert np.array_equal(
+            top_k(ids, sims, k), np.lexsort((ids, -sims))[:k]
+        )
 
 
 def test_unfiltered_search_runs_no_lang_lookup(service, spark):
